@@ -61,32 +61,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r19 (guide §9 / r18 verdict item 7): let the planner pick shuffled
-      // hash join when its size conditions are met instead of always
-      // preferring sort-merge — adopted after a controlled full-catalog
-      // A/B (calib-normalized geomean 1.11 in favor, no reproducible
-      // per-query regression; the 13 apparent ones collapsed to parity on
-      // a back-to-back targeted rerun — see OPTIMIZATION_r19.md §7).
-      // Scale note: SHJ is chosen only when a build side fits per-task
-      // memory (canBuildLocalHashMapBySize), so this does not license
-      // unbounded builds at 100 TB; SMJ remains the fallback. Env var
-      // restores the old default for A/Bs without recompiling.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // the engine's own sessions run linted (warn-only): every planned
-      // query passes through ScaleLint, error findings land in the log
-      // and the count is surfaced as `lint_errors` in the JSON below
-      .config("spark.sql.queryExecutionListeners", "graft.plans.GraftLintListener")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = driverSession()
     // optional arg: comma-separated substring filters for targeted timing
     // (dev tool; the driver invokes with no args = full catalog)
     val qs = args.headOption match {
@@ -174,5 +149,33 @@ object Bench {
     spark.stop()
     println(compact)
     System.out.flush()
+  }
+
+  /** The session Bench and [[Verify]] run in: ONE configuration for the
+    * oracle dump and this timer, so the plans that are timed are the plans
+    * that were checked. Shuffled hash join is allowed wherever its size conditions
+    * hold (`preferSortMergeJoin=false`, adopted in r19 after a controlled
+    * full-catalog A/B; see OPTIMIZATION_r19.md §7). SHJ is chosen only when
+    * a build side fits per-task memory (canBuildLocalHashMapBySize), so
+    * this does not license unbounded builds at 100 TB; SMJ remains the
+    * fallback. Every planned query passes through the warn-only scale lint
+    * ([[graft.plans.GraftLintListener]]); error findings land in the log
+    * and their count is surfaced as `lint_errors`. */
+  private[graft] def driverSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      // µs-typed parquet timestamps (not INT96) so the oracle's arrow schema
+      // (timestamp[us]) matches ours bit-for-bit
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.queryExecutionListeners", "graft.plans.GraftLintListener")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

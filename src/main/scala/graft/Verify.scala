@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,7 @@ object Verify {
       case Array(s, o, f) => (s, o, Some(f.split(",").map(_.trim).toSet))
       case _ => sys.error("usage: Verify <sfDir> <outDir> [q1,q2,...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // µs-typed parquet timestamps (not INT96) so the oracle's arrow schema
-      // (timestamp[us]) matches ours bit-for-bit:
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // warn-only scale lint on every planned query (see graft.Bench)
-      .config("spark.sql.queryExecutionListeners", "graft.plans.GraftLintListener")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.driverSession() // the plans Bench times
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

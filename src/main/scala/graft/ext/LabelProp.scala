@@ -33,7 +33,7 @@ object LabelProp {
     require(iters >= 1)
     // pinned hash-partitioned + sorted on src (r18, the PageRank fix; r19:
     // auto-sized width from TRUE materialized bytes — see
-    // ScaleLint.barrierByKey): each round's label join then reads an
+    // ScaleLint.barrierByKeySized): each round's label join then reads an
     // already co-partitioned, already sorted edge side instead of
     // re-shuffling and re-sorting the edge table once per round — rounds
     // shuffle only the label table.

@@ -55,8 +55,8 @@ object PageRank {
     // (r19). The r18 shape evaluated `edges` twice (degree aggregate +
     // pinned join) and pinned at the session shuffle width, which at bench
     // scale made every iteration stage `numShufflePartitions` tasks of
-    // mostly fixed overhead. Now: the edges materialize once inside the
-    // auto-sized barrierByKey (width from TRUE block bytes — scale-adaptive,
+    // mostly fixed overhead. Now: the edges materialize once inside
+    // barrierByKeySized (width from TRUE block bytes — scale-adaptive,
     // clamps to the session width for data-sized graphs), and out-degree is
     // attached by a count window partitioned on src INSIDE the pin job —
     // the window's required distribution and ordering are exactly the

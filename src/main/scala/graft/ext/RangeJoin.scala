@@ -103,7 +103,8 @@ object RangeJoin {
     * sweep is O(|points| + |replicas| + matches) per bin where the
     * composed single-join form pays the per-bin CROSS PRODUCT of left
     * replicas × right replicas (BOTH sides replicated ~span/width×) —
-    * the dense-bin degradation measured in ScalingProbe `rangeoverlap`.
+    * the dense-bin degradation measured in SCALING.md ("Native vs
+    * composed interval OVERLAP").
     * Calls that don't qualify for the native exec (non-integral units or
     * shared attribute lineage) fall back to [[intervalOverlapComposed]],
     * the permanent oracle cross-check form. */

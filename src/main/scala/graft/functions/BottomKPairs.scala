@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * sample keyed by a portable hash).
   *
   * Why an aggregate and not a window — the HONEST version (measured, see
-  * ScalingProbe `bottomk`): Spark 4's own `InferWindowGroupLimit` already
+  * SCALING.md "Native bottom-k aggregate vs window top-k"): Spark 4's own `InferWindowGroupLimit` already
   * rescues the window form's BYTES — a `row_number() <= k` filter plants a
   * partial WindowGroupLimit below the exchange, so only ≤k rows per
   * (task, group) ship either way (probe: identical ~5 KB shuffle writes at

@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.expressions.aggregate.Percentile
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The repo's 100 TB scale discipline as a MECHANICAL plan linter — the
@@ -40,10 +39,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * ScaleLintSpec proves each rule fires on a minimal offending plan, stays
   * quiet on the approved shapes, and — the point — that EVERY catalog query
   * passes with zero errors (the per-query PlanSpec pins generalized to the
-  * whole surface). [[GraftLintExtension]] injects the warn-only rule via
-  * `SparkSessionExtensions.injectOptimizerRule`, so any session built with
-  * `spark.sql.extensions=graft.plans.GraftLintExtension` gets the lint on
-  * every query it runs.
+  * whole surface). [[GraftLintListener]] runs the lint warn-only on the
+  * final plan of every query a session executes.
   */
 object ScaleLint {
 
@@ -113,74 +110,53 @@ object ScaleLint {
     guarded
   }
 
-  /** [[barrier]] with a PINNED physical layout (r18): hash-repartition on
-    * `key` with an EXPLICIT partition count, sort within partitions, then
+  /** [[barrier]] with a PINNED physical layout, auto-sized: hash-
+    * repartition on `key`, sort within partitions, run `shape`, then
     * eagerly checkpoint and rebuild the LogicalRDD with the layout
-    * declared. Exists because `Dataset.localCheckpoint` under AQE records
+    * declared. Returns the pinned table and its width; iterative callers
+    * (PageRank, LabelProp) repartition their per-round state table to that
+    * width, because a state-table exchange planned at a different width
+    * makes EnsureRequirements re-shuffle the PINNED (data-sized) side of
+    * every round's join, which silently undoes the pin.
+    *
+    * Why pin at all: `Dataset.localCheckpoint` under AQE records
     * `UnknownPartitioning` (the adaptive plan's final partitioning is not
-    * visible when the Dataset captures it — measured in q130's executed
-    * plan: every iteration re-shuffled AND re-sorted the checkpointed edge
-    * table), so iterative operators lost the one property that makes
-    * their materialization reusable. The declared layout is TRUE by
-    * construction: `repartition(n, key)` with an explicit n is never
+    * visible when the Dataset captures it), so every iteration re-shuffled
+    * AND re-sorted a checkpointed edge table. The declared layout is TRUE
+    * by construction: `repartition(n, key)` with an explicit n is never
     * AQE-coalesced, so partition p holds exactly the rows with
     * `pmod(hash(key), n) = p` — Spark's own HashPartitioning contract —
-    * and the within-partition sort is preserved verbatim by the
-    * checkpoint's row copy. Iteration joins keyed on `key` then reuse the
-    * blocks with no exchange and no sort; only the (small) per-round state
-    * table shuffles. */
-  def barrierByKey(df: DataFrame, key: String): DataFrame =
-    barrierByKey(df, key, identity[DataFrame] _)
-
-  /** AUTO-SIZED [[barrierByKey]] (r19): the r18 form pinned every table at
-    * the session shuffle width, which at bench scale turned each
-    * downstream iteration stage into `numShufflePartitions` tasks of
-    * mostly fixed overhead (q138: 32-task iteration stages of ~7 CPU-s
-    * for a 13 MB table whose r17 AQE-coalesced stages ran 2 tasks — the
-    * driver-measured 2-3× graph-tier regression). AQE cannot size the pin
-    * for us (coalescing merges adjacent hash buckets, which would make
-    * the declared HashPartitioning false), so this does what AQE does but
-    * honestly: materialize the input ONCE as a plain eager barrier (no
-    * shuffle), read the TRUE block bytes from the block manager, and pin
-    * at ceil(bytes / advisoryPartitionSizeInBytes) clamped to
-    * [1, numShufflePartitions] — scale-adaptive by construction (a 100 TB
-    * edge table clamps to the full session width; a bench-scale one pins
-    * to a couple of partitions). The pre-barrier doubles as the single
-    * materialization of the caller's derivation (the r18 PageRank shape
-    * evaluated its edge derivation twice), and its blocks are dropped as
-    * soon as the pinned copy is materialized.
+    * and the within-partition sort survives the checkpoint's row copy.
     *
-    * `shape` runs between the pin's repartition+sort and the checkpoint;
-    * it MUST preserve per-partition row placement and order (e.g. a
+    * Width: AQE cannot size the pin (coalescing merges adjacent hash
+    * buckets, which would make the declared HashPartitioning false), so
+    * the input is first materialized ONCE as a plain eager barrier (no
+    * shuffle), its TRUE block bytes are read from the block manager, and
+    * the pin gets ceil(bytes / advisoryPartitionSizeInBytes) clamped to
+    * [1, numShufflePartitions]: a data-sized table clamps to the session
+    * width, a small one pins to a couple of partitions. The pre-barrier
+    * is taken for EVERY input, also one that is already a LogicalRDD: a
+    * lazy `localCheckpoint` has no blocks yet, and measuring it would
+    * read 0 bytes and pin the whole table to one partition. It doubles as
+    * the single materialization of the caller's derivation, and its
+    * blocks are dropped once the pinned copy is materialized.
+    *
+    * `shape` MUST preserve per-partition row placement and order (e.g. a
     * window partitioned by `key`, a projection) — the declared layout is
     * asserted on its output. */
-  def barrierByKey(df: DataFrame, key: String,
-      shape: DataFrame => DataFrame): DataFrame =
-    barrierByKeySized(df, key, shape)._1
-
-  /** Auto-sized pin that also RETURNS the chosen width: iterative callers
-    * need it to co-partition their per-round state table with the pin —
-    * a state-table exchange planned at the session width against a pin of
-    * a different width makes EnsureRequirements re-shuffle the PINNED
-    * (data-sized) side of every round's join, which silently undoes the
-    * pin (measured in q130's r19 first-cut plan: iterations 2..5 each
-    * re-exchanged + re-sorted the edge table). */
   def barrierByKeySized(df: DataFrame, key: String,
       shape: DataFrame => DataFrame): (DataFrame, Int) = {
-    val pre = df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => df
-      case _ => barrier(df, eager = true)
-    }
+    val pre = barrier(df, eager = true)
     val n = materializedWidth(pre)
     val out = barrierByKey(pre, key, n, shape)
-    if (pre ne df) dropBarrier(pre)
+    dropBarrier(pre)
     (out, n)
   }
 
   /** Pin width from TRUE materialized bytes: the block-manager size of an
     * eagerly materialized barrier divided by the session's advisory
     * partition size, clamped to [1, numShufflePartitions]. */
-  def materializedWidth(df: DataFrame): Int = {
+  private def materializedWidth(df: DataFrame): Int = {
     val sc = df.sparkSession.sparkContext
     val conf = df.sparkSession.sessionState.conf
     val bytes = df.queryExecution.analyzed.collect {
@@ -194,11 +170,10 @@ object ScaleLint {
       math.ceil(bytes.toDouble / advisory).toInt))
   }
 
-  /** Release a barrier's blocks once a derived pin has been materialized
-    * (the pre-barrier in auto-sized [[barrierByKey]] is garbage the moment
-    * the pinned copy exists — at scale it would double the edge-table
-    * residency for the whole query). */
-  def dropBarrier(df: DataFrame): Unit =
+  /** Release the pre-barrier's blocks. Unpersisting a local checkpoint is
+    * unrecoverable (its blocks are the only copy; lineage is cut), so this
+    * is only called once the pin derived from it is itself materialized. */
+  private def dropBarrier(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
@@ -206,12 +181,8 @@ object ScaleLint {
       case _ => ()
     }
 
-  def barrierByKey(df: DataFrame, key: String, n: Int): DataFrame =
-    barrierByKey(df, key, n, identity[DataFrame] _)
-
-  /** [[barrierByKey]] with an explicit partition count — callers that know
-    * the table's size class pick `n` instead of the measured width. */
-  def barrierByKey(df: DataFrame, key: String, n: Int,
+  /** The pin at an explicit width `n` (see [[barrierByKeySized]]). */
+  private def barrierByKey(df: DataFrame, key: String, n: Int,
       shape: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -252,8 +223,6 @@ object ScaleLint {
   implicit class BarrierSyntax(private val df: DataFrame) extends AnyVal {
     def barrier(eager: Boolean = false): DataFrame =
       ScaleLint.barrier(df, eager)
-    def barrierByKey(key: String): DataFrame =
-      ScaleLint.barrierByKey(df, key)
   }
 
   /** Support-bounded: some node below caps the row count independently of
@@ -356,12 +325,12 @@ object ScaleLint {
       constantTables: Set[String] = DefaultConstantTables): Seq[Finding] =
     lint(df.queryExecution.optimizedPlan, constantTables)
 
-  /** Error findings logged by [[LintRule]] since JVM start: the injected
-    * rule is warn-only (it can never fail a query), so the engine's own
+  /** Error findings logged by [[GraftLintListener]] since JVM start: the
+    * listener is warn-only (it can never fail a query), so the engine's own
     * session mains surface this count in their artifacts — `lint_errors`
-    * in the bench JSON, a `[verify]` stderr line. The optimizer can run a
-    * plan more than once (AQE re-optimization), so the value is a
-    * tripwire (0 = clean session), not a precise finding tally. */
+    * in the bench JSON, a `[verify]` stderr line. A query executed more
+    * than once is counted each time, so the value is a tripwire
+    * (0 = clean session), not a precise finding tally. */
   val errorCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** PHYSICAL-plan lint (r17, generalized r18) — the logical rules above
@@ -384,7 +353,8 @@ object ScaleLint {
     *     a non-fixed-width aggregation buffer (the exact planner test:
     *     `UnsafeRow.isMutable` over the buffer schema), reporting the
     *     offending aggregate and buffer type. The r17 find was made by
-    *     hand via `ScalingProbe stages`; this catches the next member of
+    *     a hand-run stage diagnosis (SCALING.md, "The q179 straggler was
+    *     a hidden SortAggregate"); this catches the next member of
     *     the class mechanically. A SortAggregate whose buffers are all
     *     mutable is NOT flagged — the planner chose it for ordering
     *     reasons, not as a fallback.
@@ -515,35 +485,6 @@ object ScaleLint {
       case _ => Seq.empty
     }
   }
-
-  /** Warn-only optimizer rule: logs findings, counts errors, never
-    * rewrites. */
-  class LintRule extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan = {
-      lint(plan).foreach { f =>
-        if (f.severity == Error) errorCount.incrementAndGet()
-        logWarning(s"[scale-lint] ${f.severity}/${f.rule}: ${f.detail}")
-      }
-      plan
-    }
-  }
-}
-
-/** `spark.sql.extensions=graft.plans.GraftLintExtension` (or
-  * `.withExtensions(new GraftLintExtension)`): every query planned in the
-  * session is linted, findings land in the driver log.
-  *
-  * CAVEAT — the injected rule runs in the user-rule optimizer batch,
-  * BEFORE rewrites like LimitPushDownThroughWindow / InferWindowGroupLimit
-  * that BOUND shapes the rules care about (q197's `rn <= k` filter over a
-  * rank window gets a GlobalLimit pushed under the global window only in
-  * a later batch), so it can warn on plans whose FINAL form is clean. For
-  * a zero-false-positive tripwire use [[GraftLintListener]], which lints
-  * the optimized plan that actually executed. */
-class GraftLintExtension
-    extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectOptimizerRule(_ => new ScaleLint.LintRule)
 }
 
 /** Post-execution lint of the FINAL optimized plan — the plan that

@@ -483,7 +483,8 @@ object ProfileQueries {
     * instead of the keyed window. Same result, and — honestly — similar
     * shuffle BYTES: Spark 4's InferWindowGroupLimit already plants a
     * partial group-limit below q180's exchange, so both forms ship
-    * O(groups·k) (measured identical in ScalingProbe `bottomk`). The
+    * O(groups·k) (measured identical, SCALING.md "Native bottom-k
+    * aggregate vs window top-k"). The
     * aggregate's real wins: it removes BOTH of the window form's full
     * local sorts (O(n log n) → O(n log k) heap updates; ~2.5× wall at
     * every probe replication), and it composes — the sketch can ride the

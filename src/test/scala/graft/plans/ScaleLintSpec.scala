@@ -200,22 +200,11 @@ class ScaleLintSpec extends SparkSuite {
     info(s"advice findings (documented oracle-contract uses): ${advice.distinct.mkString("; ")}")
   }
 
-  test("the warn-only rule is identity on plans; the extension wiring builds") {
-    val events = Tables.load(spark, dir, "events")
-    val bad = events.withColumn("rn",
-      row_number().over(Window.orderBy($"ts", $"event_id")))
-    val plan = bad.queryExecution.optimizedPlan
-    val rule = new ScaleLint.LintRule
-    assert(rule(plan) eq plan, "lint must never rewrite")
-    // injection wiring: registering on a fresh extensions object must work
-    new GraftLintExtension().apply(new org.apache.spark.sql.SparkSessionExtensions)
-  }
-
   test("the lint listener counts error findings on EXECUTED final plans (the lint_errors tripwire)") {
     // Bench/Verify register GraftLintListener via
     // spark.sql.queryExecutionListeners and surface ScaleLint.errorCount
-    // in their artifacts. The listener lints the FINAL optimized plan —
-    // the injected optimizer rule sees the plan mid-rewrite and can
+    // in their artifacts. The listener lints the FINAL optimized plan — a
+    // lint run as an optimizer rule would see the plan mid-rewrite and
     // false-positive on shapes a later batch bounds (q197's rn<=k filter
     // gets its GlobalLimit pushed under the global window only after the
     // user-rule batch ran), so the tripwire lives here.
@@ -240,7 +229,7 @@ class ScaleLintSpec extends SparkSuite {
       drain()
       assert(ScaleLint.errorCount.get() === before + 1,
         "clean plans must not raise the count")
-      // the q197 shape that false-positives in the mid-rewrite rule: the
+      // the q197 shape that false-positives mid-rewrite: the
       // rn<=k filter's limit is pushed under the global window in the
       // FINAL plan, so the listener must stay quiet on it
       val P = 1000003L
@@ -388,5 +377,66 @@ class ScaleLintSpec extends SparkSuite {
         s"round $round carried sizeInBytes $sz past the cap")
     }
     assert(cur.count() === 8L, "the loop's data must be untouched by the guard")
+  }
+
+  test("barrierByKeySized sizes a lazy-checkpoint input like its plain rows; joins on the key reuse the pin") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    // a few-KB advisory size under a wide session makes the test-sized edge
+    // table pin to a width strictly between 1 and the session width (21 of
+    // 64); broadcast off so the join below plans a shuffled join
+    val settings = Map(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4k",
+      "spark.sql.shuffle.partitions" -> "64",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val saved = settings.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val edges = spark.range(0, 1000, 1, 4)
+        .select(($"id" % 100).as("src"), $"id".as("dst"))
+      val (_, plainWidth) =
+        ScaleLint.barrierByKeySized(edges, "src", identity[DataFrame] _)
+      // a LAZY checkpoint has no blocks until something runs it: measured
+      // as-is it reads 0 bytes and pins the whole table to one partition
+      val (pin, lazyWidth) = ScaleLint.barrierByKeySized(
+        edges.localCheckpoint(eager = false), "src", identity[DataFrame] _)
+      val sessionWidth = spark.sessionState.conf.numShufflePartitions
+      assert(lazyWidth === plainWidth,
+        "a lazy-checkpoint input must get the width of the same rows un-checkpointed")
+      assert(lazyWidth > 1 && lazyWidth <= sessionWidth,
+        s"width $lazyWidth outside (1, $sessionWidth]")
+      info(s"pin width $lazyWidth of $sessionWidth")
+
+      // the iterative-operator shape (PageRank/LabelProp): a node-sized
+      // state table co-partitioned at the pin's width, joined on the key
+      val state = spark.range(100).select($"id".as("node"), lit(1L).as("rank"))
+        .repartition(lazyWidth, $"node")
+      val joined = pin.join(state, $"src" === $"node")
+      val pinRdd = pin.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.head
+      def children(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case other => other.children
+      }
+      // every path from the root down to the pinned scan: the Exchanges on it
+      def exchangesAbovePin(p: SparkPlan, seen: Int): Seq[Int] = p match {
+        case r: RDDScanExec if r.rdd.id == pinRdd => Seq(seen)
+        case other =>
+          val here = if (other.isInstanceOf[ShuffleExchangeLike]) 1 else 0
+          children(other).flatMap(exchangesAbovePin(_, seen + here))
+      }
+      val paths = exchangesAbovePin(joined.queryExecution.executedPlan, 0)
+      assert(paths.nonEmpty, "the pinned scan must appear in the join plan")
+      assert(paths.forall(_ == 0),
+        s"the pinned side must not be re-shuffled:\n${joined.queryExecution.executedPlan}")
+      assert(joined.count() === 1000L, "every edge meets its source node")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }
