@@ -10,8 +10,11 @@ import org.apache.spark.sql.functions._
   * a sample), persists them, and then extends the code table incrementally
   * as vectors arrive — existing vectors are never re-read, and search hits
   * the persisted codes. This module wires [[Similarity]]'s primitives into
-  * that flow (the dedup tier's prefix-index loop,
-  * [[graft.streaming.StreamPipes.dedupIngest]], is the template):
+  * that flow. Unlike the other maintained stream artifacts, which record
+  * applied batches in their table's log
+  * ([[graft.sources.VersionedTable.commitBatch]]), the index records them
+  * in its shard manifest: compaction re-registers batch ids per
+  * generation, and two generations coexist during a retrain:
   *
   * Layout under `base/`:
   *  - `quantizer/` — a [[VersionedTable]]: ONE atomic commit per retrain

@@ -520,10 +520,9 @@ object Dedup {
     * per-tile pairs ≤ [[HotPairBudget]] no matter how hot the token; the
     * pre-r18 fixed-chunk salting still held m²/chunks, quadratic in the
     * postings); all other tokens keep the symmetric self-join.
-    * `saltMinPostings = 0` disables the dial — with `salt = 1` that is
-    * the fully symmetric legacy plan, with `salt > 1` the legacy
-    * force-salt-every-token mode (use it for skew below the dial, e.g.
-    * uniform 10k-posting tokens). The hot set is a lazy broadcast
+    * `saltMinPostings = 0` disables the dial (the fully symmetric plan);
+    * `saltMinPostings = 1` routes every token through the grid (use it for
+    * skew below the default dial). The hot set is a lazy broadcast
     * subquery: plan construction runs NO job, and on a skew-free corpus
     * AQE's empty-relation propagation removes the hot branch at runtime.
     *
@@ -537,10 +536,10 @@ object Dedup {
     */
   def prefixJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, salt: Int = 1,
+      threshold: Double,
       saltMinPostings: Long = AutoSaltMinPostings): DataFrame = {
     val (clusters, repPairs) =
-      repStructure(df, idCol, textCol, threshold, salt, saltMinPostings)
+      repStructure(df, idCol, textCol, threshold, saltMinPostings)
     // 5. Expand back to doc pairs: cross-cluster pairs inherit the verified
     //    rep Jaccard; intra-cluster pairs are exact dups (J = 1). Linear in
     //    the OUTPUT size — the only quadratic term left is the answer itself.
@@ -577,13 +576,13 @@ object Dedup {
     */
   def dedupComponents(
       df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, salt: Int = 1,
+      threshold: Double,
       saltMinPostings: Long = AutoSaltMinPostings): DataFrame = {
     // the cluster table is materialized inside repStructure (r19: always —
     // CC additionally references it from three separate jobs, which is why
     // dedupComponents needed it even before the pair query did)
     val (clusters, repPairs) =
-      repStructure(df, idCol, textCol, threshold, salt, saltMinPostings)
+      repStructure(df, idCol, textCol, threshold, saltMinPostings)
     val repComp = Components.connectedComponents(
       clusters.select(col("rid").as("id")),
       repPairs.select(col("rid_a").as("a"), col("rid_b").as("b")))
@@ -599,9 +598,8 @@ object Dedup {
     * jaccard)). */
   private def repStructure(
       df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, salt: Int,
+      threshold: Double,
       saltMinPostings: Long = 0): (DataFrame, DataFrame) = {
-    require(salt >= 1, "salt must be >= 1")
     // 1. Collapse IDENTICAL token sets into clusters first (the exact-dedup
     //    composition): all expensive work then runs once per UNIQUE set, and
     //    member pairs are re-expanded linearly at the end. On corpora with
@@ -674,11 +672,10 @@ object Dedup {
     // (Salt.tiledPairJoinWithFactors) — each side hash-tiled into
     // f = ceil(df/sqrt(HotPairBudget)) groups and replicated f× across the
     // other axis, so a pair meets EXACTLY once (at tile (h(a)%f, h(b)%f))
-    // and NO tile holds more than the budget, however hot the token. The
-    // legacy 1-D chunked salting (saltedJoin below, kept for the
-    // force-salt mode) only divided the quadratic by a constant. Lossless
-    // — spec-tested against the unsalted plan. The cost is extra
-    // evaluations of the upstream pipeline (asymmetric sides defeat
+    // and NO tile holds more than the budget, however hot the token (the
+    // pre-r18 1-D chunked salting only divided the quadratic by a
+    // constant). Lossless — spec-tested against the unsalted plan. The
+    // cost is extra evaluations of the upstream pipeline (asymmetric sides defeat
     // Catalyst's exchange reuse; measured ~1.8× when EVERY token is
     // salted on a skew-free corpus).
     //
@@ -691,20 +688,12 @@ object Dedup {
     // back empty at runtime, and AQE's empty-relation propagation prunes
     // the salted branch before its upstream runs — measured within noise
     // of the pure symmetric plan (q30 sf0.1: 3.99s vs 3.90s).
-    // `saltMinPostings = 0` disables the dial: the legacy all-token
-    // salting with `salt > 1` (kept for the losslessness spec and for
-    // skew below the dial), fully lazy with `salt = 1`.
+    // `saltMinPostings = 0` disables the dial: the fully lazy symmetric
+    // plan.
     def aSide(p: DataFrame) = p.select(col("tid"), col("rid").as("rid_a"),
       col("n").as("n_a"), col("p").as("p_a"), col("itoks").as("toks_a"))
     def bSide(p: DataFrame) = p.select(col("tid"), col("rid").as("rid_b"),
       col("n").as("n_b"), col("p").as("p_b"), col("itoks").as("toks_b"))
-    def saltedJoin(p: DataFrame, chunks: Int) = {
-      val leftPost = aSide(p)
-        .withColumn("salt", pmod(xxhash64(col("rid_a")), lit(chunks.toLong)).cast("int"))
-      val rightPost = bSide(p)
-        .withColumn("salt", explode(sequence(lit(0), lit(chunks - 1))))
-      leftPost.join(rightPost, Seq("tid", "salt")).drop("salt")
-    }
     val repBase =
       if (saltMinPostings > 0) {
         // The hot set stays a LAZY broadcast subquery — plan construction
@@ -744,10 +733,8 @@ object Dedup {
             .unionByName(graft.plans.Salt.tiledPairJoinWithFactors(
               aSide(hot), bSide(hot), "tid", "rid_a", "rid_b", hotFactors))
         }
-      } else if (salt == 1) {
-        aSide(prefixes).join(bSide(prefixes), Seq("tid"))
       } else {
-        saltedJoin(prefixes, salt)
+        aSide(prefixes).join(bSide(prefixes), Seq("tid"))
       }
     val repPairs = repBase
       .filter(col("rid_a") < col("rid_b"))
@@ -1015,10 +1002,7 @@ object Dedup {
     // is hot-keys-only (tiny), its inner attach doubles as the hot semi-join
     // on both sides, and on a boilerplate-free corpus it is EMPTY — AQE's
     // empty-relation propagation prunes the whole hot branch at runtime.
-    // saltMinPostings <= 0 turns the dial OFF (pure cold plan) — unlike
-    // repStructure's legacy force-salt mode there is no all-keys variant
-    // here: an all-keys factor table would be dfS-sized, far too big to
-    // broadcast
+    // saltMinPostings <= 0 turns the dial OFF (pure cold plan)
     val dial = if (saltMinPostings <= 0) Long.MaxValue else saltMinPostings
     val hotFactors = dfS.filter(col("df") >= dial)
       .select(col("s"), greatest(lit(1),
@@ -1046,160 +1030,25 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("n_a"), col("inter"), col("containment"))
   }
 
-  // ─────────────── streaming-dedup state maintenance ───────────────
+  // ─────────────── streaming admission state ───────────────
   //
-  // [[graft.streaming.StreamPipes.dedupIngest]] accretes two kinds of
-  // state per micro-batch: an admitted-docs dir `corpus/batch=<id>` and a
-  // full index snapshot pair `postings_v<id>` / `vocab_v<id>` (vocab
-  // written last = the batch's commit marker). Uncompacted, a long-running
-  // stream grows one dir of each per batch forever — the small-files
-  // pathology SCALING.md measured for ANN shards. These helpers close the
-  // loop the way [[Scd.compactClosed]] / [[AnnIndex.compact]] do:
-  // data-precedes-metadata commits, batchId replay dedup intact,
-  // single-writer (the foreachBatch thread) like every versioned mutation
-  // in this repo.
+  // [[graft.streaming.StreamPipes.dedupIngest]] and
+  // [[graft.streaming.StreamPipes.dsirIngest]] keep the same layout under
+  // their `base`: a `state/` [[graft.sources.VersionedTable]] committed once
+  // per micro-batch (the dedup prefix index, or the DSIR bucket counts),
+  // and the admitted docs as `corpus/batch=<id>` delta dirs. The table's
+  // log is the one record of which batches committed and which corpus
+  // compaction is current ([[graft.sources.VersionedTable.commitBatch]]).
 
-  private val VocabVRe = "^vocab_v(\\d+)$".r
-  private val PostingsVRe = "^postings_v(\\d+)$".r
-  private val CorpusBatchRe = "^batch=(\\d+)$".r
-  private val CorpusCompactRe = "^compact=(\\d+)$".r
+  private[graft] def admitState(base: String): String = s"$base/state"
+  private[graft] def admitCorpus(base: String): String = s"$base/corpus"
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, p: String) = {
-    val path = new org.apache.hadoop.fs.Path(p)
-    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-  }
-  private def listNames(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
-    val (fs, p) = fsOf(spark, dir)
-    if (!fs.exists(p)) Seq.empty else fs.listStatus(p).toSeq.map(_.getPath.getName)
-  }
-  private def hasSuccess(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
-    val (fs, p) = fsOf(spark, dir)
-    fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-  }
-
-  /** Committed index versions at `base` (a version is committed iff its
-    * `vocab_v<id>` marker dir exists — the ingest's write-last rule). */
-  def committedVersions(spark: org.apache.spark.sql.SparkSession,
-      base: String): Seq[Long] =
-    listNames(spark, base).collect { case VocabVRe(v) => v.toLong }.sorted
-
-  /** The latest committed corpus compaction's covered-through batchId:
-    * the highest `corpus/compact=<B>` dir whose `_SUCCESS` marker landed
-    * (a crashed compaction writes no marker and is invisible — swept by
-    * [[vacuumDedupState]], rebuilt by the next compaction). */
-  private def latestCorpusCompaction(spark: org.apache.spark.sql.SparkSession,
-      base: String): Option[Long] =
-    listNames(spark, s"$base/corpus")
-      .collect { case CorpusCompactRe(b) => b.toLong }
-      .filter(b => hasSuccess(spark, s"$base/corpus/compact=$b"))
-      .sorted.lastOption
-
-  /** The admitted-corpus read set: the latest committed compaction dir
-    * (if any) + per-batch dirs it does not cover. A replayed batch that
-    * rewrites a covered `batch=<id>` dir is therefore invisible to
-    * readers — same contract as [[Scd.readDim]]'s marked-batches rule. */
-  def corpusDirs(spark: org.apache.spark.sql.SparkSession,
-      base: String): Seq[String] = {
-    val batches = listNames(spark, s"$base/corpus")
-      .collect { case CorpusBatchRe(b) => b.toLong }.sorted
-    latestCorpusCompaction(spark, base) match {
-      case None => batches.map(b => s"$base/corpus/batch=$b")
-      case Some(upto) => s"$base/corpus/compact=$upto" +:
-        batches.filter(_ > upto).map(b => s"$base/corpus/batch=$b")
-    }
-  }
-
-  /** The full admitted corpus at `base` (compaction-aware — use this, not
-    * a raw read of `corpus/`: once a `compact=<B>` dir exists alongside
-    * `batch=<id>` dirs, partition-discovery over the parent errors out on
-    * the mixed dir names, and covered batch dirs must be EXCLUDED anyway
-    * or a replayed batch would double-read). None before any admission. */
+  /** The admitted corpus of a stream admission stage at `base`: the latest
+    * recorded compaction plus the `corpus/batch=<id>` dirs of batches
+    * whose commit landed — a dir left by a batch that crashed before its
+    * commit is invisible until the retry commits it. Use this, not a raw
+    * read of `corpus/`. None before any admission. */
   def readCorpus(spark: org.apache.spark.sql.SparkSession,
-      base: String): Option[DataFrame] = {
-    val dirs = corpusDirs(spark, base)
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs: _*))
-  }
-
-  /** Fold the corpus read set into ONE `corpus/compact=<B>` dir (B = the
-    * newest committed batch). Data precedes metadata: the committer's
-    * `_SUCCESS` is the publish — readers never see a half-written fold,
-    * and a crash leaves an unpublished dir for [[vacuumDedupState]].
-    * Safe under replay: after a fold at B, a replayed batch B rewrites
-    * its (ignored) `batch=B` dir and re-triggers compaction, which finds
-    * a 1-dir read set and no-ops. Returns dirs folded (0 = nothing to
-    * do). */
-  def compactCorpus(spark: org.apache.spark.sql.SparkSession, base: String,
-      targetFiles: Int = 1): Int = {
-    val versions = committedVersions(spark, base)
-    if (versions.isEmpty) return 0
-    val upto = versions.max
-    // Fold ONLY batches whose vocab marker committed (batchId <= upto):
-    // a crash between a batch-B corpus write and its vocab_vB marker
-    // leaves an uncommitted batch=B dir, and folding it into
-    // compact=<upto> would double-count B's docs once the stream replays
-    // batch B (the replayed write lands in a dir the compaction already
-    // swallowed). The wired foreachBatch cadence never hits this (it
-    // compacts after its own marker), but an out-of-band invocation can.
-    val dirs = corpusDirs(spark, base).filter { dir =>
-      dir.split('/').last match {
-        case CorpusBatchRe(b) => b.toLong <= upto
-        case _ => true // the compaction dir itself
-      }
-    }
-    if (dirs.size <= 1) return 0
-    // an all-rejected stream leaves only file-less dirs — nothing to fold,
-    // and no files to infer the fold's schema from
-    try {
-      spark.read.parquet(dirs: _*).coalesce(targetFiles)
-        .write.mode("overwrite").parquet(s"$base/corpus/compact=$upto")
-      dirs.size
-    } catch { case _: org.apache.spark.sql.AnalysisException => 0 }
-  }
-
-  /** Sweep superseded streaming-dedup state at `base`:
-    *  - corpus `batch=<id>` dirs covered by the latest committed
-    *    compaction, and compact dirs other than it (superseded or
-    *    crashed-unpublished);
-    *  - index snapshots older than the NEWEST TWO committed versions.
-    *    Two, not one: a replayed batch N re-scores against the latest
-    *    version STRICTLY BELOW N (the ingest's replay rule), so N−1 must
-    *    survive N's compaction. Deeper replay means a deleted
-    *    checkpoint — a rebuild scenario, documented, not defended.
-    *    The vocab marker is deleted FIRST so a crashed sweep leaves an
-    *    unmarked (invisible) postings dir, never a marker without data;
-    *  - ORPHAN `postings_v<id>` dirs (no vocab marker, id below the
-    *    newest committed version) — crashed ingests AND crashed sweeps
-    *    both leave these, so the next vacuum finishes the job. */
-  def vacuumDedupState(spark: org.apache.spark.sql.SparkSession,
-      base: String): Unit = {
-    val (fs, _) = fsOf(spark, base)
-    latestCorpusCompaction(spark, base).foreach { upto =>
-      listNames(spark, s"$base/corpus").foreach {
-        case n @ CorpusBatchRe(b) if b.toLong <= upto =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$base/corpus/$n"), true)
-        case n @ CorpusCompactRe(b) if b.toLong != upto =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$base/corpus/$n"), true)
-        case _ => ()
-      }
-    }
-    val committed = committedVersions(spark, base)
-    val keep = committed.takeRight(2).toSet
-    listNames(spark, base).foreach {
-      case n @ VocabVRe(v) if !keep.contains(v.toLong) =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$base/$n"), true)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$base/postings_v$v"), true)
-      // ORPHAN postings: a crash between the postings_v<id> write and its
-      // vocab_v<id> marker leaves a data dir no marker-driven sweep ever
-      // matches — exactly the crash case the vacuum exists for. Safe to
-      // delete once id is STRICTLY below the newest committed version:
-      // batchIds are monotone, so any still-in-flight (or about-to-replay)
-      // batch has id > committed.max and is never touched; an unmarked dir
-      // below it can never be completed or replayed again.
-      case n @ PostingsVRe(v) if committed.nonEmpty &&
-          v.toLong < committed.max && !committed.contains(v.toLong) =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$base/$n"), true)
-      case _ => ()
-    }
-  }
+      base: String): Option[DataFrame] =
+    graft.sources.VersionedTable.readDeltas(spark, admitState(base), admitCorpus(base))
 }

@@ -25,55 +25,46 @@ import org.apache.spark.sql.types.DecimalType
   * to a one-shot aggregation — extension == rebuild, spec-pinned, and
   * q135's DuckDB oracle is a plain GROUP BY over the full fact table.
   *
-  * Storage is a [[VersionedTable]]: one atomic commit per batch, op-tagged
-  * `agg batch=<id>` — an at-least-once replay of an already-applied batch
-  * is recognized by its batchId in the commit log and skipped (the same
-  * protocol [[AnnIndex.extendBatch]] uses), so streaming delivery
-  * semantics can't double-count. History/time-travel of the aggregate
-  * come free from the table machinery.
+  * Storage is a [[VersionedTable]]: one atomic commit per batch through
+  * [[VersionedTable.commitBatch]], op-tagged `agg batch=<id>` — an
+  * at-least-once replay of an already-applied batch is recognized by its
+  * batchId in the commit log and skipped (the batch-commit protocol every
+  * maintained stream artifact shares; applied ids via
+  * [[VersionedTable.appliedBatches]]), so streaming delivery semantics
+  * can't double-count. History/time-travel of the aggregate come free
+  * from the table machinery.
   */
 object IncrementalAgg {
-
-  private val OpPrefix = "agg batch="
-
-  /** BatchIds already folded in (from the commit log — metadata only). */
-  def appliedBatches(spark: SparkSession, path: String): Set[Long] =
-    VersionedTable.commits(spark, path).collect {
-      case (_, _, op) if op.startsWith(OpPrefix) =>
-        op.stripPrefix(OpPrefix).toLong
-    }.toSet
 
   /** Fold fact batch `batchId` into the aggregate at `path`, grouping by
     * `keys` and aggregating `valueCol`. Returns false iff the batch was
     * already applied (replay no-op). */
   def update(spark: SparkSession, path: String, batch: DataFrame,
-      keys: Seq[String], valueCol: String, batchId: Long): Boolean = {
-    if (appliedBatches(spark, path).contains(batchId)) return false
-    val keyC = keys.map(col)
-    val partial = batch.groupBy(keyC: _*).agg(
-      count(lit(1)).as("n_rows"),
-      sum(col(valueCol).cast(DecimalType(28, 2))).as("sum_val"),
-      min(col(valueCol)).as("min_val"),
-      max(col(valueCol)).as("max_val"))
-    val merged = VersionedTable.read(spark, path) match {
-      case None => partial
-      case Some(prior) => prior.unionByName(partial)
-        .groupBy(keyC: _*).agg(
-          sum(col("n_rows")).as("n_rows"),
-          sum(col("sum_val")).as("sum_val"),
-          min(col("min_val")).as("min_val"),
-          max(col("max_val")).as("max_val"))
+      keys: Seq[String], valueCol: String, batchId: Long): Boolean =
+    VersionedTable.commitBatch(spark, path, "agg", batchId) {
+      val keyC = keys.map(col)
+      val partial = batch.groupBy(keyC: _*).agg(
+        count(lit(1)).as("n_rows"),
+        sum(col(valueCol).cast(DecimalType(28, 2))).as("sum_val"),
+        min(col(valueCol)).as("min_val"),
+        max(col(valueCol)).as("max_val"))
+      val merged = VersionedTable.read(spark, path) match {
+        case None => partial
+        case Some(prior) => prior.unionByName(partial)
+          .groupBy(keyC: _*).agg(
+            sum(col("n_rows")).as("n_rows"),
+            sum(col("sum_val")).as("sum_val"),
+            min(col("min_val")).as("min_val"),
+            max(col("max_val")).as("max_val"))
+      }
+      // Spark widens SUM(DECIMAL(28,2)) → DECIMAL(38,2); pin the stored
+      // type so every commit carries the identical schema (count likewise
+      // re-summed to BIGINT on merge — already long both ways).
+      merged.select(keyC ++ Seq(
+        col("n_rows").cast("long").as("n_rows"),
+        col("sum_val").cast(DecimalType(28, 2)).as("sum_val"),
+        col("min_val"), col("max_val")): _*)
     }
-    // Spark widens SUM(DECIMAL(28,2)) → DECIMAL(38,2); pin the stored
-    // type so every commit carries the identical schema (count likewise
-    // re-summed to BIGINT on merge — already long both ways).
-    val pinned = merged.select(keyC ++ Seq(
-      col("n_rows").cast("long").as("n_rows"),
-      col("sum_val").cast(DecimalType(28, 2)).as("sum_val"),
-      col("min_val"), col("max_val")): _*)
-    VersionedTable.commit(spark, path, pinned, OpPrefix + batchId)
-    true
-  }
 
   /** The current aggregate (None if nothing ever applied). Partials only —
     * derive ratios downstream so they stay exact-sum/exact-count. */

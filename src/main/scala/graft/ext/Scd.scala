@@ -176,131 +176,71 @@ object Scd {
       .select(outCols.map(col): _*)
   }
 
-  private val OpPrefix = "scd2 batch="
+  private val Stage = "scd2"
   private def currentPath(path: String) = s"$path/current"
-  private def closedPath(path: String, batchId: Long) = s"$path/closed/batch=$batchId"
+  private def closedRoot(path: String) = s"$path/closed"
 
   /** BatchIds already folded into the dimension at `path` (commit-log
     * metadata only — no data read). */
   def appliedBatches(spark: SparkSession, path: String): Set[Long] =
-    VersionedTable.commits(spark, currentPath(path)).collect {
-      case (_, _, op) if op.startsWith(OpPrefix) =>
-        op.stripPrefix(OpPrefix).toLong
-    }.toSet
+    VersionedTable.appliedBatches(spark, currentPath(path))
 
   /** Fold observation batch `batchId` into the PERSISTED SCD2 dimension
     * at `path`. Storage splits along the rows' own lifecycle so the write
     * cost matches the compute cost, O(|batch| + |keys|) per fold:
     *  - `closed/batch=<id>/` — this batch's newly-closed version rows,
-    *    APPEND-ONLY (a closed row never changes again; rewriting the
-    *    ever-growing history per commit — plain COW — would make fold
-    *    cost grow linearly with dimension age);
+    *    an APPEND-ONLY delta dir (a closed row never changes again;
+    *    rewriting the ever-growing history per commit — plain COW — would
+    *    make fold cost grow linearly with dimension age);
     *  - `current/` — the complete keys-sized current-row set, one
     *    [[VersionedTable]] COW commit per batch (bounded by |keys|
-    *    forever), whose op tag `scd2 batch=<id>` is the BATCH's commit
-    *    marker.
+    *    forever), tagged `scd2 batch=<id>`.
     *
-    * Replay protocol: an applied batchId (in `current`'s log) is skipped
-    * outright. A crashed attempt may leave `closed/batch=<id>` behind
-    * with no marker — invisible to readers ([[readDim]] only reads
-    * closed dirs of MARKED batches) and overwritten by the retry. Data
-    * precedes metadata: closed delta first, current commit (the marker)
-    * last. Batches must arrive in per-key observation order (the
+    * Replay and read isolation are [[VersionedTable.commitBatch]]'s: an
+    * applied batchId is skipped outright, and a crashed attempt's
+    * `closed/batch=<id>` is invisible to [[readDim]] until the retry
+    * commits. Batches must arrive in per-key observation order (the
     * [[scd2Apply]] late-data contract). Returns false iff skipped. */
   def applyBatch(spark: SparkSession, path: String, batch: DataFrame,
       keyCols: Seq[String], tsCol: String, tieCol: String,
-      attrCols: Seq[String], batchId: Long): Boolean = {
-    if (appliedBatches(spark, path).contains(batchId)) return false
-    val collapsed = (VersionedTable.read(spark, currentPath(path)) match {
-      case None => scd2FromHistory(batch, keyCols, tsCol, tieCol, attrCols)
-      case Some(cur) =>
-        applyCollapsed(cur, batch, keyCols, tsCol, tieCol, attrCols)
-    }).barrier(eager = true) // one evaluation feeds both slices
-    collapsed.filter(!col(Cur))
-      .write.mode("overwrite").parquet(closedPath(path, batchId))
-    VersionedTable.commit(spark, currentPath(path),
-      collapsed.filter(col(Cur)), OpPrefix + batchId)
-    true
-  }
-
-  private val CompactRe = "^scd2 compact=(\\d+) upto=(\\d+)$".r
-  private def compactDir(path: String, v: Long) = s"$path/closed/compact=$v"
-
-  /** The latest committed closed-history compaction, as (dir version,
-    * covered-through batchId). */
-  private def latestCompaction(spark: SparkSession, path: String): Option[(Long, Long)] =
-    VersionedTable.commits(spark, currentPath(path)).collect {
-      case (_, _, CompactRe(v, u)) => (v.toLong, u.toLong)
-    }.lastOption
-
-  /** The current closed-history read set: the latest compacted dir (if
-    * any) + per-batch dirs of batches applied after it. */
-  private def closedDirs(spark: SparkSession, path: String): Seq[String] = {
-    val batches = appliedBatches(spark, path)
-    latestCompaction(spark, path) match {
-      case None => batches.toSeq.sorted.map(closedPath(path, _))
-      case Some((v, upto)) => compactDir(path, v) +:
-        batches.filter(_ > upto).toSeq.sorted.map(closedPath(path, _))
+      attrCols: Seq[String], batchId: Long): Boolean =
+    VersionedTable.commitBatch(spark, currentPath(path), Stage, batchId) {
+      val collapsed = (VersionedTable.read(spark, currentPath(path)) match {
+        case None => scd2FromHistory(batch, keyCols, tsCol, tieCol, attrCols)
+        case Some(cur) =>
+          applyCollapsed(cur, batch, keyCols, tsCol, tieCol, attrCols)
+      }).barrier(eager = true) // one evaluation feeds both slices
+      collapsed.filter(!col(Cur))
+        .write.mode("overwrite").parquet(VersionedTable.deltaPath(closedRoot(path), batchId))
+      collapsed.filter(col(Cur))
     }
-  }
 
-  /** The full dimension at `path` (closed history of every MARKED batch ∪
-    * current rows) — identical, spec-pinned, to [[scd2FromHistory]] over
-    * the concatenated batches. None if nothing was ever applied. */
+  /** The full dimension at `path` (closed history of every applied batch
+    * ∪ current rows) — identical, spec-pinned, to [[scd2FromHistory]]
+    * over the concatenated batches. None if nothing was ever applied. */
   def readDim(spark: SparkSession, path: String): Option[DataFrame] =
     VersionedTable.read(spark, currentPath(path)).map { cur =>
-      val dirs = closedDirs(spark, path)
-      if (dirs.isEmpty) cur
-      else cur.unionByName(
-        // explicit schema: a batch that closed nothing leaves an empty
-        // (part-file-less) dir, which schema inference can't read
-        spark.read.schema(cur.schema).parquet(dirs: _*))
+      // explicit schema: a batch that closed nothing may leave a dir with
+      // no part file to infer it from
+      VersionedTable.readDeltas(spark, currentPath(path), closedRoot(path), Some(cur.schema))
+        .fold(cur)(closed => cur.unionByName(closed))
     }
 
-  /** OPTIMIZE for the closed history: fold the current read set (batch
-    * deltas + any previous compaction) into one `closed/compact=<V>` dir
-    * of `targetFiles` files and commit the marker — long-running
-    * maintenance accretes one closed dir per fold forever (the small-
-    * files problem; every [[readDim]] pays per-dir listing + per-file
-    * open cost), and compaction is the standard answer, exactly as
-    * [[AnnIndex.compact]] closes the same loop for ANN shards. Data
-    * precedes metadata: the compacted dir lands first, then ONE
-    * current-table commit (op `scd2 compact=<V> upto=<B>`) publishes it
-    * — a crashed compaction leaves an unreferenced dir that the next
-    * [[vacuumClosed]] sweeps, never a half-visible read set. BatchId
-    * replay dedup is untouched (batch markers stay in the log). Returns
-    * the number of dirs folded (0 = nothing to do, no commit). */
-  def compactClosed(spark: SparkSession, path: String, targetFiles: Int = 1): Int = {
-    val dirs = closedDirs(spark, path)
-    if (dirs.size <= 1) return 0
-    val cur = VersionedTable.read(spark, currentPath(path)).get
-    val nextV = VersionedTable.currentVersion(spark, currentPath(path)).get + 1
-    spark.read.schema(cur.schema).parquet(dirs: _*)
-      .coalesce(targetFiles)
-      .write.mode("overwrite").parquet(compactDir(path, nextV))
-    VersionedTable.commit(spark, currentPath(path), cur,
-      s"scd2 compact=$nextV upto=${appliedBatches(spark, path).max}")
-    dirs.size
-  }
+  /** OPTIMIZE for the closed history ([[VersionedTable.compactDeltas]]):
+    * long-running maintenance accretes one closed dir per fold, and
+    * compaction folds them into one `closed/compact=<V>` dir, exactly as
+    * [[AnnIndex.compact]] closes the same loop for ANN shards. Replay
+    * dedup is untouched (batch tags stay in the log). Returns the number
+    * of dirs folded (0 = nothing to do, no commit). */
+  def compactClosed(spark: SparkSession, path: String, targetFiles: Int = 1): Int =
+    VersionedTable.read(spark, currentPath(path)).fold(0) { cur =>
+      VersionedTable.compactDeltas(spark, currentPath(path), closedRoot(path), Stage,
+        cur.schema, targetFiles)
+    }
 
-  /** Drop closed-history dirs no longer in the read set: batch deltas
-    * covered by the latest committed compaction, and superseded or
-    * uncommitted (crashed) compact dirs. Current-table old versions are
-    * vacuumed through [[VersionedTable.vacuum]] as usual. Single-writer,
-    * like every versioned mutation here. */
+  /** Drop closed-history dirs no longer in the read set
+    * ([[VersionedTable.vacuumDeltas]]). Current-table old versions are
+    * vacuumed through [[VersionedTable.vacuum]] as usual. */
   def vacuumClosed(spark: SparkSession, path: String): Unit =
-    latestCompaction(spark, path).foreach { case (v, upto) =>
-      val closedRoot = new org.apache.hadoop.fs.Path(s"$path/closed")
-      val fs = closedRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(closedRoot)) return
-      val BatchDir = "^batch=(\\d+)$".r
-      val CompactDirRe = "^compact=(\\d+)$".r
-      fs.listStatus(closedRoot).foreach { st =>
-        st.getPath.getName match {
-          case BatchDir(b) if b.toLong <= upto => fs.delete(st.getPath, true)
-          case CompactDirRe(cv) if cv.toLong != v => fs.delete(st.getPath, true)
-          case _ => ()
-        }
-      }
-    }
+    VersionedTable.vacuumDeltas(spark, currentPath(path), closedRoot(path))
 }

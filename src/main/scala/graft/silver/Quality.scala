@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * re-evaluate the (deterministic) predicates with `filter(!all)` — a
   * map-side-only pass, no shuffle — and derive the reason as the FIRST failing
   * rule via a when-chain. At 100 TB this turns an O(shuffle) split into two
-  * codegen'd scans of the same cached/columnar input (or one scan, see
-  * [[splitSingleScan]]).
+  * codegen'd scans of the same cached/columnar input.
   */
 object Quality {
 
@@ -35,11 +34,4 @@ object Quality {
       .filter(col("quarantine_reason").isNotNull)
     (valid, quarantined)
   }
-
-  /** Single-scan variant: tag every row with its (nullable) reason; callers
-    * route on `quarantine_reason IS NULL`. Preferred inside foreachBatch where
-    * the input is a transient micro-batch that shouldn't be scanned twice.
-    */
-  def splitSingleScan(df: DataFrame, rules: Seq[Rule]): DataFrame =
-    df.withColumn("quarantine_reason", reason(rules))
 }

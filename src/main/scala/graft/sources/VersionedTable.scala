@@ -410,4 +410,113 @@ object VersionedTable {
       }
     }
   }
+
+  // ─────────────── batch commits of maintained stream artifacts ───────────────
+  //
+  // Every stream stage that maintains a table ([[graft.ext.Scd.applyBatch]],
+  // [[graft.ext.IncrementalAgg.update]], `StreamPipes.dedupIngest` /
+  // `dsirIngest`) answers "did batch N commit, what do readers see, what
+  // may be swept" from that table's own log, the way Delta pairs a
+  // streaming checkpoint with its transaction log:
+  //  - a batch commit is op-tagged `<stage> batch=<id>`. A batch whose tag
+  //    is in the log is skipped outright, so an at-least-once redelivery
+  //    writes nothing, and a batch that crashed before its commit re-runs
+  //    against the current version — no older snapshot is ever read.
+  //  - a stage may keep append-only DELTA dirs `<root>/batch=<id>` beside
+  //    the table, written before the batch's commit. Readers see the latest
+  //    compaction recorded in the log plus the dirs of applied batches after
+  //    it, never the dir of a batch that did not commit.
+  //  - compaction folds that read set into `<root>/compact=<V>` and records
+  //    it with ONE commit (`<stage> compact=<V> upto=<B>`) that re-commits
+  //    the current table; vacuum sweeps the dirs the compaction covers.
+  // Single writer (the stage's foreachBatch thread), like every commit here.
+
+  private val BatchOp = "^\\S+ batch=(\\d+)$".r
+  private val CompactOp = "^\\S+ compact=(\\d+) upto=(\\d+)$".r
+  private val BatchDir = "^batch=(\\d+)$".r
+  private val CompactDir = "^compact=(\\d+)$".r
+
+  /** BatchIds applied to the table at `base`: the `batch=<id>` op tags in
+    * its log (commit metadata only — no data read). */
+  def appliedBatches(spark: SparkSession, base: String): Set[Long] =
+    commits(spark, base).collect { case (_, _, BatchOp(b)) => b.toLong }.toSet
+
+  /** Apply stream batch `batchId` of `stage` to the table at `base` exactly
+    * once. Returns false, writing nothing, if the log already records the
+    * batch; otherwise evaluates `next` — which may first write the batch's
+    * [[deltaPath]], data before marker — and commits it as the next
+    * version, tagged `<stage> batch=<id>`. */
+  private[graft] def commitBatch(spark: SparkSession, base: String, stage: String,
+      batchId: Long)(next: => DataFrame): Boolean = {
+    if (appliedBatches(spark, base).contains(batchId)) return false
+    commit(spark, base, next, s"$stage batch=$batchId")
+    true
+  }
+
+  /** Batch `batchId`'s delta dir under `root`. */
+  private[graft] def deltaPath(root: String, batchId: Long): String = s"$root/batch=$batchId"
+
+  private def compactPath(root: String, v: Long) = s"$root/compact=$v"
+
+  /** The latest compaction recorded in `base`'s log, as (compact dir
+    * version, covered-through batchId). */
+  private def latestCompaction(spark: SparkSession, base: String): Option[(Long, Long)] =
+    commits(spark, base).collect { case (_, _, CompactOp(v, u)) => (v.toLong, u.toLong) }
+      .lastOption
+
+  /** The delta read set under `root`: the latest recorded compaction (if
+    * any) plus the dirs of batches applied after it. */
+  private def deltaDirs(spark: SparkSession, base: String, root: String): Seq[String] = {
+    val upto = latestCompaction(spark, base)
+    upto.map { case (v, _) => compactPath(root, v) }.toSeq ++
+      appliedBatches(spark, base).filter(b => upto.forall(b > _._2))
+        .toSeq.sorted.map(deltaPath(root, _))
+  }
+
+  /** The delta rows readers see under `root` (None if no batch wrote one).
+    * Pass `schema` when a dir may hold no part file to infer it from. */
+  private[graft] def readDeltas(spark: SparkSession, base: String, root: String,
+      schema: Option[StructType] = None): Option[DataFrame] = {
+    val dirs = deltaDirs(spark, base, root)
+    if (dirs.isEmpty) None
+    else Some(schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dirs: _*))
+  }
+
+  /** OPTIMIZE for delta dirs: fold the read set under `root` into one
+    * `compact=<V>` dir of `targetFiles` files, then record it with one
+    * commit of the current table — a crashed compaction leaves an
+    * unrecorded dir that [[vacuumDeltas]] sweeps, never a half-visible
+    * read set. Long-running stages accrete one delta dir per batch (the
+    * small-files problem every read pays in listing and file opens), so
+    * they call this on a cadence. Returns the dirs folded (0 = nothing to
+    * do, no commit). */
+  private[graft] def compactDeltas(spark: SparkSession, base: String, root: String,
+      stage: String, schema: StructType, targetFiles: Int = 1): Int = {
+    val dirs = deltaDirs(spark, base, root)
+    if (dirs.size <= 1) return 0
+    val cur = currentVersion(spark, base).get // a delta dir implies a commit
+    spark.read.schema(schema).parquet(dirs: _*)
+      .coalesce(targetFiles)
+      .write.mode("overwrite").parquet(compactPath(root, cur + 1))
+    commit(spark, base, readVersion(spark, base, cur),
+      s"$stage compact=${cur + 1} upto=${appliedBatches(spark, base).max}")
+    dirs.size
+  }
+
+  /** Drop the delta dirs under `root` that left the read set: batch dirs
+    * covered by the latest recorded compaction, and superseded or
+    * unrecorded (crashed) compact dirs. The table's own old versions go
+    * through [[vacuum]]. */
+  private[graft] def vacuumDeltas(spark: SparkSession, base: String, root: String): Unit =
+    latestCompaction(spark, base).foreach { case (v, upto) =>
+      val f = fs(spark, root)
+      val rootPath = new Path(root)
+      if (f.exists(rootPath)) f.listStatus(rootPath).foreach { st =>
+        st.getPath.getName match {
+          case BatchDir(b) if b.toLong <= upto => f.delete(st.getPath, true)
+          case CompactDir(c) if c.toLong != v => f.delete(st.getPath, true)
+          case _ => ()
+        }
+      }
+    }
 }

@@ -37,6 +37,17 @@ object StreamPipes {
   def tableStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.readStream.format("parquet").schema(schema).load(path)
 
+  /** The stanza every foreachBatch stage shares: append mode, checkpointed,
+    * AvailableNow, `body` run once per micro-batch with its batchId. */
+  private def foreachBatchStage(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(body)
+      .start()
+
   /** Silver foreachBatch (ref 02:97-209): per micro-batch DQ split → enrich
     * → idempotent keyed merge into the silver path + quarantine write.
     * Exactly-once under replay on BOTH sinks: the merge is keyed on
@@ -49,24 +60,19 @@ object StreamPipes {
       bronzeStream: DataFrame,
       silverPath: String, quarantinePath: String, checkpoint: String,
       clock: java.sql.Timestamp, validMcc: Seq[String]): StreamingQuery =
-    bronzeStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val (silverReady, quarantined) = TxnSilver.processBatch(batch, clock, validMcc)
-        // 02:124-128; batch-scoped overwrite = idempotent replay
-        quarantined.write.mode("overwrite").parquet(s"$quarantinePath/batch=$batchId")
-        val merged = VersionedTable.read(spark, silverPath) match {
-          case Some(target) =>
-            Merge.upsert(target, silverReady, Seq("transaction_id")) // 02:174-181
-          case None => silverReady // 02:184 first-batch fallback
-        }
-        VersionedTable.commit(spark, silverPath, merged)
-        ()
+    foreachBatchStage(bronzeStream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val (silverReady, quarantined) = TxnSilver.processBatch(batch, clock, validMcc)
+      // 02:124-128; batch-scoped overwrite = idempotent replay
+      quarantined.write.mode("overwrite").parquet(s"$quarantinePath/batch=$batchId")
+      val merged = VersionedTable.read(spark, silverPath) match {
+        case Some(target) =>
+          Merge.upsert(target, silverReady, Seq("transaction_id")) // 02:174-181
+        case None => silverReady // 02:184 first-batch fallback
       }
-      .start()
+      VersionedTable.commit(spark, silverPath, merged)
+      ()
+    }
 
   /** Streaming DECLARATIVE EXPECTATIONS (r14) — [[graft.ext.Expectations]]
     * as a maintained stream stage, the generalization of
@@ -92,27 +98,22 @@ object StreamPipes {
       rules: Seq[graft.ext.Expectations.Rule],
       cleanPath: String, quarantinePath: String, metricsPath: String,
       checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist the FLAGGED frame, not the raw batch: clean/quarantine/
-        // metrics are three consumptions of the same flagging projection +
-        // dataset-level joins (uniqueness groupBy, FK join) — caching below
-        // the flags would recompute all of that three times per micro-batch
-        val r = graft.ext.Expectations.check(batch, rules)
-        val cached = r.flagged.persist()
-        try {
-          r.clean.write.mode("overwrite")
-            .parquet(s"$cleanPath/batch=$batchId")
-          r.quarantine.write.mode("overwrite")
-            .parquet(s"$quarantinePath/batch=$batchId")
-          r.metrics.write.mode("overwrite")
-            .parquet(s"$metricsPath/batch=$batchId")
-        } finally { cached.unpersist(); () }
-      }
-      .start()
+    foreachBatchStage(stream, checkpoint) { (batch, batchId) =>
+      // persist the FLAGGED frame, not the raw batch: clean/quarantine/
+      // metrics are three consumptions of the same flagging projection +
+      // dataset-level joins (uniqueness groupBy, FK join) — caching below
+      // the flags would recompute all of that three times per micro-batch
+      val r = graft.ext.Expectations.check(batch, rules)
+      val cached = r.flagged.persist()
+      try {
+        r.clean.write.mode("overwrite")
+          .parquet(s"$cleanPath/batch=$batchId")
+        r.quarantine.write.mode("overwrite")
+          .parquet(s"$quarantinePath/batch=$batchId")
+        r.metrics.write.mode("overwrite")
+          .parquet(s"$metricsPath/batch=$batchId")
+      } finally { cached.unpersist(); () }
+    }
 
   /** Watermarked event-time hourly aggregate (north-star ST7): late data
     * beyond 10 minutes is dropped; state is bounded by the watermark. */
@@ -165,35 +166,9 @@ object StreamPipes {
           s"$rightTime BETWEEN $leftTime - interval $lookback AND $leftTime"),
         joinType)
 
-  /** STREAMING corpus ingestion with EXACT near-dup admission — the
-    * incremental dedup flow ([[graft.ext.Dedup.incrementalNearDupExact]] +
-    * [[graft.ext.Dedup.extendPrefixIndex]]) as a foreachBatch pipeline.
-    * Every micro-batch is admitted against the corpus ingested so far via
-    * the PERSISTED prefix index (never re-reading earlier corpus text),
-    * appended under `corpus/batch=<id>`, and the index is extended and
-    * written as versioned snapshots (`postings_v<id>` / `vocab_v<id>`).
-    *
-    * Replay idempotency: a replayed micro-batch re-reads the index as of
-    * the LATEST VERSION STRICTLY BELOW its own batch id — the failed
-    * attempt's partial writes are invisible to the decision — and every
-    * write is a per-batch-directory overwrite, so re-running batch N
-    * rewrites exactly batch N's outputs. `vocab_v<id>` is written last and
-    * acts as the version's commit marker.
-    *
-    * `compactEvery` > 0 runs the maintenance loop every N batches —
-    * [[graft.ext.Dedup.compactCorpus]] folds the accreted per-batch
-    * corpus dirs into one committed `corpus/compact=<B>` dir, and
-    * [[graft.ext.Dedup.vacuumDedupState]] sweeps covered corpus dirs plus
-    * index snapshots older than the newest two (two so a replayed batch
-    * can still read the version strictly below itself). Uncompacted, a
-    * long-running stream accretes one corpus dir + one full index
-    * snapshot per micro-batch forever — the exact small-files pathology
-    * the ANN shard sweep measured (SCALING.md). Consumers read the
-    * corpus via [[graft.ext.Dedup.readCorpus]] (compaction-aware read
-    * set), not a raw partition-discovery read of `corpus/`. */
   /** STREAMING ANN-INDEX INGESTION — [[graft.ext.AnnIndex]]'s incremental
-    * extension as a foreachBatch pipeline (the [[dedupIngest]] pattern for
-    * the vector tier): every micro-batch of (id, vec) rows is encoded
+    * extension as a foreachBatch pipeline (the vector-tier twin of
+    * [[dedupIngest]]): every micro-batch of (id, vec) rows is encoded
     * against the CURRENT frozen quantizer generation and written as that
     * generation's shard `batch=<id>`. Caller must have run
     * [[graft.ext.AnnIndex.train]] first (the production split: quantizers
@@ -205,8 +180,9 @@ object StreamPipes {
     * encoding is a pure function of the frozen quantizers; extension ==
     * rebuild, SimilaritySpec), so at-least-once delivery never
     * double-counts a batch, including after compaction folded its shard
-    * away. The quantizer's [[graft.sources.VersionedTable]] markers
-    * version the only mutable state.
+    * away. The manifest, not the table log, carries the batch ids because
+    * compaction re-registers them per generation and two generations
+    * coexist during a retrain.
     *
     * `compactEvery` > 0 folds the accreted per-batch shards into one
     * every N batches ([[graft.ext.AnnIndex.compact]]) — the maintenance
@@ -220,83 +196,106 @@ object StreamPipes {
   def annIngest(
       vectors: DataFrame, basePath: String, checkpoint: String,
       compactEvery: Int = 0): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.AnnIndex.extendBatch(batch.sparkSession, basePath, batch, batchId)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.ext.AnnIndex.compact(batch.sparkSession, basePath)
-        ()
-      }
-      .start()
+    foreachBatchStage(vectors, checkpoint) { (batch, batchId) =>
+      graft.ext.AnnIndex.extendBatch(batch.sparkSession, basePath, batch, batchId)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        graft.ext.AnnIndex.compact(batch.sparkSession, basePath)
+      ()
+    }
 
+  /** STREAMING corpus ingestion with EXACT near-dup admission — the
+    * incremental dedup flow ([[graft.ext.Dedup.incrementalNearDupExact]] +
+    * [[graft.ext.Dedup.extendPrefixIndex]]) as a foreachBatch pipeline.
+    * Every micro-batch is admitted against the corpus ingested so far via
+    * the PERSISTED prefix index (never re-reading earlier corpus text),
+    * written as the delta dir `corpus/batch=<id>`, and the extended index
+    * is committed as one version of the `state/` [[VersionedTable]] —
+    * postings and vocab as kind-tagged rows of ONE commit, so a reader can
+    * never pair postings from one batch with vocab from another.
+    *
+    * Replay and read isolation are [[VersionedTable.commitBatch]]'s
+    * protocol (op tag `dedup batch=<id>`): an applied batch is skipped
+    * outright, and a batch that crashed before its commit re-runs against
+    * the current index, its half-written corpus dir invisible to
+    * [[graft.ext.Dedup.readCorpus]] until the retry commits.
+    *
+    * `compactEvery` > 0 runs the maintenance loop every N batches: the
+    * corpus delta dirs fold into one recorded compaction and the covered
+    * dirs plus superseded index versions are swept. Uncompacted, a
+    * long-running stream accretes one corpus dir + one index version per
+    * micro-batch forever — the small-files pathology the ANN shard sweep
+    * measured (SCALING.md). Consumers read the corpus via
+    * [[graft.ext.Dedup.readCorpus]], not a raw read of `corpus/`. */
   def dedupIngest(
       docs: DataFrame, basePath: String, checkpoint: String,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.9, compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.ext.Dedup
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(basePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def vp(v: Long) = s"$basePath/vocab_v$v"
-        def pp(v: Long) = s"$basePath/postings_v$v"
-        val committed = {
-          val base = new org.apache.hadoop.fs.Path(basePath)
-          if (!fs.exists(base)) Seq.empty[Long]
-          else {
-            // strict name match: a stray dir merely PREFIXED "vocab_v"
-            // (temp file, future artifact) must be ignored, not crash the
-            // micro-batch with a NumberFormatException
-            val VocabV = "^vocab_v(\\d+)$".r
-            fs.listStatus(base).toSeq.map(_.getPath.getName)
-              .collect { case VocabV(v) => v.toLong }
-          }
-        }
-        val (postings, vocab) = committed.filter(_ < batchId).sorted.lastOption match {
-          case Some(v) => (spark.read.parquet(pp(v)), spark.read.parquet(vp(v)))
-          case None    => Dedup.prefixIndex(batch.limit(0), idCol, textCol, threshold)
-        }
-        val kept = Dedup.incrementalNearDupExact(
-          batch, postings, vocab, idCol, textCol, threshold).barrier(eager = true)
-        kept.write.mode("overwrite").parquet(s"$basePath/corpus/batch=$batchId")
-        val (p2, v2) = Dedup.extendPrefixIndex(
-          kept, postings, vocab, idCol, textCol, threshold)
-        p2.write.mode("overwrite").parquet(pp(batchId))
-        v2.write.mode("overwrite").parquet(vp(batchId)) // commit marker, last
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          Dedup.compactCorpus(spark, basePath)
-          Dedup.vacuumDedupState(spark, basePath)
-        }
-        ()
+    foreachBatchStage(docs, checkpoint) { (batch, batchId) =>
+      dedupBatch(batch, batchId, basePath, idCol, textCol, threshold)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        maintainAdmitted(batch.sparkSession, basePath, DedupStage, batch.schema)
+    }
+
+  private val DedupStage = "dedup"
+  private val DsirStage = "dsir"
+
+  /** One [[dedupIngest]] micro-batch; false iff already applied. */
+  private[streaming] def dedupBatch(batch: DataFrame, batchId: Long, basePath: String,
+      idCol: String, textCol: String, threshold: Double): Boolean = {
+    import graft.ext.Dedup
+    val spark = batch.sparkSession
+    val state = Dedup.admitState(basePath)
+    VersionedTable.commitBatch(spark, state, DedupStage, batchId) {
+      val (postings, vocab) = VersionedTable.read(spark, state) match {
+        case Some(idx) => (
+          idx.filter(col("kind") === "postings").select("tid", "p", "n", "itoks"),
+          idx.filter(col("kind") === "vocab").select("tok", "tid"))
+        case None => Dedup.prefixIndex(batch.limit(0), idCol, textCol, threshold)
       }
-      .start()
+      val kept = Dedup.incrementalNearDupExact(
+        batch, postings, vocab, idCol, textCol, threshold).barrier(eager = true)
+      kept.write.mode("overwrite")
+        .parquet(VersionedTable.deltaPath(Dedup.admitCorpus(basePath), batchId))
+      val (p2, v2) = Dedup.extendPrefixIndex(
+        kept, postings, vocab, idCol, textCol, threshold)
+      p2.withColumn("kind", lit("postings"))
+        .unionByName(v2.withColumn("kind", lit("vocab")), allowMissingColumns = true)
+    }
+  }
+
+  /** The admission stages' maintenance loop: fold the corpus delta dirs
+    * into one recorded compaction, then sweep the dirs it covers and the
+    * state table's superseded versions (a skipped or retried batch only
+    * ever reads the current one). */
+  private def maintainAdmitted(spark: SparkSession, basePath: String,
+      stage: String, corpusSchema: StructType): Unit = {
+    import graft.ext.Dedup.{admitCorpus, admitState}
+    VersionedTable.compactDeltas(spark, admitState(basePath), admitCorpus(basePath),
+      stage, corpusSchema)
+    VersionedTable.vacuumDeltas(spark, admitState(basePath), admitCorpus(basePath))
+    VersionedTable.vacuum(spark, admitState(basePath))
+  }
 
   /** STREAMING DSIR ADMISSION — [[graft.ext.CorpusOps.importanceWeights]]
-    * as an ingest pipeline (the [[dedupIngest]] protocol for the
-    * data-selection tier): each micro-batch of documents is scored
+    * as an ingest pipeline (the data-selection twin of [[dedupIngest]],
+    * same layout and protocol): each micro-batch of documents is scored
     * against the target/background bucket counts ACCUMULATED FROM PRIOR
     * BATCHES (never against its own contents — the online estimator), docs
-    * with weight ≥ `threshold` are admitted to `corpus/batch=<id>`, and
-    * the counts are extended by the WHOLE batch (admitted or not:
-    * background statistics describe what arrived, not what survived;
-    * target counts from rows where `targetCol` is true).
-    *
-    * Replay idempotency is [[dedupIngest]]'s version-below-batch protocol
-    * verbatim: scoring reads the newest `counts_v<id>` with id strictly
-    * below the current batch, every write is a per-batch-directory
-    * overwrite, and `counts_v<id>` is written LAST as the batch's commit
-    * marker — a replayed batch re-scores against the same prior state and
-    * rewrites identical outputs. Cold start: with no prior counts every
+    * with weight ≥ `threshold` are admitted to the delta dir
+    * `corpus/batch=<id>`, and the counts are extended by the WHOLE batch
+    * (admitted or not: background statistics describe what arrived, not
+    * what survived; target counts from rows where `targetCol` is true) and
+    * committed as one version of the `state/` [[VersionedTable]], tagged
+    * `dsir batch=<id>`. An applied batch is skipped, so a replay never
+    * double-counts; read the admitted docs with
+    * [[graft.ext.Dedup.readCorpus]]. Cold start: with no prior counts every
     * bucket is unseen, all weights are exactly 1.0, and a threshold ≤ 1
     * admits the whole first batch — the bootstrap a selection loop wants
     * (document the dial; raise the threshold once the estimator warms).
+    *
+    * `vacuumEvery` > 0 runs [[dedupIngest]]'s maintenance loop every N
+    * batches: each counts version is a FULL snapshot, so all but the
+    * current one are dead weight, and the corpus dirs fold like dedup's.
     *
     * 100 TB shape: state is two `buckets`-row count tables (broadcast
     * forever, the point of DSIR's hashed projection); per-batch cost is
@@ -307,69 +306,45 @@ object StreamPipes {
       idCol: String = "doc_id", textCol: String = "text",
       targetCol: String = "is_target", threshold: Double = 1.0,
       buckets: Int = 64, vacuumEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.ext.CorpusOps
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(basePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def cp(v: Long) = s"$basePath/counts_v$v"
-        val committed = {
-          val base = new org.apache.hadoop.fs.Path(basePath)
-          if (!fs.exists(base)) Seq.empty[Long]
-          else {
-            val CountsV = "^counts_v(\\d+)$".r
-            fs.listStatus(base).toSeq.map(_.getPath.getName)
-              .collect { case CountsV(v) => v.toLong }
-          }
-        }
-        // prior state, strictly below this batch (replay-stable)
-        val prior = committed.filter(_ < batchId).sorted.lastOption
-          .map(v => spark.read.parquet(cp(v)))
-        def priorKind(k: String) = prior match {
-          case Some(df) => df.filter(col("kind") === k)
-            .select(col("b"), col("c"))
-          case None => spark.range(0)
-            .select(col("id").cast("int").as("b"), col("id").as("c"))
-        }
-        val toks = CorpusOps.tokenBuckets(
-          batch, col(targetCol), idCol, textCol, buckets).barrier(eager = true)
-        val w = CorpusOps.importanceWeightsAgainst(toks,
-          priorKind("b").withColumnRenamed("c", "cb"),
-          priorKind("t").withColumnRenamed("c", "ct"))
-        batch.join(w.filter(col("w") >= threshold)
-            .select(col("id").as(idCol), col("w")), Seq(idCol))
-          .write.mode("overwrite").parquet(s"$basePath/corpus/batch=$batchId")
-        // extend counts by the whole batch; written LAST = commit marker
-        val batchCounts = toks.groupBy(col("b")).agg(count(lit(1)).as("c"))
-          .select(lit("b").as("kind"), col("b"), col("c"))
-          .unionByName(toks.filter(col("is_t")).groupBy(col("b"))
-            .agg(count(lit(1)).as("c"))
-            .select(lit("t").as("kind"), col("b"), col("c")))
-        val merged = prior match {
-          case Some(df) => df.unionByName(batchCounts)
-            .groupBy(col("kind"), col("b")).agg(sum(col("c")).as("c"))
-          case None => batchCounts
-        }
-        merged.write.mode("overwrite").parquet(cp(batchId))
-        // vacuumEvery > 0: every version is a FULL count snapshot, so all
-        // but the newest TWO are dead weight (two, not one — a replayed
-        // batch reads the version strictly below itself). Uncompacted the
-        // state dir accretes one counts_v per micro-batch forever — the
-        // dedupIngest pathology, minus the fold (nothing to fold: each
-        // snapshot is already complete).
-        if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0) {
-          val keep = (committed :+ batchId).distinct.sorted.takeRight(2).toSet
-          committed.filterNot(keep.contains).foreach { v =>
-            fs.delete(new org.apache.hadoop.fs.Path(cp(v)), true)
-          }
-        }
-        ()
+    foreachBatchStage(docs, checkpoint) { (batch, batchId) =>
+      dsirBatch(batch, batchId, basePath, idCol, textCol, targetCol, threshold, buckets)
+      if (vacuumEvery > 0 && (batchId + 1) % vacuumEvery == 0)
+        maintainAdmitted(batch.sparkSession, basePath, DsirStage,
+          batch.schema.add("w", "double"))
+    }
+
+  /** One [[dsirIngest]] micro-batch; false iff already applied. */
+  private[streaming] def dsirBatch(batch: DataFrame, batchId: Long, basePath: String,
+      idCol: String, textCol: String, targetCol: String, threshold: Double,
+      buckets: Int): Boolean = {
+    import graft.ext.{CorpusOps, Dedup}
+    val spark = batch.sparkSession
+    val state = Dedup.admitState(basePath)
+    VersionedTable.commitBatch(spark, state, DsirStage, batchId) {
+      val prior = VersionedTable.read(spark, state)
+      def priorKind(k: String) = prior match {
+        case Some(df) => df.filter(col("kind") === k).select(col("b"), col("c"))
+        case None => spark.range(0)
+          .select(col("id").cast("int").as("b"), col("id").as("c"))
       }
-      .start()
+      val toks = CorpusOps.tokenBuckets(
+        batch, col(targetCol), idCol, textCol, buckets).barrier(eager = true)
+      val w = CorpusOps.importanceWeightsAgainst(toks,
+        priorKind("b").withColumnRenamed("c", "cb"),
+        priorKind("t").withColumnRenamed("c", "ct"))
+      batch.join(w.filter(col("w") >= threshold)
+          .select(col("id").as(idCol), col("w")), Seq(idCol))
+        .write.mode("overwrite")
+        .parquet(VersionedTable.deltaPath(Dedup.admitCorpus(basePath), batchId))
+      val batchCounts = toks.groupBy(col("b")).agg(count(lit(1)).as("c"))
+        .select(lit("b").as("kind"), col("b"), col("c"))
+        .unionByName(toks.filter(col("is_t")).groupBy(col("b"))
+          .agg(count(lit(1)).as("c"))
+          .select(lit("t").as("kind"), col("b"), col("c")))
+      prior.fold(batchCounts)(_.unionByName(batchCounts)
+        .groupBy(col("kind"), col("b")).agg(sum(col("c")).as("c")))
+    }
+  }
 
   /** STREAMING SCD2 MAINTENANCE — [[graft.ext.Scd]]'s incremental
     * dimension kept fresh from a change feed: each micro-batch of
@@ -377,30 +352,25 @@ object StreamPipes {
     * [[graft.ext.Scd.applyBatch]] (bootstrap on the first batch,
     * current-rows-only incremental apply after — never a history
     * rescan). Replay idempotency is batchId-keyed in the dimension's own
-    * commit log, the [[annIngest]] protocol: an at-least-once redelivery
-    * is recognized and skipped, a crashed half-commit is invisible
-    * (marker-last). The source must deliver per-key observations in
-    * order (the CDC-feed contract); late data fails loudly inside the
+    * commit log ([[VersionedTable.commitBatch]]): an at-least-once
+    * redelivery is recognized and skipped, a crashed half-commit is
+    * invisible (marker-last). The source must deliver per-key observations
+    * in order (the CDC-feed contract); late data fails loudly inside the
     * batch rather than silently rewriting closed history. */
   def scd2Ingest(
       observations: DataFrame, basePath: String, checkpoint: String,
       keyCols: Seq[String], tsCol: String, tieCol: String,
       attrCols: Seq[String], compactEvery: Int = 0): StreamingQuery =
-    observations.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Scd.applyBatch(batch.sparkSession, basePath, batch,
-          keyCols, tsCol, tieCol, attrCols, batchId)
-        // same maintenance dial as annIngest: fold accreted closed-delta
-        // dirs every N batches so a long-running stream's read set stays
-        // bounded (single-writer inside the same foreachBatch)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.ext.Scd.compactClosed(batch.sparkSession, basePath)
-        ()
-      }
-      .start()
+    foreachBatchStage(observations, checkpoint) { (batch, batchId) =>
+      graft.ext.Scd.applyBatch(batch.sparkSession, basePath, batch,
+        keyCols, tsCol, tieCol, attrCols, batchId)
+      // same maintenance dial as annIngest: fold accreted closed-delta
+      // dirs every N batches so a long-running stream's read set stays
+      // bounded (single-writer inside the same foreachBatch)
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        graft.ext.Scd.compactClosed(batch.sparkSession, basePath)
+      ()
+    }
 
   /** STREAMING AGGREGATE MAINTENANCE — [[graft.ext.IncrementalAgg]] fed
     * per micro-batch: the per-key rollup extends by one batch-sized
@@ -412,14 +382,9 @@ object StreamPipes {
   def aggIngest(
       facts: DataFrame, basePath: String, checkpoint: String,
       keys: Seq[String], valueCol: String): StreamingQuery =
-    facts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.IncrementalAgg.update(batch.sparkSession, basePath, batch,
-          keys, valueCol, batchId)
-        ()
-      }
-      .start()
+    foreachBatchStage(facts, checkpoint) { (batch, batchId) =>
+      graft.ext.IncrementalAgg.update(batch.sparkSession, basePath, batch,
+        keys, valueCol, batchId)
+      ()
+    }
 }

@@ -146,12 +146,6 @@ class DedupSpec extends SparkSuite {
     for (t <- Seq(0.5, 0.8)) {
       val plain = Dedup.prefixJaccardPairs(docs, "doc_id", "text", t)
         .as[(Long, Long, Double)].collect().toSet
-      // saltMinPostings=0 forces the legacy every-token chunked asymmetric
-      // join — must equal the symmetric plan
-      val salted = Dedup.prefixJaccardPairs(docs, "doc_id", "text", t,
-          salt = 8, saltMinPostings = 0)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(salted === plain, s"salted join must be lossless at t=$t")
       // auto-dial with a tiny threshold: every token is "hot" on this
       // corpus, the cold branch is empty — still lossless
       val auto = Dedup.prefixJaccardPairs(docs, "doc_id", "text", t,
@@ -403,56 +397,5 @@ class DedupSpec extends SparkSuite {
     val out = Dedup.blockedJaccardPairs(docs, "doc_id", "text", "source", 0.5)
       .as[(String, Long, Long, Double)].collect()
     assert(out.forall(_._1 == "s1"), "cross-block pairs must not appear")
-  }
-
-  test("compactCorpus excludes uncommitted batches; vacuum sweeps orphan postings (crash windows)") {
-    // the two crash windows of the streaming-dedup state machine, driven
-    // directly against the on-disk layout: (a) a batch whose corpus dir
-    // landed but whose vocab marker did not must NOT be folded by an
-    // out-of-band compaction (its replay would double-count), and (b) a
-    // crashed batch's orphan postings_v dir — matched by no marker-driven
-    // sweep — must be vacuumed once it falls below the commit watermark.
-    val base = java.nio.file.Files.createTempDirectory("dedup-crash").toString
-    def writeBatch(id: Int, ids: Seq[Long]): Unit = // overwrite = the ingest's replay-rewrite semantics
-      ids.toDF("doc_id").write.mode("overwrite").parquet(s"$base/corpus/batch=$id")
-    def postings(v: Int): Unit =
-      Seq(v.toLong).toDF("s").write.parquet(s"$base/postings_v$v")
-    def mark(v: Int): Unit =
-      Seq(v.toLong).toDF("v").write.parquet(s"$base/vocab_v$v")
-    def exists(p: String) = new java.io.File(p).exists
-    def corpusIds() = Dedup.readCorpus(spark, base).get
-      .select($"doc_id").as[Long].collect().sorted.toSeq
-
-    writeBatch(0, Seq(1L, 2L)); postings(0); mark(0)
-    writeBatch(1, Seq(3L)); postings(1); mark(1)
-    // batch 2 CRASHED between its corpus write and its vocab marker
-    writeBatch(2, Seq(4L)); postings(2)
-    // out-of-band compaction in the crash window folds ONLY committed batches
-    assert(Dedup.compactCorpus(spark, base) === 2)
-    assert(Dedup.corpusDirs(spark, base) ===
-      Seq(s"$base/corpus/compact=1", s"$base/corpus/batch=2"))
-    // the stream replays batch 2 (rewrites its dir, then marks): the read
-    // set sees docs 1..4 exactly once — no double count of batch 2
-    writeBatch(2, Seq(4L)) // the replay's rewrite of its own dir
-    mark(2)
-    assert(corpusIds() === Seq(1L, 2L, 3L, 4L))
-
-    // batch 3 crashes after postings, before marker; batch 4 commits
-    postings(3)
-    writeBatch(4, Seq(5L)); postings(4); mark(4)
-    Dedup.vacuumDedupState(spark, base)
-    assert(!exists(s"$base/postings_v3"),
-      "orphan postings below the commit watermark must be swept")
-    assert(!exists(s"$base/vocab_v0") && !exists(s"$base/postings_v0") &&
-      !exists(s"$base/vocab_v1") && !exists(s"$base/postings_v1"),
-      "snapshots older than the newest two committed are swept")
-    assert(exists(s"$base/vocab_v2") && exists(s"$base/postings_v2") &&
-      exists(s"$base/vocab_v4") && exists(s"$base/postings_v4"),
-      "the newest two committed versions survive")
-    assert(corpusIds() === Seq(1L, 2L, 3L, 4L, 5L), "vacuum is metadata-only")
-    // an in-flight orphan ABOVE the newest committed version is never touched
-    postings(9)
-    Dedup.vacuumDedupState(spark, base)
-    assert(exists(s"$base/postings_v9"), "in-flight postings must survive the vacuum")
   }
 }

@@ -58,7 +58,7 @@ class IncrementalAggSpec extends SparkSuite {
       Seq("l_returnflag"), "l_quantity", 0L)
     IncrementalAgg.update(spark, base, li.filter($"l_linenumber" === 2),
       Seq("l_returnflag"), "l_quantity", 1L)
-    assert(IncrementalAgg.appliedBatches(spark, base) === Set(0L, 1L))
+    assert(VersionedTable.appliedBatches(spark, base) === Set(0L, 1L))
     // time travel: version 0 holds only batch 0's rows
     val v0 = VersionedTable.readVersion(spark, base, 0L)
     val n0 = li.filter($"l_linenumber" === 1).count()

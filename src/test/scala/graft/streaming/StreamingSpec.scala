@@ -193,6 +193,7 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming dedup ingest: cross-batch near-dup admission via the persisted index") {
     implicit val sqlCtx = spark.sqlContext
+    import graft.ext.Dedup
     val base = tmp() + "/dedup-ingest"
     val ck = tmp() + "/dedup-ingest-ck"
     // seed baked into every token: different seeds share NOTHING at the
@@ -200,6 +201,8 @@ class StreamingSpec extends SparkSuite {
     // tests' corpora whose seeds share all non-seed tokens
     def mk(n: Int, seed: String) =
       (0 until n).map(i => s"${seed}tok$i ${seed}word$i ${seed}item$i").mkString(" ")
+    def corpus() = Dedup.readCorpus(spark, base).get
+      .select("doc_id").as[Long].collect().sorted.toSeq
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().toDF("doc_id", "text")
     // batch 0: two fresh docs + one within-batch exact dup
@@ -212,32 +215,54 @@ class StreamingSpec extends SparkSuite {
       (12L, mk(12, "gamma")))
     val q2 = StreamPipes.dedupIngest(docs, base, ck)
     q2.awaitTermination()
-    val corpus = spark.read.parquet(s"$base/corpus")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(corpus === Seq(1L, 2L, 11L),
+    assert(corpus() === Seq(1L, 2L, 11L),
       "batch-0 keeps 1,2 (3 = within-batch dup); batch-1 keeps only 11 " +
         "(10 = cross-batch near-dup of 1 caught through the persisted index, 12 = dup of 11)")
-    // the index snapshots exist per committed batch, vocab marker last
-    assert(spark.read.parquet(s"$base/vocab_v1").count() >
-      spark.read.parquet(s"$base/vocab_v0").count(),
+    // the index is one state-table version per committed batch
+    def vocabSize(idx: org.apache.spark.sql.DataFrame) = idx.filter($"kind" === "vocab").count()
+    val state = s"$base/state"
+    assert(vocabSize(VersionedTable.read(spark, state).get) >
+      vocabSize(VersionedTable.readVersion(spark, state, 0L)),
       "batch 1's fresh tokens must extend the vocabulary")
     // extended-index admission == fresh-rebuild admission (order only
-    // steers pruning, never the decision): re-admit a probe batch against
-    // both and compare
-    import graft.ext.Dedup
+    // steers pruning, never the decision): stream a probe batch against
+    // the persisted extended index and admit it against a rebuilt one
     val probe = Seq((20L, mk(12, "gamma") + " moretok"), (21L, mk(12, "delta")))
-      .toDF("doc_id", "text")
-    val extKept = Dedup.incrementalNearDupExact(probe,
-        spark.read.parquet(s"$base/postings_v1"), spark.read.parquet(s"$base/vocab_v1"),
-        "doc_id", "text", 0.9)
-      .select("doc_id").as[Long].collect().sorted.toSeq
+    mem.addData(probe: _*)
+    StreamPipes.dedupIngest(docs, base, ck).awaitTermination()
+    val extKept = corpus().filterNot(Set(1L, 2L, 11L))
     val fresh = Seq((1L, mk(12, "alpha")), (2L, mk(12, "beta")), (11L, mk(12, "gamma")))
       .toDF("doc_id", "text")
     val (fp, fv) = Dedup.prefixIndex(fresh, "doc_id", "text", 0.9)
-    val freshKept = Dedup.incrementalNearDupExact(probe, fp, fv, "doc_id", "text", 0.9)
+    val freshKept = Dedup.incrementalNearDupExact(probe.toDF("doc_id", "text"),
+        fp, fv, "doc_id", "text", 0.9)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(extKept === freshKept && extKept === Seq(21L),
       "extended and rebuilt indexes must admit identically (20 is a near-dup of 11)")
+  }
+
+  test("dedup corpus read isolation: a batch dir without its commit is invisible, then read once") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.ext.Dedup
+    val base = tmp() + "/dedup-iso"
+    val ck = tmp() + "/dedup-iso-ck"
+    def mk(seed: String) =
+      (0 until 12).map(i => s"${seed}tok$i ${seed}word$i").mkString(" ")
+    def corpus() = Dedup.readCorpus(spark, base).get
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    val mem = MemoryStream[(Long, String)]
+    val docs = mem.toDF().toDF("doc_id", "text")
+    mem.addData((1L, mk("alpha")), (2L, mk("beta")))
+    StreamPipes.dedupIngest(docs, base, ck).awaitTermination()
+    assert(corpus() === Seq(1L, 2L))
+    // batch 1 crashed after writing its corpus dir, before its commit
+    Seq((3L, mk("gamma"))).toDF("doc_id", "text")
+      .write.parquet(s"$base/corpus/batch=1")
+    assert(corpus() === Seq(1L, 2L), "an uncommitted batch's docs must be invisible")
+    // the restarted stream re-runs batch 1 and commits it
+    mem.addData((3L, mk("gamma")))
+    StreamPipes.dedupIngest(docs, base, ck).awaitTermination()
+    assert(corpus() === Seq(1L, 2L, 3L), "the committed batch is read exactly once")
   }
 
   test("streaming dedup ingest with compaction: read set folds to one dir, admission and replay unchanged") {
@@ -245,6 +270,8 @@ class StreamingSpec extends SparkSuite {
     import graft.ext.Dedup
     def mk(n: Int, seed: String) =
       (0 until n).map(i => s"${seed}tok$i ${seed}word$i ${seed}item$i").mkString(" ")
+    def corpus(base: String) = Dedup.readCorpus(spark, base).get
+      .select($"doc_id").as[Long].collect().sorted.toSeq
     def run(base: String, ck: String, compactEvery: Int): Seq[Long] = {
       val mem = MemoryStream[(Long, String)]
       val docs = mem.toDF().toDF("doc_id", "text")
@@ -256,8 +283,7 @@ class StreamingSpec extends SparkSuite {
       step((1L, mk(12, "alpha")), (2L, mk(12, "beta")))
       step((10L, mk(12, "alpha") + " extratok"), (11L, mk(12, "gamma")))
       step((20L, mk(12, "delta")), (21L, mk(12, "gamma") + " moretok"))
-      Dedup.readCorpus(spark, base).get
-        .select($"doc_id").as[Long].collect().sorted.toSeq
+      corpus(base)
     }
     val base = tmp() + "/dedup-compact"
     val got = run(base, tmp() + "/dedup-compact-ck", compactEvery = 1)
@@ -267,47 +293,45 @@ class StreamingSpec extends SparkSuite {
     assert(got === twin && got === Seq(1L, 2L, 11L, 20L),
       "10 = cross-batch near-dup of 1, 21 = near-dup of 11 — both caught " +
         "through the persisted index across compactions")
-    // the read set folded to ONE dir (the point of the cadence), covered
-    // batch dirs and stale index snapshots were vacuumed (newest two kept
-    // — a replayed batch reads the version strictly below itself)
-    assert(Dedup.corpusDirs(spark, base) === Seq(s"$base/corpus/compact=2"))
-    def exists(p: String) = new java.io.File(p).exists
-    assert(!exists(s"$base/corpus/batch=0") && !exists(s"$base/corpus/batch=1"))
-    assert(!exists(s"$base/vocab_v0") && !exists(s"$base/postings_v0"),
-      "index snapshots older than the newest two are swept")
-    assert(exists(s"$base/vocab_v1") && exists(s"$base/vocab_v2"))
+    // the read set folded to ONE recorded compaction covering every batch,
+    // and only the current index version keeps its data
+    val state = s"$base/state"
+    val ops = VersionedTable.commits(spark, state).map(_._3)
+    assert(ops.last.matches("dedup compact=\\d+ upto=2"), s"log: $ops")
+    assert(VersionedTable.history(spark, state).filter($"available").count() === 1,
+      "superseded index versions are swept")
     // completed-trigger restart with no new data: a no-op
     val before = got
     val memIdle = MemoryStream[(Long, String)]
     StreamPipes.dedupIngest(memIdle.toDF().toDF("doc_id", "text"), base,
       tmp() + "/dedup-compact-ck2", compactEvery = 1).awaitTermination()
-    assert(Dedup.readCorpus(spark, base).get
-      .select($"doc_id").as[Long].collect().sorted.toSeq === before)
-    // REPLAY a covered batch (fresh checkpoint restarts at batchId 0, the
-    // dsir replay pattern): the rewritten batch=0 dir is COVERED by
-    // compact=2, so the read set must not double-count docs 1 and 2
+    assert(corpus(base) === before)
+    // REPLAY a covered batch (fresh checkpoint restarts at batchId 0):
+    // batch 0 is applied, so the replay is skipped — no new version, no
+    // double-count of docs 1 and 2
+    val v = VersionedTable.currentVersion(spark, state)
     val memR = MemoryStream[(Long, String)]
     memR.addData((1L, mk(12, "alpha")), (2L, mk(12, "beta")))
     StreamPipes.dedupIngest(memR.toDF().toDF("doc_id", "text"), base,
       tmp() + "/dedup-replay-ck", compactEvery = 0).awaitTermination()
-    assert(Dedup.readCorpus(spark, base).get
-      .select($"doc_id").as[Long].collect().sorted.toSeq === before,
-      "a replayed covered batch rewrites an invisible dir — no double-read")
+    assert(corpus(base) === before, "a replayed covered batch is skipped — no double-read")
+    assert(VersionedTable.currentVersion(spark, state) === v)
   }
 
   test("DSIR vacuum cadence: stale count snapshots swept, admissions unchanged") {
     implicit val sqlCtx = spark.sqlContext
+    import graft.ext.Dedup
+    def admitted(base: String) = Dedup.readCorpus(spark, base)
+      .fold(Set.empty[Long])(_.select($"doc_id").as[Long].collect().toSet)
     def run(base: String, ck: String, vacuumEvery: Int): Seq[Seq[Long]] = {
       val mem = MemoryStream[(Long, String, Boolean)]
       val docs = mem.toDF().toDF("doc_id", "text", "is_target")
       def step(data: (Long, String, Boolean)*): Seq[Long] = {
+        val before = admitted(base)
         mem.addData(data: _*)
         StreamPipes.dsirIngest(docs, base, ck,
           vacuumEvery = vacuumEvery).awaitTermination()
-        val b = new java.io.File(s"$base/corpus").listFiles()
-          .map(_.getName).filter(_.startsWith("batch=")).max
-        spark.read.parquet(s"$base/corpus/$b")
-          .select($"doc_id").as[Long].collect().sorted.toSeq
+        (admitted(base) -- before).toSeq.sorted
       }
       Seq(
         step((1L, "aa bb aa", true), (2L, "cc dd cc", false)),
@@ -316,18 +340,26 @@ class StreamingSpec extends SparkSuite {
     }
     val base = tmp() + "/dsir-vac"
     val got = run(base, tmp() + "/dsir-vac-ck", vacuumEvery = 1)
-    val twin = run(tmp() + "/dsir-novac", tmp() + "/dsir-novac-ck", 0)
+    val twinBase = tmp() + "/dsir-novac"
+    val twin = run(twinBase, tmp() + "/dsir-novac-ck", 0)
     assert(got === twin, "vacuum is a pure storage change, never an admission change")
-    def exists(p: String) = new java.io.File(p).exists
-    assert(!exists(s"$base/counts_v0"), "stale snapshot swept")
-    assert(exists(s"$base/counts_v1") && exists(s"$base/counts_v2"),
-      "newest two snapshots kept (replay reads the version strictly below itself)")
+    def counts(b: String) = VersionedTable.read(spark, s"$b/state").get
+      .select($"kind", $"b", $"c").as[(String, Int, Long)].collect().toSet
+    assert(counts(base) === counts(twinBase))
+    def available(b: String) =
+      VersionedTable.history(spark, s"$b/state").filter($"available").count()
+    assert(available(base) === 1, "stale count snapshots swept")
+    assert(available(twinBase) === 3, "without the cadence every snapshot stays")
   }
 
   test("streaming DSIR admission: scores against prior-batch counts only, replay-idempotent") {
     implicit val sqlCtx = spark.sqlContext
+    import graft.ext.Dedup
     val base = tmp() + "/dsir-ingest"
     val ck = tmp() + "/dsir-ingest-ck"
+    val state = s"$base/state"
+    def admitted() = Dedup.readCorpus(spark, base).get
+      .select($"doc_id", $"w").as[(Long, Double)].collect().toSet
     // tokens chosen for DISTINCT feature buckets (aa→6, bb→14, cc→22,
     // dd→30 under the portable hash) so count arithmetic is readable
     val mem = MemoryStream[(Long, String, Boolean)]
@@ -337,10 +369,9 @@ class StreamingSpec extends SparkSuite {
     // threshold 1.0 admits the whole bootstrap batch
     mem.addData((1L, "aa bb aa", true), (2L, "cc dd cc", false))
     StreamPipes.dsirIngest(docs, base, ck).awaitTermination()
-    val b0 = spark.read.parquet(s"$base/corpus/batch=0")
-    assert(b0.select($"doc_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
-    assert(b0.select($"w").as[Double].collect().forall(_ == 1.0),
-      "cold-start weights must be exactly 1.0")
+    val b0 = admitted()
+    assert(b0.map(_._1) === Set(1L, 2L))
+    assert(b0.forall(_._2 == 1.0), "cold-start weights must be exactly 1.0")
     // batch 1 — scored against batch 0's accumulated counts: doc 10
     // re-uses only TARGET tokens (ct == cb in its buckets ⇒ w = 1.0,
     // admitted); doc 11 re-uses only BACKGROUND tokens (ct = 0 ⇒
@@ -348,34 +379,31 @@ class StreamingSpec extends SparkSuite {
     // influences its own score — the online-estimator contract.
     mem.addData((10L, "aa bb aa bb", false), (11L, "cc dd cc dd", false))
     StreamPipes.dsirIngest(docs, base, ck).awaitTermination()
-    assert(spark.read.parquet(s"$base/corpus/batch=1")
-      .select($"doc_id").as[Long].collect().toSeq === Seq(10L),
+    assert((admitted() -- b0).map(_._1) === Set(10L),
       "in-domain doc admitted at 1.0, background-only doc rejected at 0.4")
     // counts accumulate over the WHOLE batch (rejected docs included):
     // bucket 6 (aa) saw 2 from batch 0 + 2 from doc 10
-    val c1 = spark.read.parquet(s"$base/counts_v1")
+    val c1 = VersionedTable.read(spark, state).get
     assert(c1.filter($"kind" === "b" && $"b" === 6).select($"c")
       .as[Long].head() === 4L)
     assert(c1.filter($"kind" === "t" && $"b" === 6).select($"c")
       .as[Long].head() === 2L, "target counts only from is_target rows")
-    // REPLAY batch 0 (fresh checkpoint, same state dir): scoring reads
-    // counts strictly BELOW the batch id — none for batch 0 — so the
-    // replay re-scores cold and rewrites bit-identical outputs even
-    // though counts_v0/v1 already exist
-    val before = spark.read.parquet(s"$base/corpus/batch=0")
-      .select($"doc_id", $"w").as[(Long, Double)].collect().toSet
+    // REPLAY batch 0 (fresh checkpoint, same state dir): batch 0 is
+    // applied, so the replay is skipped — admissions and counts unchanged,
+    // nothing double-counted
+    val before = admitted()
+    val v = VersionedTable.currentVersion(spark, state)
     val mem2 = MemoryStream[(Long, String, Boolean)]
     mem2.addData((1L, "aa bb aa", true), (2L, "cc dd cc", false))
     StreamPipes.dsirIngest(mem2.toDF().toDF("doc_id", "text", "is_target"),
       base, tmp() + "/dsir-replay-ck").awaitTermination()
-    assert(spark.read.parquet(s"$base/corpus/batch=0")
-      .select($"doc_id", $"w").as[(Long, Double)].collect().toSet === before,
-      "replayed batch must rewrite identical admissions")
-    assert(spark.read.parquet(s"$base/counts_v0")
+    assert(admitted() === before, "replayed batch must leave admissions unchanged")
+    assert(VersionedTable.currentVersion(spark, state) === v)
+    assert(VersionedTable.readVersion(spark, state, 0L)
       .select($"kind", $"b", $"c").as[(String, Int, Long)].collect().toSet
       === Set(("b", 6, 2L), ("b", 14, 1L), ("b", 22, 2L), ("b", 30, 1L),
         ("t", 6, 2L), ("t", 14, 1L)),
-      "replayed batch must rewrite identical counts")
+      "batch 0's counts are its own whole batch")
   }
 
   test("streaming ANN ingest: persisted index extends per batch, replay-idempotent, search == inline") {
@@ -906,7 +934,7 @@ class StreamingSpec extends SparkSuite {
         min($"l_quantity").as("min_val"),
         max($"l_quantity").as("max_val"))
     assert(streamed === canon(oneShot))
-    assert(IncrementalAgg.appliedBatches(spark, base) === Set(0L, 1L))
+    assert(VersionedTable.appliedBatches(spark, base) === Set(0L, 1L))
     // replay + empty restart are no-ops
     assert(!IncrementalAgg.update(spark, base,
       h1.toSeq.toDF("l_returnflag", "l_quantity"),
