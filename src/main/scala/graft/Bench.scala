@@ -35,30 +35,6 @@ object Bench {
     * a probe every 25 localizes drift to a segment. */
   val CalibEvery = 25
 
-  /** Per-query machine factors from interleaved calib probes: linear
-    * interpolation of the probe series at each query index, divided by
-    * the reference calib and clamped to [1, 3] (a fast machine never
-    * loosens a budget; past 3× the host is too degraded for timings to
-    * mean anything). Pure — unit-tested against synthetic drift in
-    * BenchCalibSpec, shared by BenchGuardSpec's per-segment budgets. */
-  def segmentFactors(probes: Seq[(Int, Double)], n: Int,
-      ref: Double = 0.30): IndexedSeq[Double] = {
-    require(probes.nonEmpty, "need at least one calib probe")
-    val sorted = probes.sortBy(_._1)
-    def calibAt(i: Int): Double = {
-      val before = sorted.filter(_._1 <= i)
-      val after = sorted.filter(_._1 > i)
-      (before.lastOption, after.headOption) match {
-        case (Some((i0, c0)), Some((i1, c1))) if i1 != i0 =>
-          c0 + (c1 - c0) * (i - i0).toDouble / (i1 - i0)
-        case (Some((_, c0)), _) => c0
-        case (None, Some((_, c1))) => c1
-        case _ => ref
-      }
-    }
-    (0 until n).map(i => math.min(3.0, math.max(1.0, calibAt(i) / ref)))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = driverSession()
@@ -91,7 +67,8 @@ object Bench {
     // back-to-back reps discards a one-off spike while an honest
     // regression shows in both reps; reps run adjacent so they see the
     // same machine state, and Housekeeping separates queries, not reps.
-    // calib probes interleave every CalibEvery queries (see segmentFactors)
+    // calib probes interleave every CalibEvery queries; the raw series is
+    // recorded as calib_series
     val probes = scala.collection.mutable.ArrayBuffer[(Int, Double)]((0, calibPre))
     val results = qs.toSeq.zipWithIndex.map { case ((name, fn), qi) =>
       if (qi > 0 && qi % CalibEvery == 0) probes += ((qi, calibrate(spark)))

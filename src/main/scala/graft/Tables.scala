@@ -14,11 +14,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Small dimension tables — always broadcast-join these (a few KB..MB even
-    * at 100 TB scale; TPC-H `nation`/`region` are constant-size).
-    */
-  val broadcastableDims: Set[String] = Set("region", "nation")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = name match {
     case "events" => events(spark, dir)
     case n        => spark.read.parquet(s"$dir/$n.parquet")

@@ -245,45 +245,23 @@ object AnnIndex {
     fs.makeQualified(path).toString
   }
 
-  private val BatchDir = "^batch=(\\d+)$".r
-  private val CompactDir = "^compact=(\\d+)$".r
-
   /** The manifest's current (batchId, shard) rows for generation `gen`.
-    * `None` = no manifest table exists at all (pre-manifest index or
-    * nothing ever ingested — callers that can, bootstrap via
-    * [[migrateManifest]]); `Some(empty)` = manifest exists but has no rows
-    * for this generation (fresh retrain awaiting backfill).
+    * `None` = no manifest table exists at all (nothing ever ingested);
+    * `Some(empty)` = manifest exists but has no rows for this generation
+    * (fresh retrain awaiting backfill).
     *
     * Replay identity is the BATCH ID, not the shard path: [[compact]]
     * replaces batch paths with a `compact=N` path but re-registers every
     * batchId it covers against that path, so an at-least-once streaming
     * replay of an already-compacted batch is still recognized and skipped
     * — dedup by path alone would re-ingest it alongside the compacted
-    * rows and double-count them. Rows from a pre-batchId manifest schema
-    * (plain (gen, shard)) are migrated in memory: `batch=N` dirs recover
-    * batchId N; a legacy `compact=V` dir gets the sentinel `-(V+1)` —
-    * unique, never a real batchId (those are ≥ 0), and honest about the
-    * covered set being unrecorded. */
+    * rows and double-count them. */
   private def allManifestRows(spark: SparkSession,
       base: String): Option[Seq[(Long, Long, String)]] =
     VersionedTable.read(spark, shardsPath(base)).map { df =>
-      val hasBatch = df.schema.fieldNames.contains("batch_id")
-      val rows =
-        if (hasBatch)
-          df.select(col("gen"), col("batch_id"), col("shard"))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-        else
-          df.select(col("gen"), col("shard"))
-            .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.map {
-              case (g, s) =>
-                val bid = new org.apache.hadoop.fs.Path(s).getName match {
-                  case BatchDir(b)   => b.toLong
-                  case CompactDir(v) => -(v.toLong + 1)
-                  case _             => Long.MinValue
-                }
-                (g, bid, qualify(spark, s))
-            }
-      rows.sortBy(r => (r._1, r._2, r._3))
+      df.select(col("gen"), col("batch_id"), col("shard"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+        .sortBy(r => (r._1, r._2, r._3))
     }
 
   private def manifestRows(spark: SparkSession, base: String,
@@ -318,36 +296,6 @@ object AnnIndex {
       operation)
   }
 
-  /** One-time migration for an index persisted before the manifest
-    * existed: shards on disk under `gen=<G>/` but no `shards/` table.
-    * Bootstraps the manifest from a directory listing of the current
-    * generation (the pre-manifest reader's own discovery rule) and commits
-    * it, so [[readIndex]] serves the existing data and [[vacuum]]'s
-    * liveness check sees it as live instead of sweeping it as garbage.
-    * No-op if a manifest already exists or the generation dir is empty. */
-  def migrateManifest(spark: SparkSession, base: String): Boolean = {
-    val (gen, _, _, _) = quantizer(spark, base)
-    migrateManifestGen(spark, base, gen)
-  }
-
-  private def migrateManifestGen(spark: SparkSession, base: String,
-      gen: Long): Boolean = {
-    if (manifestRows(spark, base, gen).isDefined) return false
-    val genDir = new org.apache.hadoop.fs.Path(genPath(base, gen))
-    val fs = genDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(genDir)) return false
-    val rows = fs.listStatus(genDir).toSeq.flatMap { st =>
-      st.getPath.getName match {
-        case BatchDir(b)   => Some((b.toLong, fs.makeQualified(st.getPath).toString))
-        case CompactDir(v) => Some((-(v.toLong + 1), fs.makeQualified(st.getPath).toString))
-        case _             => None
-      }
-    }
-    if (rows.isEmpty) return false
-    commitShards(spark, base, gen, rows.sortBy(r => (r._1, r._2)), "migrate")
-    true
-  }
-
   /** Encode `batch` ((id, vec)) against the CURRENT frozen quantizers,
     * write it as that generation's shard `batchId`, and register the shard
     * in the manifest — the incremental extension step. Idempotent under
@@ -365,7 +313,6 @@ object AnnIndex {
     // backfill (and any fresh batches) encode into the pending generation
     // while searches keep serving the promoted one.
     val (gen, cents, books, m, model) = resolve(spark, base, serving = false)
-    migrateManifestGen(spark, base, gen)
     val existing = manifestRows(spark, base, gen).getOrElse(Seq.empty)
     if (existing.exists(_._1 == batchId)) return gen
     val shard = qualify(spark, shardPath(base, gen, batchId))
@@ -388,11 +335,9 @@ object AnnIndex {
       .select(col("id"), col("cid"), col("codes"))
   }
 
-  /** The current generation's full code table (id, cid, codes), migrating
-    * a pre-manifest index on first read. */
+  /** The current generation's full code table (id, cid, codes). */
   def readIndex(spark: SparkSession, base: String): DataFrame = {
     val (gen, _, _, _) = quantizer(spark, base)
-    migrateManifestGen(spark, base, gen)
     readIndexGen(spark, base, gen)
   }
 
@@ -409,7 +354,6 @@ object AnnIndex {
   def search(spark: SparkSession, base: String, queries: DataFrame,
       k: Int, nProbe: Int = 2): DataFrame = {
     val (gen, cents, books, m, model) = resolve(spark, base, serving = true)
-    migrateManifestGen(spark, base, gen)
     val index = readIndexGen(spark, base, gen)
     // an OPQ generation's codes live in the rotated space — the query must
     // rotate through the SAME persisted model (same commit, never mixed)
@@ -417,16 +361,6 @@ object AnnIndex {
       Similarity.ivfPqResidualTopK(index, cents, books, queries, m, k, nProbe))(
       mdl => Similarity.ivfPqOpqTopK(index, cents, books, mdl, queries, m, k, nProbe))
   }
-
-  /** [[search]] + exact re-rank ([[Similarity.refineShortlist]]): the ADC
-    * shortlist is re-ranked by true squared-L2 against `corpus`'s raw
-    * vectors — fetched for shortlist rows only, never scanned. */
-  def searchRefined(spark: SparkSession, base: String, queries: DataFrame,
-      corpus: DataFrame, k: Int, nProbe: Int = 2, shortlist: Int = 50): DataFrame =
-    Similarity.refineShortlist(
-      search(spark, base, queries, shortlist, nProbe)
-        .select(col("qid"), col("id")),
-      queries, corpus, k)
 
   /** OPTIMIZE for the code table: rewrite the current generation's
     * manifested shards as `targetFiles` parquet files and atomically swap
@@ -446,7 +380,6 @@ object AnnIndex {
     // Compact where shards accrete: the latest generation (== serving
     // outside a retrain window; == the backfilling pending one inside it).
     val (gen, _, _, _) = latestQuantizer(spark, base)
-    migrateManifestGen(spark, base, gen)
     val rows = manifestRows(spark, base, gen).getOrElse(Seq.empty)
     val shards = rows.map(_._2).distinct.sorted
     if (shards.size <= 1) return 0
@@ -481,13 +414,12 @@ object AnnIndex {
   def vacuum(spark: SparkSession, base: String): Unit = {
     val (servingGen, _, _, _) = quantizer(spark, base)
     val (latestGen, _, _, _) = latestQuantizer(spark, base)
-    migrateManifestGen(spark, base, servingGen)
     // Liveness identity = the same fs-qualified string the manifest
     // stores, resolved PER GENERATION: serving and pending generations can
     // coexist mid-retrain, and each must be swept only against its own
-    // manifest rows. A generation with NO manifest rows (migration found
-    // nothing to list, or a raced retrain) is never swept — an empty live
-    // set would read as "everything is garbage" and delete live data.
+    // manifest rows. A generation with NO manifest rows (no shards/ table,
+    // or a raced retrain) is never swept — an empty live set would read as
+    // "everything is garbage" and delete live data.
     val liveByGen: Map[Long, Set[String]] =
       allManifestRows(spark, base).getOrElse(Seq.empty)
         .groupBy(_._1).map { case (g, rs) => g -> rs.map(_._3).toSet }

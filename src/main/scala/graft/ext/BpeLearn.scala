@@ -120,24 +120,12 @@ object BpeLearn {
     val words = docs.select(col(idCol).as("id"),
       explode(regexp_extract_all(lower(col(textCol)),
         lit("[a-z]+"), lit(0))).as("word"))
-    // native fused fold (r18) — bit-identical to [[encodeHof]]'s composed
-    // k-rank aggregate-HOF chain (spec-pinned), minus the per-symbol
-    // interpreted lambda allocations that dominated the encode scan
+    // native fused fold (r18) — bit-identical to the composed k-rank
+    // chain of [[applyMerge]] HOF folds (spec-pinned in BpeLearnSpec),
+    // minus the per-symbol interpreted lambda allocations that dominated
+    // the encode scan
     words.select(col("id"), col("word"),
       graft.functions.BpeEncodeWord.bpeEncodeWord(col("word"), merges)
         .as("tokens"))
-  }
-
-  /** Reference HOF formulation of [[encode]], kept for the native/HOF
-    * equality spec only — interpreted, do not use in hot paths. */
-  def encodeHof(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)]): DataFrame = {
-    val words = docs.select(col(idCol).as("id"),
-      explode(regexp_extract_all(lower(col(textCol)),
-        lit("[a-z]+"), lit(0))).as("word"))
-    val encoded = merges.foldLeft(split(col("word"), "")) {
-      case (c, (lhs, rhs)) => applyMerge(c, lhs, rhs)
-    }
-    words.select(col("id"), col("word"), encoded.as("tokens"))
   }
 }

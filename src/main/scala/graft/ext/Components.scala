@@ -6,10 +6,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Connected components over an undirected edge list — the dedup-clustering
-  * step: near-dup PAIRS ([[Dedup.prefixJaccardPairs]], [[Dedup
-  * .minhashNearDups]], [[Similarity.cosineNearDupPairs]]) become canonical
-  * GROUPS (component = min doc id reachable), from which one representative
-  * per group survives.
+  * step: near-dup PAIRS ([[Dedup.prefixJaccardPairs]],
+  * [[Dedup.minhashNearDupsPortable]], [[Similarity.cosineNearDupPairs]])
+  * become canonical GROUPS (component = min doc id reachable), from which
+  * one representative per group survives.
   *
   * Algorithm: min-label propagation with POINTER JUMPING — every node
   * starts labeled with its own id; each round (a) takes the min of its

@@ -12,12 +12,12 @@ import org.apache.spark.sql.functions._
   *  - Exact dedup is one hash groupBy on the (cheap, pre-computed) key —
   *    the canonical 100 TB dedup pass.
   *  - MinHash-LSH avoids the O(n²) pair explosion: signatures are computed
-  *    scan-side with higher-order functions (no UDF), candidates come from a
+  *    scan-side by a native expression (no UDF), candidates come from a
   *    self-equi-join on (band, bucket) — shuffle keyed on the bucket hash,
   *    so only colliding docs ever meet. Band count × rows bounds the explode
   *    factor.
-  *  - Exact Jaccard verifies candidates (or small blocked pair sets) —
-  *    array_intersect/union on distinct token sets.
+  *  - Exact Jaccard verifies candidates — native overlap counting on
+  *    distinct token sets.
   */
 object Dedup {
 
@@ -36,23 +36,6 @@ object Dedup {
       .otherwise(transform(
         sequence(lit(1), size(toks) - (w - 1)),
         i => concat_ws(" ", slice(toks, i, lit(w)))))
-
-  /** MinHash signature: k independent hash functions via seeded xxhash64;
-    * each signature entry is the min hash over the shingle set. */
-  def minhashSignature(shin: Column, k: Int): Column =
-    array((0 until k).map { seed =>
-      array_min(transform(shin, s => xxhash64(lit(seed), s)))
-    }: _*)
-
-  /** LSH banding: split the signature into `bands` equal slices; each band's
-    * hash is a bucket key. Docs sharing ANY band bucket become candidates. */
-  def lshBandHashes(sig: Column, k: Int, bands: Int): Column = {
-    val rowsPerBand = k / bands
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand))).as("bucket"))
-    }: _*)
-  }
 
   /** Exact Jaccard similarity of two distinct-token-set columns — native
     * overlap-counting expression (same exact values as the
@@ -79,8 +62,16 @@ object Dedup {
     * salting still held m²/chunks (quadratic in the postings). */
   val HotPairBudget: Long = 4L * 1024 * 1024
 
-  /** End-to-end MinHash-LSH near-dup candidate pairs, verified with exact
-    * Jaccard ≥ `threshold`. Output: (id_a, id_b, jaccard), id_a < id_b.
+  /** End-to-end MinHash-LSH near-dup candidate pairs on [[PortableHash]]'s
+    * modular-BIGINT family (token fold → shingle chain → k seeded mixes →
+    * band chain), verified with exact Jaccard ≥ `threshold`. Output:
+    * (id_a, id_b, jaccard), id_a < id_b. Every signature and bucket is
+    * re-derivable by an ANSI engine, so the FULL pair set (not just the
+    * verified-Jaccard semantics) is oracle-checkable (q31). The signature
+    * is the NATIVE fused [[graft.functions.PortableMinHashSig]] (one
+    * codegen'd pass; the Column composition is interpreted and
+    * CollapseProject clones it per seed — measured 4× q31's budget),
+    * spec-pinned bit-equal to the Column reference in `PortableHashRefs`.
     *
     * Shaped for scale:
     *  1. candidate pairs are integer-only — token arrays are NOT carried
@@ -92,39 +83,6 @@ object Dedup {
     *     maxBucketSize²/2; the standard LSH cap, trades bounded recall loss
     *     on pathological buckets for a hard cost ceiling.
     */
-  def minhashNearDups(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 32, bands: Int = 8, threshold: Double = 0.6,
-      maxBucketSize: Int = 500): DataFrame = {
-    val toksOf = df.select(
-      col(idCol).as("id"),
-      array_distinct(split(normalized(col(textCol)), " ")).as("toks"))
-    // the native fused expression shingles + hashes + folds all k minima in
-    // one pass (graft.functions.MinHashSig); banding still binds the
-    // signature as an attribute first so its 8 slices don't re-evaluate it
-    // checkpointed: the signature scan (the expensive part) feeds two
-    // separate plan branches — the oversized-bucket aggregate and the join
-    // probe side — which do NOT share an exchange (broadcast probe side
-    // never shuffles); without materialization the scan runs twice.
-    val buckets = df
-      .select(col(idCol).as("id"),
-        graft.functions.MinHashSig.minhashSig(split(normalized(col(textCol)), " "), k).as("sig"))
-      .select(col("id"), explode(lshBandHashes(col("sig"), k, bands)).as("bh"))
-      .barrier(eager = true)
-    capVerifyBuckets(toksOf, buckets, threshold, maxBucketSize)
-  }
-
-  /** [[minhashNearDups]] re-keyed to [[PortableHash]]'s modular-BIGINT
-    * family (token fold → shingle chain → k seeded mixes → band chain) —
-    * identical LSH plumbing and cost shape, but every signature and bucket
-    * is re-derivable by an ANSI engine, so the FULL pair set (not just the
-    * verified-Jaccard semantics) is oracle-checkable (q31). The xxhash64
-    * form stays the throughput path for persisted indexes
-    * ([[minhashBuckets]]); this one is the auditable path. The signature
-    * is the NATIVE fused [[graft.functions.PortableMinHashSig]] (one
-    * codegen'd pass; the Column composition is interpreted and
-    * CollapseProject clones it per seed — measured 4× q31's budget),
-    * spec-pinned bit-equal to [[PortableHash.minhashSignature]]. */
   def minhashNearDupsPortable(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 32, bands: Int = 8, threshold: Double = 0.6,
@@ -132,21 +90,16 @@ object Dedup {
     val toksOf = df.select(
       col(idCol).as("id"),
       array_distinct(split(normalized(col(textCol)), " ")).as("toks"))
+    // checkpointed: the signature scan (the expensive part) feeds two
+    // separate plan branches — the oversized-bucket aggregate and the join
+    // probe side — which do NOT share an exchange (broadcast probe side
+    // never shuffles); without materialization the scan runs twice.
     val buckets = df
       .select(col(idCol).as("id"),
         graft.functions.PortableHashSig.portableMinhashSig(
           split(normalized(col(textCol)), " "), k).as("sig"))
       .select(col("id"), explode(PortableHash.lshBands(col("sig"), k, bands)).as("bh"))
       .barrier(eager = true)
-    capVerifyBuckets(toksOf, buckets, threshold, maxBucketSize)
-  }
-
-  /** Shared LSH tail: degenerate-bucket cap → bucket self-join → pair
-    * dedup → exact-Jaccard verification. `buckets` must be (id, bh) with
-    * bh a struct key; `toksOf` (id, toks) with distinct token sets. */
-  private def capVerifyBuckets(
-      toksOf: DataFrame, buckets: DataFrame,
-      threshold: Double, maxBucketSize: Int): DataFrame = {
     // degenerate-bucket cap WITHOUT a window: bucket sizes come from a
     // map-side-combined groupBy (tiny output: one row per oversized bucket
     // — at most rows×bands/maxBucketSize of them), then a broadcast
@@ -200,92 +153,6 @@ object Dedup {
     Components.connectedComponents(
       df.select(col("id")), textPairs.unionByName(embPairs))
       .select(col("id"), col("comp").as("component"))
-  }
-
-  /** The banded MinHash BUCKET INDEX for a document set: (id, bh) rows,
-    * bh = (band, band-slice hash). This is the structure a growing corpus
-    * PERSISTS and maintains — [[incrementalNearDup]] probes it instead of
-    * re-signaturing existing data. */
-  def minhashBuckets(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 32, bands: Int = 8): DataFrame =
-    df.select(col(idCol).as("id"),
-        graft.functions.MinHashSig.minhashSig(split(normalized(col(textCol)), " "), k).as("sig"))
-      .select(col("id"), explode(lshBandHashes(col("sig"), k, bands)).as("bh"))
-
-  /** INCREMENTAL near-dup admission — [[incrementalExact]]'s contract
-    * lifted from exact keys to MinHash near-duplicates: an incoming batch
-    * is admitted against a growing corpus using the corpus's persisted
-    * bucket index ([[minhashBuckets]]), NEVER re-signaturing existing
-    * documents. Existing TEXT is read only for the candidate ids the
-    * bucket probe surfaces (a keyed lookup against `existing`, pruned by
-    * the join), so per-batch cost is O(batch + candidates), not O(corpus).
-    * OPT-IN cost ceiling: pass `maxBucketSize` to drop buckets larger than
-    * it on either side (the [[minhashNearDups]] degenerate-bucket cap) —
-    * bounded recall loss on boilerplate buckets in exchange for a hard
-    * pair-count ceiling. The default is UNCAPPED because capping changes
-    * admission results (docs whose only near-dup evidence sat in a dropped
-    * bucket get admitted); callers must choose that trade explicitly.
-    *
-    * A batch row is kept iff it is (a) not a verified near-dup (exact
-    * Jaccard ≥ `threshold`) of any existing doc, and (b) not the higher-id
-    * member of a verified within-batch pair (greedy keep-lowest-id, the
-    * [[graft.ext.Similarity.semanticDedup]] drop rule). Returns the kept
-    * incoming rows unchanged; union them into the corpus and their
-    * [[minhashBuckets]] into the index to complete the increment. */
-  def incrementalNearDup(
-      incoming: DataFrame, existing: DataFrame, existingBuckets: DataFrame,
-      idCol: String, textCol: String,
-      k: Int = 32, bands: Int = 8, threshold: Double = 0.6,
-      maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    def toksOf(df: DataFrame) = df.select(
-      col(idCol).as("id"),
-      array_distinct(split(normalized(col(textCol)), " ")).as("toks"))
-    val inBuckets = minhashBuckets(incoming, idCol, textCol, k, bands).barrier(eager = true)
-    val inToks = toksOf(incoming)
-    // Degenerate-bucket cap, mirroring [[minhashNearDups]]: one boilerplate
-    // bucket in the persisted index (or the batch) would make the probe
-    // quadratic in bucket size, contradicting the O(batch + candidates)
-    // contract. Index-side sizes are counted only over buckets the batch
-    // actually probes (semi-join on the batch's bucket keys), so the cap
-    // itself stays O(candidates), never O(index). When the caller keeps
-    // the uncapped default the whole cap subplan (two groupBy counts +
-    // two anti-joins) is elided — no cost is paid for a ceiling nobody
-    // asked for; callers that want the former hard ceiling pass the old
-    // value (500) explicitly and accept the admission-results change.
-    val probedOld = existingBuckets.select(col("bh"), col("id").as("old_id"))
-      .join(inBuckets.select(col("bh")).distinct(), Seq("bh"), "left_semi")
-    val (cappedOld, cappedIn) =
-      if (maxBucketSize == Int.MaxValue) (probedOld, inBuckets)
-      else {
-        val oversizedOld = probedOld.groupBy(col("bh")).agg(count(lit(1)).as("bsize"))
-          .filter(col("bsize") > maxBucketSize).select(col("bh"))
-        val oversizedIn = inBuckets.groupBy(col("bh")).agg(count(lit(1)).as("bsize"))
-          .filter(col("bsize") > maxBucketSize).select(col("bh"))
-        (probedOld.join(broadcast(oversizedOld), Seq("bh"), "left_anti"),
-          inBuckets.join(broadcast(oversizedIn), Seq("bh"), "left_anti"))
-      }
-    // vs existing: bucket probe -> verify candidates against existing text
-    val candOld = cappedIn
-      .join(cappedOld, Seq("bh"))
-      .select(col("id"), col("old_id")).distinct()
-    val dupOfOld = candOld
-      .join(inToks, Seq("id"))
-      .join(toksOf(existing).select(col("id").as("old_id"), col("toks").as("toks_old")),
-        Seq("old_id"))
-      .filter(jaccard(col("toks"), col("toks_old")) >= threshold)
-      .select(col("id")).distinct()
-    // within the batch: bucket-collide -> verify; drop the higher id
-    val withinDropped = cappedIn.select(col("bh"), col("id").as("id_a"))
-      .join(cappedIn.select(col("bh"), col("id").as("id_b")), Seq("bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-      .join(inToks.select(col("id").as("id_a"), col("toks").as("toks_a")), Seq("id_a"))
-      .join(inToks.select(col("id").as("id_b"), col("toks").as("toks_b")), Seq("id_b"))
-      .filter(jaccard(col("toks_a"), col("toks_b")) >= threshold)
-      .select(col("id_b").as("id")).distinct()
-    incoming
-      .join(dupOfOld.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-      .join(withinDropped.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
   }
 
   /** Persisted PREFIX-POSTINGS INDEX for EXACT incremental admission
@@ -352,16 +219,15 @@ object Dedup {
       .select(col(keyCol), col("tid"), (col("pos") + 1).as("p"), col("n"), col("itoks"))
   }
 
-  /** EXACT incremental near-dup admission — [[incrementalNearDup]]'s
-    * contract with a LOSSLESS candidate generator: the batch probes the
-    * corpus's persisted [[prefixIndex]] instead of LSH buckets. By the
+  /** EXACT incremental near-dup admission — [[incrementalExact]]'s
+    * contract lifted from exact keys to near-duplicates, with a LOSSLESS
+    * candidate generator: the batch probes the corpus's persisted
+    * [[prefixIndex]], never re-reading existing documents. By the
     * prefix lemma every pair with Jaccard ≥ `threshold` shares a token
     * inside both prefixes (under the index's fixed df order), so the
     * admission decision is EXACTLY "keep iff no existing doc and no
     * lower-id batch doc with Jaccard ≥ threshold" — brute-force-derivable
-    * by an oracle, zero recall loss. The LSH variant trades that
-    * exactness for constant-size signatures; prefer THIS one until
-    * signature size actually binds.
+    * by an oracle, zero recall loss.
     *
     * Scale shape, mirroring [[prefixJaccardPairs]]: identical-set
     * collapse on the batch (dup-heavy batches shrink quadratically; the
@@ -822,29 +688,6 @@ object Dedup {
     local.join(broadcast(offsets), Seq(pid))
       .withColumn(rankCol, (col("__offset") + col("__local_rn")).cast("long"))
       .drop(pid, "__local_rn", "__offset")
-  }
-
-  /** Blocked all-pairs exact Jaccard (kept for explicit block-scoped
-    * dedup, e.g. per-tenant): pairs are generated only within a blocking
-    * key. Quadratic PER BLOCK — only safe when the block key's cardinality
-    * grows with the data; for global near-dup detection prefer
-    * [[prefixJaccardPairs]] (lossless, never quadratic). */
-  def blockedJaccardPairs(
-      df: DataFrame, idCol: String, textCol: String, blockCol: String,
-      threshold: Double): DataFrame = {
-    val toks = array_distinct(split(normalized(col(textCol)), " "))
-    val p = df.select(col(blockCol).as("block"), col(idCol).as("id"), toks.as("toks"))
-      .withColumn("n", size(col("toks")).cast("double"))
-    val a = p.select(col("block"), col("id").as("id_a"), col("toks").as("toks_a"), col("n").as("n_a"))
-    val b = p.select(col("block"), col("id").as("id_b"), col("toks").as("toks_b"), col("n").as("n_b"))
-    a.join(b, Seq("block"))
-      .filter(col("id_a") < col("id_b"))
-      // size prefilter, implied by the threshold (J(A,B) ≥ t ⇒ t ≤ |A|/|B| ≤
-      // 1/t): skips the O(|A|+|B|) set ops for most pairs, no recall loss
-      .filter(col("n_a") >= col("n_b") * threshold && col("n_b") >= col("n_a") * threshold)
-      .withColumn("jaccard", jaccard(col("toks_a"), col("toks_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("block", "id_a", "id_b", "jaccard")
   }
 
   /** Edit-distance-1 pair detection via DELETION-NEIGHBORHOOD blocking

@@ -23,8 +23,11 @@ import org.apache.spark.sql.functions._
   *    with `(a·8191 + c) mod P`, init 7.
   *
   * All intermediates stay < 2^52 (max operand ~P·2654435761 ≈ 2.7·10^15),
-  * so 64-bit integer arithmetic never wraps on either engine. Everything
-  * here is a codegen'd Catalyst expression tree (no UDF).
+  * so 64-bit integer arithmetic never wraps on either engine. Signatures
+  * and SimHash bands are the native fused expressions in
+  * [[graft.functions.PortableHashSig]]; the band chain here is a
+  * codegen'd Catalyst expression tree (no UDF). The per-token Column
+  * forms of the family are test references (`PortableHashRefs`).
   */
 object PortableHash {
 
@@ -33,50 +36,9 @@ object PortableHash {
   val Chain = 8191L
   val Init = 7L
 
-  /** Base hash of one token: fold of codepoints, `(h·31 + c) mod P`.
-    * Caller must pre-filter empty tokens (Spark's `sequence(1, 0)` counts
-    * DOWN where DuckDB's `generate_series(1, 0)` is empty). */
-  def tokenHash(tok: Column): Column =
-    aggregate(
-      transform(sequence(lit(1), length(tok)),
-        i => ascii(tok.substr(i, lit(1))).cast("long")),
-      lit(Init),
-      (a, c) => pmod(a * lit(31L) + c, lit(P)))
-
   /** Chain fold of an array<long> of hashes: `(a·8191 + c) mod P`, init 7. */
   def chainFold(hs: Column): Column =
     aggregate(hs, lit(Init), (a, c) => pmod(a * lit(Chain) + c, lit(P)))
-
-  /** Seeded mix: `((h·(j+1)) mod P · 2654435761) mod P`, j ≥ 0. */
-  def mix(h: Column, j: Column): Column =
-    pmod(pmod(h * (j + lit(1L)), lit(P)) * lit(Mix), lit(P))
-
-  /** Whitespace tokens of the lower-trimmed text, empties dropped (the
-    * double-space guard both engines agree on). */
-  def tokens(text: Column): Column =
-    filter(split(lower(trim(text)), " "), t => length(t) > 0)
-
-  /** Per-token base hashes of `text`'s [[tokens]]. */
-  def tokenHashes(text: Column): Column =
-    transform(tokens(text), tokenHash(_))
-
-  /** w-shingle hashes from token hashes: each window of `w` consecutive
-    * token hashes chain-folded; docs shorter than `w` tokens contribute
-    * their whole token-hash sequence as one shingle. Hashing windows of
-    * TOKEN hashes (not re-folding characters per shingle) keeps the
-    * character pass O(text length) total. */
-  def shingleHashes(tokHashes: Column, w: Int = 3): Column =
-    when(size(tokHashes) < w, array(chainFold(tokHashes)))
-      .otherwise(transform(
-        sequence(lit(1), size(tokHashes) - (w - 1)),
-        i => chainFold(slice(tokHashes, i, lit(w)))))
-
-  /** MinHash signature: sig[j] = min over shingles of mix(shingle, j),
-    * j ∈ [0, k). */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    array((0 until k).map { j =>
-      array_min(transform(shingles, h => mix(h, lit(j.toLong))))
-    }: _*)
 
   /** LSH band buckets of a signature: `bands` equal slices, each
     * chain-folded to a bucket key; output array<struct<band, bucket>>. */
@@ -86,32 +48,5 @@ object PortableHash {
       struct(lit(b).as("band"),
         chainFold(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bucket"))
     }: _*)
-  }
-
-  /** Portable SimHash bit votes: 64 per-bit sums over all tokens, one
-    * array-accumulator fold (no 64× row explosion). Vote of token hash h
-    * on bit b is +1 iff mix(h, b) lands in the top half of [0, P).
-    * Bind the result as its own column before [[simhashPack]] so the
-    * fold evaluates once, not once per packed bit. */
-  def simhashVotes(tokHashes: Column): Column =
-    aggregate(
-      tokHashes,
-      typedLit(Seq.fill(64)(0L)),
-      (acc, h) => zip_with(
-        acc,
-        transform(sequence(lit(0), lit(63)),
-          b => when(mix(h, b.cast("long")) * 2 >= lit(P), lit(1L))
-            .otherwise(lit(-1L))),
-        (a, v) => a + v))
-
-  /** Pack 64 bit votes into FOUR 16-bit band keys (array<long>, each ∈
-    * [0, 65536)): bit b set iff votes[b] > 0 (zero-vote ties are 0). Band
-    * keys instead of one packed int64 keep bit 63 away from BIGINT sign
-    * overflow and give the 4×16 LSH banding its join keys directly. */
-  def simhashPack(votes: Column): Column = {
-    val pow2 = typedLit((0 until 16).map(i => 1L << i))
-    transform(sequence(lit(0), lit(3)), band =>
-      aggregate(sequence(lit(0), lit(15)), lit(0L), (acc, i) =>
-        acc + when(get(votes, band * 16 + i) > 0, get(pow2, i)).otherwise(lit(0L))))
   }
 }

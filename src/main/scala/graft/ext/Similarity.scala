@@ -34,13 +34,9 @@ object Similarity {
 
   /** Cosine via the native fused-loop expression ([[graft.functions
     * .CosineSimilarity]]) — bit-identical to `dot/(‖a‖·‖b‖)` in HOFs (same
-    * cast + accumulation order), minus the per-element lambda interpretation.
-    * [[cosineHof]] is kept as the reference formulation for equality tests. */
+    * cast + accumulation order), minus the per-element lambda interpretation. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorOps.cosineSimilarity(a, b)
-
-  def cosineHof(a: Column, b: Column): Column =
-    dot(a, b) / (l2Norm(a) * l2Norm(b))
 
   /** Exact top-k neighbors for each query vector.
     * `queries`: (qid, qvec); `corpus`: (id, vec). Self-pairs excluded.
@@ -57,71 +53,6 @@ object Similarity {
       .select(col("qid"), col("rank"), col("id"), col("sim"))
   }
 
-  /** MAXIMAL MARGINAL RELEVANCE re-rank (Carbonell & Goldstein 1998): pick
-    * `k` results from the exact top-`poolSize` candidate pool, greedily
-    * maximizing `λ·sim(q,c) − (1−λ)·max_{s∈selected} sim(c,s)` — the
-    * standard diversified-retrieval combiner (dedup'd RAG contexts, varied
-    * few-shot exemplars). λ=1 reduces to plain relevance ranking (pinned in
-    * MmrSpec); λ→0 maximizes novelty.
-    *
-    * Scale shape: the greedy loop runs over the BOUNDED candidate pool, not
-    * the corpus — one exact top-`poolSize` pass (or an ANN candidate source
-    * at 100 TB: swap [[bruteForceTopK]] for [[ivfFlatTopK]], same contract),
-    * then a poolSize²-per-query pair matrix and k tiny keyed rounds, each an
-    * equi-join + per-query window. Every round's pick is localCheckpointed
-    * so the k-round lineage stays linear; all rounds for all queries run in
-    * the same jobs (per-query parallelism, no driver-side loop over data).
-    *
-    * Determinism: cosine is the bit-stable fused expression; score ties
-    * break by id, so output is unique — MmrSpec pins it to a sequential
-    * reference implementation exactly. */
-  def mmrTopK(corpus: DataFrame, queries: DataFrame, k: Int, poolSize: Int,
-      lambda: Double): DataFrame = {
-    require(k >= 1 && poolSize >= k, s"need poolSize >= k >= 1, got k=$k pool=$poolSize")
-    require(lambda >= 0.0 && lambda <= 1.0, s"lambda in [0,1], got $lambda")
-    val pool = bruteForceTopK(corpus, queries, poolSize)
-      .join(corpus, "id")
-      .select(col("qid"), col("id"), col("sim"), col("vec"))
-      .barrier()
-    val pairs = pool.select(col("qid"), col("id").as("ia"), col("vec").as("va"))
-      .join(pool.select(col("qid").as("qb"), col("id").as("ib"), col("vec").as("vb")),
-        col("qid") === col("qb") && col("ia") =!= col("ib"))
-      .select(col("qid"), col("ia"), col("ib"), cosine(col("va"), col("vb")).as("psim"))
-      .barrier()
-
-    var selected: DataFrame = null
-    var remaining = pool.select(col("qid"), col("id"), col("sim"))
-    var round = 1
-    while (round <= k) {
-      val scored =
-        if (selected == null) // first pick: pure relevance (empty-set max term is 0)
-          remaining.withColumn("mmr", col("sim") * lambda)
-        else {
-          val div = pairs
-            .join(selected.select(col("qid").as("qs"), col("id").as("sel_id")),
-              col("qid") === col("qs") && col("ib") === col("sel_id"))
-            .groupBy(col("qid"), col("ia"))
-            .agg(max(col("psim")).as("div"))
-            .withColumnRenamed("ia", "id")
-          remaining.join(div, Seq("qid", "id"), "left")
-            .withColumn("mmr",
-              col("sim") * lambda - (lit(1.0) - lambda) * coalesce(col("div"), lit(0.0)))
-        }
-      val w = Window.partitionBy(col("qid")).orderBy(col("mmr").desc, col("id"))
-      val pick = scored
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("qid"), col("id"), col("sim"), col("mmr"),
-          lit(round.toLong).as("pick"))
-        .barrier()
-      selected = if (selected == null) pick else selected.unionByName(pick)
-      remaining = remaining.join(pick.select(col("qid"), col("id")),
-        Seq("qid", "id"), "left_anti")
-      round += 1
-    }
-    selected.select(col("qid"), col("pick"), col("id"), col("sim"), col("mmr"))
-  }
-
   /** One MMR candidate riding in the [[MmrAgg]] buffer. */
   private[ext] case class MmrCand(id: Long, sim: Double, vec: Seq[Float])
   /** One MMR selection: `pick` is the 1-based greedy round. */
@@ -130,7 +61,7 @@ object Similarity {
 
   /** Exactly [[graft.functions.CosineSimilarity]]'s accumulation (float →
     * double, one left-to-right fused loop) so the fused greedy is bit-equal
-    * to the round-based operator's pair expressions. */
+    * to a greedy over the native [[cosine]] pair expressions. */
   private def cosLocal(a: Seq[Float], b: Seq[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     val n = math.min(a.length, b.length)
@@ -141,10 +72,9 @@ object Similarity {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Per-query greedy MMR over the buffered candidate pool — the same
-    * selection rule as [[mmrTopK]] (λ-weighted marginal score, ties by id,
-    * first pick pure relevance), run entirely inside one aggregation
-    * buffer. */
+  /** Per-query greedy MMR over the buffered candidate pool (λ-weighted
+    * marginal score, ties by id, first pick pure relevance), run entirely
+    * inside one aggregation buffer. */
   private class MmrAgg(k: Int, lambda: Double)
       extends org.apache.spark.sql.expressions.Aggregator[MmrCand, Seq[MmrCand], MmrPicks] {
     def zero: Seq[MmrCand] = Nil
@@ -191,20 +121,31 @@ object Similarity {
       org.apache.spark.sql.Encoders.product[MmrPicks]
   }
 
-  /** [[mmrTopK]] fused into ONE query-keyed aggregation: the bounded
-    * candidate pool (poolSize rows × d floats per query — KBs) rides in a
-    * typed Aggregator buffer with map-side partial merge, and the k-round
-    * greedy runs in `finish` — no k scheduled joins, no localCheckpoint
-    * chain, one shuffle keyed on qid. This is the RIGHT shape precisely
-    * because MMR's pool is bounded by contract (30–100 candidates from the
-    * exact or ANN tier): the per-group state is O(poolSize·d), and pair
-    * similarities are computed on demand inside the greedy (≤ k·poolSize
-    * cosines) instead of materializing the poolSize² matrix. Bit-equal to
-    * [[mmrTopK]] (MmrSpec pins it): [[cosLocal]] reproduces the native
-    * expression's accumulation order, and the selection rule (λ-score,
-    * ties by id) is identical. Same 4-column output contract. Float
-    * corpora only — an array<double> corpus would be downcast here; use
-    * the round-based form there. */
+  /** MAXIMAL MARGINAL RELEVANCE re-rank (Carbonell & Goldstein 1998): pick
+    * `k` results from the exact top-`poolSize` candidate pool, greedily
+    * maximizing `λ·sim(q,c) − (1−λ)·max_{s∈selected} sim(c,s)` — the
+    * standard diversified-retrieval combiner (dedup'd RAG contexts, varied
+    * few-shot exemplars). λ=1 reduces to plain relevance ranking (pinned in
+    * MmrSpec); λ→0 maximizes novelty. Output (qid, pick, id, sim, mmr),
+    * `pick` the 1-based greedy round.
+    *
+    * Scale shape: the greedy runs over the BOUNDED candidate pool, not the
+    * corpus — one exact top-`poolSize` pass (or an ANN candidate source at
+    * 100 TB: swap [[bruteForceTopK]] for [[ivfFlatTopK]], same contract),
+    * then ONE query-keyed aggregation: the pool (poolSize rows × d floats
+    * per query — KBs) rides in a typed Aggregator buffer with map-side
+    * partial merge, and the k-round greedy runs in `finish` — no k
+    * scheduled joins, no localCheckpoint chain, one shuffle keyed on qid.
+    * This is the RIGHT shape precisely because MMR's pool is bounded by
+    * contract (30–100 candidates from the exact or ANN tier): the
+    * per-group state is O(poolSize·d), and pair similarities are computed
+    * on demand inside the greedy (≤ k·poolSize cosines) instead of
+    * materializing the poolSize² matrix.
+    *
+    * Determinism: [[cosLocal]] reproduces the native cosine expression's
+    * accumulation order and score ties break by id, so output is unique —
+    * MmrSpec pins it to a sequential reference greedy exactly. Float
+    * corpora only — an array<double> corpus is downcast here. */
   def mmrTopKFused(corpus: DataFrame, queries: DataFrame, k: Int, poolSize: Int,
       lambda: Double): DataFrame = {
     require(k >= 1 && poolSize >= k, s"need poolSize >= k >= 1, got k=$k pool=$poolSize")
@@ -227,32 +168,14 @@ object Similarity {
         col("p.sim").as("sim"), col("p.mmr").as("mmr"))
   }
 
-  /** Deterministic pseudo-random hyperplane component in [-1, 1): derived
-    * from (plane, dim) via xxhash64 so every executor materializes identical
-    * planes with zero driver state shipped. */
-  private def planeComponent(plane: Int, dim: Column): Column =
-    (pmod(xxhash64(lit(plane), dim), lit(2000001L)) - lit(1000000L)).cast("double") / 1000000.0
-
   /** Random-hyperplane (SimHash) signature of a vector: one sign bit per
     * plane, packed into a long — the LSH bucket key. Native fused expression
     * ([[graft.functions.HyperplaneSig]]): one primitive loop instead of
     * ~d×nPlanes interpreted HOF lambda evals per row (the corpus-bucketing
-    * bottleneck at scale). Bit-identical to [[hyperplaneSignatureHof]],
-    * proven in SimilaritySpec. */
+    * bottleneck at scale). Bit-identical to the HOF reference, proven in
+    * SimilaritySpec. */
   def hyperplaneSignature(vec: Column, nPlanes: Int, planeOffset: Int = 0): Column =
     graft.functions.HyperplaneSig.hyperplaneSig(vec, nPlanes, planeOffset)
-
-  /** Reference HOF formulation of [[hyperplaneSignature]], kept for the
-    * native/HOF equality test only — interpreted, do not use in hot paths. */
-  def hyperplaneSignatureHof(vec: Column, nPlanes: Int, planeOffset: Int = 0): Column =
-    (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(vec,
-          transform(sequence(lit(0), size(vec) - 1), d => planeComponent(planeOffset + p, d)),
-          (x, h) => x.cast("double") * h),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
 
   /** IVF-Flat approximate top-k — the second ANN scale path (coarse
     * quantization instead of hashing): every corpus vector is assigned to
@@ -500,13 +423,9 @@ object Similarity {
     * three-dot HOF formulation (each sum accumulates left-to-right in
     * doubles, the engine-portable recipe q33 proved bit-stable against
     * DuckDB's `list_dot_product`), minus the per-element lambda
-    * interpretation. [[sqDistHof]] is the reference formulation kept for
-    * the equality spec. */
+    * interpretation. */
   def sqDist(a: Column, b: Column): Column =
     graft.functions.VectorOps.sqL2Distance(a, b)
-
-  def sqDistHof(a: Column, b: Column): Column =
-    dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
 
   /** One Lloyd assignment pass: nearest centroid per corpus vector
     * (deterministic tiebreak: lowest centroid id). Centroid set is
@@ -1127,30 +1046,16 @@ object Similarity {
     * projection (the property that makes incremental extension trivial —
     * new vectors project identically forever).
     *
-    * One codegen'd projection scan, no shuffle, no UDF: d·dOut
-    * multiply-adds per row inside `transform`/`aggregate` HOFs.
+    * One projection scan, no shuffle, no UDF: d·dOut multiply-adds per
+    * row in one native fused loop.
     */
   def randomProject(vecs: DataFrame, idCol: String, vecCol: String,
       dOut: Int): DataFrame =
     vecs.select(col(idCol),
-      // native fused loop (r18) — bit-identical to [[randomProjectHof]],
-      // minus the d×dOut interpreted lambda evaluations per row that were
-      // the whole q133 wall (a zero-exchange projection scan)
+      // native fused loop (r18) — bit-identical to the HOF reference
+      // formulation (spec-pinned in SimilaritySpec), minus the d×dOut
+      // interpreted lambda evaluations per row that were the whole q133
+      // wall (a zero-exchange projection scan)
       graft.functions.RandomProjection.randomProjection(col(vecCol), dOut)
         .as("proj"))
-
-  /** Reference HOF formulation of [[randomProject]], kept for the
-    * native/HOF equality spec only — interpreted, do not use in hot
-    * paths. */
-  def randomProjectHof(vecs: DataFrame, idCol: String, vecCol: String,
-      dOut: Int): DataFrame =
-    vecs.select(col(idCol),
-      expr(
-        s"""transform(sequence(0, ${dOut - 1}), i ->
-            aggregate(sequence(0, size($vecCol) - 1), CAST(0 AS BIGINT),
-              (acc, j) -> acc
-                + CAST(floor(CAST(element_at($vecCol, j + 1) AS DOUBLE)
-                    * 1000000.0) AS BIGINT)
-                  * (1 - 2 * (((j * 1000003 + i) * 2654435761)
-                      % 1000000007 % 2))))""").as("proj"))
 }

@@ -11,9 +11,9 @@ import org.apache.spark.sql.types._
 /** Native fused random-hyperplane LSH signature: `nPlanes` sign bits packed
   * into a long, the ANN bucket key ([[graft.ext.Similarity.lshTopK]]).
   *
-  * Bit-identical to the composable HOF formulation
-  * ([[graft.ext.Similarity.hyperplaneSignatureHof]]): plane components are
-  * `(pmod(xxhash64(plane, dim), 2000001) - 1000000) / 1e6` and each
+  * Bit-identical to the composable HOF formulation (the test reference
+  * `graft.ext.SimilarityRefs`, pinned in SimilaritySpec): plane components
+  * are `(pmod(xxhash64(plane, dim), 2000001) - 1000000) / 1e6` and each
   * projection accumulates `vec(d) * component` left-to-right in doubles.
   * The HOF tree is interpreted (higher-order functions are CodegenFallback
   * in Spark 4.x) and pays ~d × nPlanes boxed lambda evaluations per row —

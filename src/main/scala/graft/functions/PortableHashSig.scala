@@ -19,11 +19,11 @@ import org.apache.spark.sql.types._
   * q39 at sf0.1 where this expression runs it in well under a second.
   * One pass over the token array, zero intermediate arrays, zero boxing.
   *
-  * Semantics are BIT-IDENTICAL to the Column forms
-  * ([[graft.ext.PortableHash.minhashSignature]] /
-  * [[graft.ext.PortableHash.simhashVotes]]+pack — spec-pinned in
-  * PortableHashSigSpec) and to the DuckDB oracle SQL: codepoint fold
-  * `(h·31+c) mod P` init 7 per non-empty token, chain fold
+  * Semantics are BIT-IDENTICAL to the Column forms (the MinHash signature
+  * and SimHash votes+pack references in the test tree's
+  * `graft.ext.PortableHashRefs`, spec-pinned in CodegenSpec) and to the
+  * DuckDB oracle SQL: codepoint fold `(h·31+c) mod P` init 7 per
+  * non-empty token, chain fold
   * `(a·8191+c) mod P` init 7, seeded mix `((h·(j+1)) mod P · 2654435761)
   * mod P`, P = 1000003. Empty tokens (runs of spaces) are skipped — the
   * same guard both engines apply before folding.

@@ -102,8 +102,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 /** Squared L2 distance, fused: ‖a‖² − 2a·b + ‖b‖² in one primitive pass.
   * Bit-identical to the HOF formulation `dot(a,a) - 2*dot(a,b) + dot(b,b)`
-  * ([[graft.ext.Similarity.sqDistHof]]) FOR EQUAL-LENGTH ARRAYS: each of
-  * the three sums accumulates left-to-right exactly as its own
+  * (the test reference in `graft.ext.SimilarityRefs`) FOR EQUAL-LENGTH
+  * ARRAYS: each of the three sums accumulates left-to-right exactly as its own
   * `aggregate(zip_with(...))` would, and the final combine is the same
   * three-term expression — so k-means stays exact-oracle-checkable while
   * the assignment scan runs a primitive loop inside WholeStageCodegen.

@@ -35,13 +35,6 @@ object Layout {
     }.reduce(_.bitwiseOR(_))
   }
 
-  def clusterZ2(df: DataFrame, numFiles: Int, a: Column, b: Column): DataFrame = {
-    val keyed = df.withColumn("__zkey", zorderKey2(a, b))
-    keyed.repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions(col("__zkey"))
-      .drop("__zkey")
-  }
-
   /** Small-file compaction (03:234): rewrite to `numFiles` outputs. */
   def compact(df: DataFrame, numFiles: Int): DataFrame = df.coalesce(numFiles)
 

@@ -854,9 +854,8 @@ object EmbedQueries {
     * over-fetches a 50-candidate shortlist per query, and q121's exact
     * re-rank stage (raw vectors fetched for shortlist rows ONLY via the
     * broadcast-pruned keyed join, never scanned) selects the final 10 by
-    * true squared-L2. QualityProbe measured this composition at recall@10
-    * 0.48 vs 0.28 unrefined before it had a catalog row; now the catalog
-    * query IS the measured artifact. Deterministic end-to-end ⇒ full
+    * true squared-L2 (recall@10 0.48 vs 0.28 unrefined on sf0.1, recorded
+    * in QUALITY.md). Deterministic end-to-end ⇒ full
     * oracle: DuckDB re-derives residual index, per-list ADC tables,
     * shortlist, and the exact re-rank. */
   val q123IvfPqResidualRefine: Q = Q(
@@ -1768,7 +1767,7 @@ object EmbedQueries {
       ORDER BY rrf DESC, id LIMIT 20
     """))
 
-  /** MMR DIVERSIFIED RETRIEVAL — [[Similarity.mmrTopK]] over the q33
+  /** MMR DIVERSIFIED RETRIEVAL — [[Similarity.mmrTopKFused]] over the q33
     * query set: exact top-30 candidate pool per query, then the greedy
     * λ=0.7 marginal-relevance re-rank down to 10. The iterative greedy
     * argmax is not SQL-expressible (each pick conditions on the previous
@@ -1778,11 +1777,9 @@ object EmbedQueries {
     * planted-duplicate test where MMR must skip the redundant cluster.
     * Scale: pool generation is the only corpus-sized step (swap in the
     * IVF×PQ candidate source at 100 TB — q196's pattern); the re-rank
-    * itself is data-independent. Runs the FUSED form
-    * ([[Similarity.mmrTopKFused]] — one qid-keyed aggregation, the greedy
-    * inside the Aggregator buffer; bit-equal to the round-based
-    * [[Similarity.mmrTopK]] per MmrSpec, ~5× less scheduling overhead
-    * than its k checkpointed join rounds). */
+    * itself is data-independent: one qid-keyed aggregation runs the
+    * greedy inside the Aggregator buffer (~5× less scheduling overhead
+    * than k checkpointed join rounds). */
   lazy val q217MmrRerank: Q = Q(
     "q217_mmr_rerank",
     (s, dir) => Similarity.mmrTopKFused(corpus(s, dir), queriesDf(s, dir),

@@ -629,10 +629,7 @@ object TextQueries {
     * sorted token arrays live in the index. The prefix candidate generator
     * is LOSSLESS, so the admission decision equals brute force ("keep iff
     * no existing doc and no lower-id batch doc with J ≥ 0.9") and the
-    * oracle is the plain all-pairs NOT EXISTS formulation. The LSH-bucket
-    * incremental variant ([[Dedup.incrementalNearDup]], engine-specific
-    * hashes ⇒ not SQL-expressible) stays the extreme-scale option,
-    * contract- and cap-tested in DedupSpec. */
+    * oracle is the plain all-pairs NOT EXISTS formulation. */
   val q102IncrementalNearDup: Q = Q(
     "q102_incremental_neardup",
     (s, dir) => {

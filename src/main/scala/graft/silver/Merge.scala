@@ -19,10 +19,7 @@ import org.apache.spark.sql.functions._
   * Scale notes: Delta's MERGE is itself a join + file rewrite; this is the
   * same plan without the transaction log. The anti-join shuffles both sides
   * on the key UNLESS the source (a micro-batch — usually small relative to
-  * the target) is broadcast; we hint that. For a partitioned target at 100 TB
-  * the rewrite should additionally be restricted to affected partitions by
-  * pre-filtering `target` on the source's partition values (dynamic file
-  * pruning done by hand) — see [[upsertPartitionPruned]].
+  * the target) is broadcast; we hint that.
   */
 object Merge {
 
@@ -48,18 +45,4 @@ object Merge {
     src.unionByName(target.join(broadcast(srcKeys), keys, "left_anti"))
   }
 
-  /** Partition-pruned variant: only target partitions whose `partCol` value
-    * occurs in the source are rewritten; the rest of the target is untouched
-    * (caller appends `untouched` unchanged or, with a partitioned sink,
-    * simply doesn't rewrite those directories).
-    * Returns (rewrittenPartitions, untouchedPartitions).
-    */
-  def upsertPartitionPruned(
-      target: DataFrame, source: DataFrame,
-      keys: Seq[String], partCol: String): (DataFrame, DataFrame) = {
-    val parts = source.select(partCol).distinct()
-    val affected = target.join(broadcast(parts), Seq(partCol), "left_semi")
-    val untouched = target.join(broadcast(parts), Seq(partCol), "left_anti")
-    (upsert(affected, source, keys), untouched)
-  }
 }

@@ -42,7 +42,7 @@ class BenchGuardSpec extends SparkSuite {
     // PER-SEGMENT re-probe (the r13 lesson — calib drifted 1.41× MID-run):
     // a single up-front factor goes stale over a ~194-query pass, so the
     // factor refreshes every Bench.CalibEvery guarded queries; min of the
-    // window's samples, same [1, 3] clamp as Bench.segmentFactors.
+    // window's samples, clamped to [1, 3].
     Bench.calibrate(spark) // pay the calibration plan's own JIT untimed
     var calibSamples = Seq.fill(3)(Bench.calibrate(spark))
     var machineFactor = math.min(3.0, math.max(1.0, calibSamples.min / 0.30))

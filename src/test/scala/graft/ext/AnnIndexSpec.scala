@@ -285,44 +285,38 @@ class AnnIndexSpec extends SparkSuite {
       "batchId dedup must survive compact-then-promote")
   }
 
-  test("pre-manifest index: readIndex migrates from disk; vacuum never sweeps an unmanifested generation") {
+  test("manifest-less index: vacuum never sweeps an unmanifested generation; readIndex fails loudly") {
     val base = tmp() + "/ann"
     val emb = Tables.load(spark, sf("e"), "embeddings")
     val corpus = emb.select($"vec_id".as("id"),
       $"embedding".cast("array<double>").as("vec"))
-    val queries = corpus.filter($"id" < 5)
-      .select($"id".as("qid"), $"vec".as("qvec"))
 
     AnnIndex.train(spark, base, corpus, nCentroids = 8, m = 4, ksub = 16)
     (0 until 2).foreach { b =>
       AnnIndex.extendBatch(spark, base, corpus.filter($"id" % 2 === b), b.toLong)
     }
-    val idx0 = AnnIndex.readIndex(spark, base)
-      .as[(Long, Long, Seq[Int])].collect().toSet
-    val s0 = AnnIndex.search(spark, base, queries, k = 10, nProbe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSet
-
-    // Simulate an index persisted BEFORE the manifest existed: shards on
-    // disk, no shards/ table. The old code's failure mode was readIndex
-    // throwing "no ingested shards" and vacuum (empty live set) deleting
-    // every current-generation shard — silent data loss.
+    val (gen, _, _, _) = AnnIndex.quantizer(spark, base)
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/shards"), true)
+    def shardFiles(): Set[String] = {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$base/index"), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSet
+    }
+    val before = shardFiles()
+    assert(before.exists(_.endsWith(".parquet")))
 
-    // vacuum on the manifest-less index: migration rebuilds the manifest
-    // from the generation's directory listing, so the shards read as live
+    // Lose the manifest: shards on disk, no shards/ table. An empty live
+    // set must not read as "everything is garbage".
+    fs.delete(new org.apache.hadoop.fs.Path(s"$base/shards"), true)
     AnnIndex.vacuum(spark, base)
-    assert(AnnIndex.readIndex(spark, base)
-      .as[(Long, Long, Seq[Int])].collect().toSet === idx0,
-      "migration must recover the full pre-manifest code table")
-    assert(AnnIndex.search(spark, base, queries, k = 10, nProbe = 2)
-      .as[(Long, Long, Long, Double)].collect().toSet === s0)
-    // the rebuilt manifest carries the recovered batchIds: replay dedup works
-    val v = VersionedTable.currentVersion(spark, s"$base/shards").get
-    AnnIndex.extendBatch(spark, base, corpus.filter($"id" % 2 === 0), 0L)
-    assert(VersionedTable.currentVersion(spark, s"$base/shards").get === v,
-      "batchIds recovered by migration must dedup replays")
+    assert(shardFiles() === before,
+      "vacuum must leave every shard file of a manifest-less generation on disk")
+
+    // No manifest, no rows: the read fails naming the index and the
+    // generation instead of returning a partial code table.
+    val err = intercept[IllegalStateException](AnnIndex.readIndex(spark, base))
+    assert(err.getMessage.contains(base) && err.getMessage.contains(s"generation $gen"),
+      err.getMessage)
   }
 
   test("two-phase retrain: search serves the old generation through backfill, the new one after promote, and never throws") {

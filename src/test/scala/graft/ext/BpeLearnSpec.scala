@@ -9,6 +9,20 @@ import org.apache.spark.sql.functions._
 class BpeLearnSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Column reference of [[BpeLearn.encode]]: every merge rule applied
+    * in rank order as one composed [[BpeLearn.applyMerge]] HOF fold.
+    * Interpreted — the native encode must equal it bit for bit. */
+  private def encodeHof(docs: org.apache.spark.sql.DataFrame, idCol: String,
+      textCol: String, merges: Seq[(String, String)]) = {
+    val words = docs.select(col(idCol).as("id"),
+      explode(regexp_extract_all(lower(col(textCol)),
+        lit("[a-z]+"), lit(0))).as("word"))
+    val encoded = merges.foldLeft(split(col("word"), "")) {
+      case (c, (lhs, rhs)) => BpeLearn.applyMerge(c, lhs, rhs)
+    }
+    words.select(col("id"), col("word"), encoded.as("tokens"))
+  }
+
   /** Serial reference: greedy merges over a word-frequency map with
     * overlapping pair counts and leftmost-first rewrite. */
   private def reference(words: Map[String, Long], k: Int): Seq[(String, String, Long)] = {
@@ -102,7 +116,7 @@ class BpeLearnSpec extends SparkSuite {
       ("e", "s"), ("es", "t"))
     val nat = BpeLearn.encode(docs, "doc_id", "text", merges)
       .as[(Long, String, Seq[String])].collect().toSet
-    val hof = BpeLearn.encodeHof(docs, "doc_id", "text", merges)
+    val hof = encodeHof(docs, "doc_id", "text", merges)
       .as[(Long, String, Seq[String])].collect().toSet
     assert(nat === hof)
   }

@@ -35,7 +35,7 @@ class DedupPropertySpec extends SparkSuite {
       val docs = texts.zipWithIndex.map { case (t, id) => (id.toLong, t) }
         .toDF("doc_id", "text")
       for (t <- Seq(0.4, 0.7, 0.9)) {
-        val truth = Dedup.blockedJaccardPairs(
+        val truth = DedupRefs.blockedJaccardPairs(
             docs.withColumn("one", lit(1)), "doc_id", "text", "one", t)
           .select("id_a", "id_b", "jaccard")
           .as[(Long, Long, Double)].collect().toSet

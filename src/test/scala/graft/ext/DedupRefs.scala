@@ -1,0 +1,32 @@
+package graft.ext
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import Dedup.{jaccard, normalized}
+
+/** Brute-force truth for [[Dedup]]'s lossless pair generators
+  * (DedupSpec, DedupPropertySpec). */
+object DedupRefs {
+
+  /** Blocked all-pairs exact Jaccard: pairs are generated only within a
+    * blocking key — quadratic PER BLOCK, so one constant block is the
+    * all-pairs answer. Output (block, id_a, id_b, jaccard), id_a < id_b. */
+  def blockedJaccardPairs(
+      df: DataFrame, idCol: String, textCol: String, blockCol: String,
+      threshold: Double): DataFrame = {
+    val toks = array_distinct(split(normalized(col(textCol)), " "))
+    val p = df.select(col(blockCol).as("block"), col(idCol).as("id"), toks.as("toks"))
+      .withColumn("n", size(col("toks")).cast("double"))
+    val a = p.select(col("block"), col("id").as("id_a"), col("toks").as("toks_a"), col("n").as("n_a"))
+    val b = p.select(col("block"), col("id").as("id_b"), col("toks").as("toks_b"), col("n").as("n_b"))
+    a.join(b, Seq("block"))
+      .filter(col("id_a") < col("id_b"))
+      // size prefilter, implied by the threshold (J(A,B) ≥ t ⇒ t ≤ |A|/|B| ≤
+      // 1/t): skips the O(|A|+|B|) set ops for most pairs, no recall loss
+      .filter(col("n_a") >= col("n_b") * threshold && col("n_b") >= col("n_a") * threshold)
+      .withColumn("jaccard", jaccard(col("toks_a"), col("toks_b")))
+      .filter(col("jaccard") >= threshold)
+      .select("block", "id_a", "id_b", "jaccard")
+  }
+}

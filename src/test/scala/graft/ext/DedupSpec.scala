@@ -30,14 +30,6 @@ class DedupSpec extends SparkSuite {
     assert(r.getDouble(1) === 0.0)
   }
 
-  test("minhash LSH finds exact and near dups, skips unrelated") {
-    val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", k = 32, bands = 8, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
-    assert(pairs.contains((1L, 2L)), "case dup must be found")
-    assert(pairs.contains((1L, 3L)), "near dup (8/10 shared tokens) must be found")
-    assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L), "unrelated doc must not pair")
-  }
-
   test("portable minhash LSH (q31's engine-portable hash family) matches the " +
       "xxhash form's semantics on exact/near/unrelated") {
     val pairs = Dedup.minhashNearDupsPortable(
@@ -51,10 +43,10 @@ class DedupSpec extends SparkSuite {
   test("portable hash family: empty tokens dropped, short docs single-shingle, " +
       "values within [0, P)") {
     val r = docs.limit(1).select(
-      PortableHash.tokenHashes(lit("a  b   c")).as("hs"), // double spaces
-      PortableHash.shingleHashes(PortableHash.tokenHashes(lit("a b")), 3).as("short"),
-      PortableHash.minhashSignature(
-        PortableHash.shingleHashes(PortableHash.tokenHashes(lit("x y z w")), 3), 8).as("sig"))
+      PortableHashRefs.tokenHashes(lit("a  b   c")).as("hs"), // double spaces
+      PortableHashRefs.shingleHashes(PortableHashRefs.tokenHashes(lit("a b")), 3).as("short"),
+      PortableHashRefs.minhashSignature(
+        PortableHashRefs.shingleHashes(PortableHashRefs.tokenHashes(lit("x y z w")), 3), 8).as("sig"))
       .head
     assert(r.getSeq[Long](0).length === 3, "empty tokens from runs of spaces must drop")
     assert(r.getSeq[Long](1).length === 1, "sub-w doc is one whole-sequence shingle")
@@ -74,7 +66,7 @@ class DedupSpec extends SparkSuite {
   test("prefix-filtered jaccard pairs are lossless vs brute-force all-pairs") {
     for (t <- Seq(0.5, 0.8)) {
       // brute force: single block over everything = true all-pairs answer
-      val truth = Dedup.blockedJaccardPairs(
+      val truth = DedupRefs.blockedJaccardPairs(
           docs.withColumn("one", lit(1)), "doc_id", "text", "one", t)
         .select("id_a", "id_b", "jaccard")
         .as[(Long, Long, Double)].collect().toSet
@@ -278,26 +270,6 @@ class DedupSpec extends SparkSuite {
     assert(got === Map(11L -> "brand new document", 13L -> "another fresh one"))
   }
 
-  test("incrementalNearDup: probes the persisted index, drops old/within dups, keeps fresh") {
-    val mk = (n: Int, seed: String) =>
-      (0 until n).map(i => s"$seed token$i word$i item$i").mkString(" ")
-    val existing = Seq(
-      (1L, mk(12, "alpha")),
-      (2L, mk(12, "beta"))
-    ).toDF("doc_id", "text")
-    val index = Dedup.minhashBuckets(existing, "doc_id", "text")
-    val incoming = Seq(
-      (10L, mk(12, "alpha")),                  // exact dup of existing 1 -> dropped
-      (11L, mk(12, "beta") + " extratok"),     // near-dup of existing 2 -> dropped
-      (12L, mk(12, "gamma")),                  // fresh -> kept (lowest of 12/13)
-      (13L, mk(12, "gamma")),                  // within-batch dup of 12 -> dropped
-      (14L, mk(12, "delta"))                   // fresh -> kept
-    ).toDF("doc_id", "text")
-    val kept = Dedup.incrementalNearDup(incoming, existing, index, "doc_id", "text")
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept === Seq(12L, 14L))
-  }
-
   test("incrementalNearDupExact: lossless — equals brute-force admission on testdata") {
     import org.apache.spark.sql.DataFrame
     val d = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
@@ -341,32 +313,6 @@ class DedupSpec extends SparkSuite {
     assert(got.nonEmpty, "testdata must contain fuzzy benchmark leakage")
   }
 
-  test("incrementalNearDup: degenerate-bucket cap bounds the probe on boilerplate") {
-    val mk = (n: Int, seed: String) =>
-      (0 until n).map(i => s"$seed token$i word$i item$i").mkString(" ")
-    // one boilerplate text repeated across the whole index -> every band
-    // bucket it occupies is a single giant bucket
-    val existing = (1L to 40L).map(i => (i, mk(12, "boiler")))
-      .toDF("doc_id", "text")
-    val index = Dedup.minhashBuckets(existing, "doc_id", "text")
-    val incoming = Seq(
-      (100L, mk(12, "boiler")),   // collides with the giant bucket
-      (101L, mk(12, "fresh"))     // fresh
-    ).toDF("doc_id", "text")
-    // cap smaller than the boilerplate bucket: the bucket is dropped, so
-    // the probe generates ZERO candidates from it (hard cost ceiling) and
-    // the boilerplate doc is admitted — the documented recall trade
-    val keptCapped = Dedup.incrementalNearDup(
-        incoming, existing, index, "doc_id", "text", maxBucketSize = 10)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(keptCapped === Seq(100L, 101L))
-    // cap above the bucket size: same result as before the cap existed
-    val keptLoose = Dedup.incrementalNearDup(
-        incoming, existing, index, "doc_id", "text", maxBucketSize = 500)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(keptLoose === Seq(101L))
-  }
-
   test("hybridDedup: text-only and embedding-only dups both land in their original's component") {
     val comp = graft.QueryCatalog.queries("q108_hybrid_dedup")(
         spark, "/root/testdata/sf0.001")
@@ -394,7 +340,7 @@ class DedupSpec extends SparkSuite {
   }
 
   test("blocked jaccard respects blocks") {
-    val out = Dedup.blockedJaccardPairs(docs, "doc_id", "text", "source", 0.5)
+    val out = DedupRefs.blockedJaccardPairs(docs, "doc_id", "text", "source", 0.5)
       .as[(String, Long, Long, Double)].collect()
     assert(out.forall(_._1 == "s1"), "cross-block pairs must not appear")
   }

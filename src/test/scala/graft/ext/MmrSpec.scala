@@ -3,12 +3,13 @@ package graft.ext
 import graft.{SparkSuite, Tables}
 import org.apache.spark.sql.functions._
 
-/** Pins [[Similarity.mmrTopK]] — the iterative greedy is not
-  * SQL-expressible, so q217 is rows-only at the driver and THIS spec is the
-  * correctness gate: bit-equality against a sequential reference greedy fed
-  * the operator's own pool/pair similarities, the λ=1 ≡ relevance-rank
-  * reduction, and a planted-duplicate scenario where diversification must
-  * visibly change the picks.
+/** Pins [[Similarity.mmrTopKFused]], the operator q217 ships — the
+  * iterative greedy is not SQL-expressible, so q217 is rows-only at the
+  * driver and THIS spec is the correctness gate: bit-equality against a
+  * sequential reference greedy fed the operator's own pool/pair
+  * similarities, the λ=1 ≡ relevance-rank reduction, a planted-duplicate
+  * scenario where diversification must visibly change the picks, and
+  * bit-equality with the round-based reference [[SimilarityRefs.mmrTopK]].
   */
 class MmrSpec extends SparkSuite {
   import spark.implicits._
@@ -48,7 +49,7 @@ class MmrSpec extends SparkSuite {
 
   test("mmrTopK equals the sequential reference greedy (λ=0.7)") {
     val k = 8; val poolSize = 20; val lambda = 0.7
-    val got = Similarity.mmrTopK(corpus, queries, k, poolSize, lambda)
+    val got = Similarity.mmrTopKFused(corpus, queries, k, poolSize, lambda)
       .select($"qid", $"pick", $"id")
       .as[(Long, Long, Long)].collect().toSeq
 
@@ -70,7 +71,7 @@ class MmrSpec extends SparkSuite {
 
   test("λ=1 reduces to plain relevance ranking") {
     val k = 10
-    val got = Similarity.mmrTopK(corpus, queries, k, poolSize = 25, lambda = 1.0)
+    val got = Similarity.mmrTopKFused(corpus, queries, k, poolSize = 25, lambda = 1.0)
       .select($"qid", $"pick", $"id").as[(Long, Long, Long)].collect().toSet
     val want = Similarity.bruteForceTopK(corpus, queries, k)
       .select($"qid", $"rank", $"id").as[(Long, Long, Long)].collect().toSet
@@ -94,7 +95,7 @@ class MmrSpec extends SparkSuite {
     assert(plain === Seq(10L, 11L),
       s"plain top-2 stays inside the duplicate cluster (ties by id), got $plain")
 
-    val mmr = Similarity.mmrTopK(c, q, k = 2, poolSize = 4, lambda = 0.3)
+    val mmr = Similarity.mmrTopKFused(c, q, k = 2, poolSize = 4, lambda = 0.3)
       .orderBy($"pick").select($"id").as[Long].collect().toSeq
     assert(mmr.head === plain.head, "first MMR pick is pure relevance")
     assert(mmr(1) === 20L,
@@ -104,7 +105,7 @@ class MmrSpec extends SparkSuite {
   test("fused aggregator form is bit-equal to the round-based operator") {
     val k = 8; val pool = 20
     for (lambda <- Seq(0.3, 0.7, 1.0)) {
-      val rounds = Similarity.mmrTopK(corpus, queries, k, pool, lambda)
+      val rounds = SimilarityRefs.mmrTopK(corpus, queries, k, pool, lambda)
         .select($"qid", $"pick", $"id", $"sim", $"mmr")
         .as[(Long, Long, Long, Double, Double)].collect().sorted.toSeq
       val fused = Similarity.mmrTopKFused(corpus, queries, k, pool, lambda)
@@ -116,7 +117,7 @@ class MmrSpec extends SparkSuite {
 
   test("output shape: k distinct picks per query, pick is 1..k") {
     val k = 6
-    val out = Similarity.mmrTopK(corpus, queries, k, poolSize = 15, lambda = 0.7)
+    val out = Similarity.mmrTopKFused(corpus, queries, k, poolSize = 15, lambda = 0.7)
       .select($"qid", $"pick", $"id").as[(Long, Long, Long)].collect().toSeq
     val byQ = out.groupBy(_._1)
     assert(byQ.size === 3)

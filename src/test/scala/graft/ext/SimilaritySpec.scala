@@ -56,7 +56,7 @@ class SimilaritySpec extends SparkSuite {
       .crossJoin(emb.select($"vec_id".as("ib"), $"embedding".as("b")).limit(20))
       .limit(2000)
     val diff = pairs.filter(
-      Similarity.cosine($"a", $"b") =!= Similarity.cosineHof($"a", $"b")).count()
+      Similarity.cosine($"a", $"b") =!= SimilarityRefs.cosineHof($"a", $"b")).count()
     assert(diff === 0, "native and HOF cosine must agree bitwise")
   }
 
@@ -96,7 +96,7 @@ class SimilaritySpec extends SparkSuite {
     for ((planes, off) <- Seq((4, 0), (8, 0), (12, 0), (12, 24))) {
       val diff = emb.filter(
         Similarity.hyperplaneSignature($"embedding", planes, off) =!=
-          Similarity.hyperplaneSignatureHof($"embedding", planes, off)).count()
+          SimilarityRefs.hyperplaneSignatureHof($"embedding", planes, off)).count()
       assert(diff === 0, s"native and HOF signatures must agree at nPlanes=$planes offset=$off")
     }
   }
@@ -196,7 +196,7 @@ class SimilaritySpec extends SparkSuite {
       .crossJoin(emb.filter($"vec_id" < 5).select($"embedding".as("b")))
     val diff = pairs.select(
         Similarity.sqDist($"a", $"b").as("native"),
-        Similarity.sqDistHof($"a", $"b").as("hof"))
+        SimilarityRefs.sqDistHof($"a", $"b").as("hof"))
       .filter($"native" =!= $"hof") // bit-exact: no tolerance
     assert(diff.count() === 0L)
   }
@@ -590,7 +590,7 @@ class SimilaritySpec extends SparkSuite {
     val df = vs.toDF("vec_id", "embedding")
     val nat = Similarity.randomProject(df, "vec_id", "embedding", dOut = 5)
       .as[(Long, Seq[Option[Long]])].collect().toMap
-    val hof = Similarity.randomProjectHof(df, "vec_id", "embedding", dOut = 5)
+    val hof = SimilarityRefs.randomProjectHof(df, "vec_id", "embedding", dOut = 5)
       .as[(Long, Seq[Option[Long]])].collect().toMap
     assert(nat === hof)
     assert(nat(3L).forall(_.isEmpty), "a null element must null every output sum")
@@ -599,7 +599,7 @@ class SimilaritySpec extends SparkSuite {
       .toDF("vec_id", "embedding")
     val natD = Similarity.randomProject(dd, "vec_id", "embedding", dOut = 5)
       .as[(Long, Seq[Long])].collect().toMap
-    val hofD = Similarity.randomProjectHof(dd, "vec_id", "embedding", dOut = 5)
+    val hofD = SimilarityRefs.randomProjectHof(dd, "vec_id", "embedding", dOut = 5)
       .as[(Long, Seq[Long])].collect().toMap
     assert(natD === hofD)
   }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.{SparkSuite, Tables}
-import graft.ext.Similarity
+import graft.ext.{Similarity, SimilarityRefs}
 import org.apache.spark.sql.functions._
 
 /** Proves the native expressions' `doGenCode` paths actually COMPILE and
@@ -34,7 +34,7 @@ class CodegenSpec extends SparkSuite {
         .crossJoin(emb.select($"vec_id".as("ib"), $"embedding".as("b")).limit(10))
         .limit(500)
       val diff = pairs.filter(
-        Similarity.cosine($"a", $"b") =!= Similarity.cosineHof($"a", $"b")).count()
+        Similarity.cosine($"a", $"b") =!= SimilarityRefs.cosineHof($"a", $"b")).count()
       assert(diff === 0)
     }
   }
@@ -46,7 +46,7 @@ class CodegenSpec extends SparkSuite {
         .crossJoin(emb.select($"vec_id".as("ib"), $"embedding".as("b")).limit(10))
         .limit(500)
       val diff = pairs.filter(
-        Similarity.sqDist($"a", $"b") =!= Similarity.sqDistHof($"a", $"b")).count()
+        Similarity.sqDist($"a", $"b") =!= SimilarityRefs.sqDistHof($"a", $"b")).count()
       assert(diff === 0)
     }
   }
@@ -56,7 +56,7 @@ class CodegenSpec extends SparkSuite {
       val emb = Tables.load(spark, dir, "embeddings").limit(100)
       val diff = emb.filter(
         Similarity.hyperplaneSignature($"embedding", 12) =!=
-          Similarity.hyperplaneSignatureHof($"embedding", 12)).count()
+          SimilarityRefs.hyperplaneSignatureHof($"embedding", 12)).count()
       assert(diff === 0)
     }
   }
@@ -133,7 +133,7 @@ class CodegenSpec extends SparkSuite {
   test("PortableMinHashSig codegen compiles and is bit-equal to the Column " +
       "composition (PortableHash.minhashSignature over shingle hashes)") {
     withForcedCodegen {
-      import graft.ext.PortableHash
+      import graft.ext.PortableHashRefs
       val docs = Tables.load(spark, dir, "documents")
         // adversarial extras: runs of spaces, sub-w docs, single token
         .select(lower(trim($"text")).as("t"))
@@ -141,10 +141,10 @@ class CodegenSpec extends SparkSuite {
       val toks = docs.select(split($"t", " ").as("toks"))
       val diff = toks.filter(
         PortableHashSig.portableMinhashSig($"toks", 32) =!=
-          PortableHash.minhashSignature(
-            PortableHash.shingleHashes(
+          PortableHashRefs.minhashSignature(
+            PortableHashRefs.shingleHashes(
               transform(filter($"toks", x => length(x) > 0),
-                PortableHash.tokenHash(_))), 32)).count()
+                PortableHashRefs.tokenHash(_))), 32)).count()
       assert(diff === 0)
     }
   }
@@ -152,16 +152,16 @@ class CodegenSpec extends SparkSuite {
   test("PortableSimHashBands codegen compiles and is bit-equal to the Column " +
       "composition (simhashVotes -> simhashPack)") {
     withForcedCodegen {
-      import graft.ext.PortableHash
+      import graft.ext.PortableHashRefs
       val docs = Tables.load(spark, dir, "documents")
         .select(lower(trim($"text")).as("t"))
         .unionAll(Seq("a  b   c", "one two", "solo").toDF("t"))
       val toks = docs.select(split($"t", " ").as("toks"))
       val diff = toks.filter(
         PortableHashSig.portableSimhashBands($"toks") =!=
-          PortableHash.simhashPack(PortableHash.simhashVotes(
+          PortableHashRefs.simhashPack(PortableHashRefs.simhashVotes(
             transform(filter($"toks", x => length(x) > 0),
-              PortableHash.tokenHash(_))))).count()
+              PortableHashRefs.tokenHash(_))))).count()
       assert(diff === 0)
     }
   }

@@ -5,7 +5,7 @@ import graft.plans.ScaleLint.BarrierSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic synthetic embedding corpus for scale probes: component
+/** Deterministic synthetic embedding corpus for ANN quality specs: component
   * (id, dim) is xxhash64-derived uniform in [-1, 1) — the
   * [[graft.ext.Similarity]] hyperplane recipe, so every executor (and every
   * run) materializes identical vectors with zero driver state, and corpus
@@ -43,8 +43,8 @@ object VecGen {
     * eigenvectors of a seeded symmetric matrix). Every PQ-style coordinate
     * slice of the result sees a cross-correlated blend of all scales —
     * the covariance shape OPQ's decorrelate-and-balance exists for, and
-    * the shared control corpus of QualityProbe's *_aniso rows and
-    * QualityGuardSpec's OPQ floor. Deterministic, zero driver state
+    * the control corpus of QualityGuardSpec's OPQ floor (QUALITY.md's
+    * *_aniso rows). Deterministic, zero driver state
     * beyond the d×d basis literal. */
   def correlatedClusteredVectors(spark: SparkSession, n: Long, d: Int,
       k: Int, spread: Double): DataFrame = {

@@ -4,8 +4,8 @@ import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Pins the synthetic corpus generators' distributional claims — the
-  * QualityProbe clustered control experiment and every ANN scale probe
-  * rest on them.
+  * clustered ANN fixtures of QualityGuardSpec and AnnIndexSpec rest on
+  * them.
   */
 class VecGenSpec extends SparkSuite {
   import spark.implicits._

@@ -175,24 +175,33 @@ class ScaleLintSpec extends SparkSuite {
     "q162_equidepth_hist", "q174_ks_binned", "q182_calibration_curve",
     "q186_theil_sen")
 
+  /** One build per catalog query serves both catalog lints: the logical
+    * check and the physical walk of the same DataFrame's executed plan.
+    * Per query: the construction error, or (logical, physical) findings. */
+  private lazy val catalogFindings
+      : Seq[(String, Either[String, (Seq[ScaleLint.Finding], Seq[ScaleLint.Finding])])] =
+    QueryCatalog.all.map { qq =>
+      val lints =
+        try {
+          val df = qq.fn(spark, dir)
+          Right((ScaleLint.check(df), ScaleLint.lintPhysical(df.queryExecution.executedPlan)))
+        } catch { case e: Throwable => Left(s"construction failed: ${e.getMessage}") }
+      qq.name -> lints
+    }
+
   test("the ENTIRE catalog passes the linter with zero errors; advice stays inside the pinned allowlist") {
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     val advice = scala.collection.mutable.ArrayBuffer[String]()
-    QueryCatalog.all.foreach { qq =>
-      val findings =
-        try ScaleLint.check(qq.fn(spark, dir))
-        catch { case e: Throwable =>
-          failures += s"${qq.name}: construction failed: ${e.getMessage}"
-          Nil
-        }
-      findings.foreach {
+    catalogFindings.foreach { case (name, lints) =>
+      lints.left.foreach(err => failures += s"$name: $err")
+      lints.toSeq.flatMap(_._1).foreach {
         case ScaleLint.Finding(rule, ScaleLint.Error, detail) =>
-          failures += s"${qq.name}: $rule - $detail"
+          failures += s"$name: $rule - $detail"
         case ScaleLint.Finding(rule, ScaleLint.Advice, _) =>
-          advice += s"${qq.name}: $rule"
+          advice += s"$name: $rule"
           val allowed = rule == "exact-percentile" &&
-            percentileAdviceAllowlist.contains(qq.name)
-          if (!allowed) failures += s"${qq.name}: advice $rule outside the pinned allowlist"
+            percentileAdviceAllowlist.contains(name)
+          if (!allowed) failures += s"$name: advice $rule outside the pinned allowlist"
       }
     }
     assert(failures.isEmpty,
@@ -336,20 +345,15 @@ class ScaleLintSpec extends SparkSuite {
   test("the ENTIRE catalog passes the PHYSICAL lint; advice stays inside the pinned allowlist (r18)") {
     val failures = scala.collection.mutable.ArrayBuffer[String]()
     val advice = scala.collection.mutable.ArrayBuffer[String]()
-    QueryCatalog.all.foreach { qq =>
-      val findings =
-        try ScaleLint.lintPhysical(qq.fn(spark, dir).queryExecution.executedPlan)
-        catch { case e: Throwable =>
-          failures += s"${qq.name}: construction failed: ${e.getMessage}"
-          Nil
-        }
-      findings.foreach { f =>
+    catalogFindings.foreach { case (name, lints) =>
+      lints.left.foreach(err => failures += s"$name: $err")
+      lints.toSeq.flatMap(_._2).foreach { f =>
         if (f.severity == ScaleLint.Error)
-          failures += s"${qq.name}: ${f.rule} - ${f.detail}"
+          failures += s"$name: ${f.rule} - ${f.detail}"
         else {
-          advice += s"${qq.name}: ${f.rule}"
-          if (!physicalAdviceAllowlist.contains((qq.name, f.rule)))
-            failures += s"${qq.name}: physical advice ${f.rule} outside the pinned allowlist (${f.detail.take(160)})"
+          advice += s"$name: ${f.rule}"
+          if (!physicalAdviceAllowlist.contains((name, f.rule)))
+            failures += s"$name: physical advice ${f.rule} outside the pinned allowlist (${f.detail.take(160)})"
         }
       }
     }

@@ -74,13 +74,4 @@ class SilverSpec extends SparkSuite {
     // one row per key survives; the min-by-non-key-columns row wins
     assert(got.toSeq === Seq((1L, "s1a"), (2L, "s2")))
   }
-
-  test("merge upsertPartitionPruned only rewrites affected partitions") {
-    val target = Seq((1L, "p1", "t1"), (2L, "p1", "t2"), (3L, "p2", "t3")).toDF("id", "part", "v")
-    val source = Seq((2L, "p1", "s2")).toDF("id", "part", "v")
-    val (rewritten, untouched) = Merge.upsertPartitionPruned(target, source, Seq("id"), "part")
-    assert(untouched.select("part").distinct().as[String].collect().toSeq === Seq("p2"))
-    val merged = rewritten.unionByName(untouched).as[(Long, String, String)].collect().sortBy(_._1)
-    assert(merged.toSeq === Seq((1L, "p1", "t1"), (2L, "p1", "s2"), (3L, "p2", "t3")))
-  }
 }
