@@ -41,14 +41,14 @@ object IncrementalAgg {
     * already applied (replay no-op). */
   def update(spark: SparkSession, path: String, batch: DataFrame,
       keys: Seq[String], valueCol: String, batchId: Long): Boolean =
-    VersionedTable.commitBatch(spark, path, "agg", batchId) {
+    VersionedTable.commitBatch(spark, path, "agg", batchId) { current =>
       val keyC = keys.map(col)
       val partial = batch.groupBy(keyC: _*).agg(
         count(lit(1)).as("n_rows"),
         sum(col(valueCol).cast(DecimalType(28, 2))).as("sum_val"),
         min(col(valueCol)).as("min_val"),
         max(col(valueCol)).as("max_val"))
-      val merged = VersionedTable.read(spark, path) match {
+      val merged = current match {
         case None => partial
         case Some(prior) => prior.unionByName(partial)
           .groupBy(keyC: _*).agg(

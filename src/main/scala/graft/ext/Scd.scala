@@ -180,11 +180,6 @@ object Scd {
   private def currentPath(path: String) = s"$path/current"
   private def closedRoot(path: String) = s"$path/closed"
 
-  /** BatchIds already folded into the dimension at `path` (commit-log
-    * metadata only — no data read). */
-  def appliedBatches(spark: SparkSession, path: String): Set[Long] =
-    VersionedTable.appliedBatches(spark, currentPath(path))
-
   /** Fold observation batch `batchId` into the PERSISTED SCD2 dimension
     * at `path`. Storage splits along the rows' own lifecycle so the write
     * cost matches the compute cost, O(|batch| + |keys|) per fold:
@@ -204,8 +199,8 @@ object Scd {
   def applyBatch(spark: SparkSession, path: String, batch: DataFrame,
       keyCols: Seq[String], tsCol: String, tieCol: String,
       attrCols: Seq[String], batchId: Long): Boolean =
-    VersionedTable.commitBatch(spark, currentPath(path), Stage, batchId) {
-      val collapsed = (VersionedTable.read(spark, currentPath(path)) match {
+    VersionedTable.commitBatch(spark, currentPath(path), Stage, batchId) { prior =>
+      val collapsed = (prior match {
         case None => scd2FromHistory(batch, keyCols, tsCol, tieCol, attrCols)
         case Some(cur) =>
           applyCollapsed(cur, batch, keyCols, tsCol, tieCol, attrCols)

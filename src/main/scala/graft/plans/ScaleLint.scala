@@ -91,6 +91,9 @@ object ScaleLint {
   def barrier(df: DataFrame, eager: Boolean = false): DataFrame = {
     val b = bounded(df.queryExecution.optimizedPlan)
     val out = df.localCheckpoint(eager)
+    val metrics = PlanMetrics.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case p => p.metrics.values.toSeq
+    }.flatten
     val guarded = out.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD
           if l.stats.sizeInBytes > StatsCap =>
@@ -105,10 +108,25 @@ object ScaleLint {
     guarded.queryExecution.analyzed.foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         barrierBounded.put(l.rdd.id, b)
+        barrierMetrics.put(l.rdd, metrics)
       case _ => ()
     }
     guarded
   }
+
+  private object PlanMetrics extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The SQL metric accumulators of each [[barrier]]'s pre-checkpoint plan,
+    * held while its checkpointed RDD is reachable. The first job that
+    * materializes a lazy barrier truncates the RDD's lineage, which held
+    * the last reference to those metrics; a sibling job still computing
+    * the same partitions (AQE submits independent stages together, e.g.
+    * q193's two consumers of one barrier) then reports updates for
+    * accumulators the ContextCleaner has already removed — the
+    * DAGScheduler logs `Failed to update accumulator` and drops them. */
+  private val barrierMetrics = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_],
+      Seq[org.apache.spark.sql.execution.metric.SQLMetric]]())
 
   /** [[barrier]] with a PINNED physical layout, auto-sized: hash-
     * repartition on `key`, sort within partitions, run `shape`, then

@@ -12,6 +12,16 @@ import org.apache.spark.sql.functions._
   */
 object DimQueries {
 
+  /** A table base in a fresh temp dir of its own, so concurrent calls never
+    * share one; the dir is deleted when the JVM exits (the filesystem's
+    * delete-on-exit, run as Hadoop closes its cached filesystems). */
+  private def scratchTable(s: org.apache.spark.sql.SparkSession, prefix: String): String = {
+    val dir = new org.apache.hadoop.fs.Path(
+      "file", null, java.nio.file.Files.createTempDirectory(prefix).toString)
+    dir.getFileSystem(s.sparkContext.hadoopConfiguration).deleteOnExit(dir)
+    s"$dir/t"
+  }
+
   /** SCD TYPE 2 DIMENSION BUILD ([[graft.ext.Scd.scd2FromHistory]]): each
     * customer's order-priority history collapsed into version rows with
     * `[effective_from, effective_to)` validity intervals, dense per-key
@@ -61,18 +71,14 @@ object DimQueries {
     * folding three disjoint fact batches into a versioned aggregate table
     * — each fold touches only its batch + the |keys|-row aggregate, never
     * re-reads applied history — then read back with avg derived
-    * exact-sum/exact-count. The artifact is wiped and rebuilt every call
-    * so the measured time IS the three-fold maintenance cost; mergeable
-    * decimal partials make the result bit-identical to the one-shot
-    * GROUP BY the oracle runs. */
+    * exact-sum/exact-count. The artifact is built fresh in its own
+    * [[scratchTable]] every call so the measured time IS the three-fold
+    * maintenance cost; mergeable decimal partials make the result
+    * bit-identical to the one-shot GROUP BY the oracle runs. */
   val q135IncrementalAgg: Q = Q(
     "q135_incremental_agg",
     (s, dir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_incragg_v1_${
-        new java.io.File(dir).getName}"
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
+      val base = scratchTable(s, "graft-incragg")
       val li = t(s, dir, "lineitem")
       (0L until 3L).foreach { b =>
         IncrementalAgg.update(s, base,
@@ -176,7 +182,7 @@ object DimQueries {
     "q168_cdc_diff",
     (s, dir) => {
       import graft.sources.VersionedTable
-      val base = java.nio.file.Files.createTempDirectory("graft-cdc").toString + "/t"
+      val base = scratchTable(s, "graft-cdc")
       val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
       val v0 = o.filter(col("o_orderkey") % 7 =!= 0)
       val v1 = o.filter(col("o_orderkey") % 5 =!= 0)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import java.nio.charset.StandardCharsets
@@ -18,18 +18,20 @@ import java.nio.charset.StandardCharsets
   *
   * Commit protocol: data first (`v<N>/`), then the marker body is written to
   * a temp file and moved into place with `FileContext.rename(tmp, marker,
-  * Rename.NONE)` — atomic + fail-if-destination-exists on HDFS; on local FS
-  * an exists-check-then-rename (see [[createMarker]] for the caveats,
-  * including the s3a copy-based-rename one). Either way a rename-path marker
-  * is content-complete before it is observable — unlike a plain
-  * create(overwrite=false), which commits an EMPTY marker the moment it is
-  * created, so a crash mid-write would leave a marker with no metadata.
-  * `commits()` skips zero-length markers (possible only on FileSystems
-  * without a FileContext binding, where the create-then-write fallback is
-  * used) and [[createMarker]] deletes them before retrying. The
-  * current version is the max committed marker — there is NO pointer file
-  * to swap, hence no window where a concurrent reader can observe the table
-  * as missing (the failure mode of a delete-then-rename `_CURRENT` scheme).
+  * Rename.NONE)` — the one commit path, so a marker is content-complete
+  * before it is observable. It needs the table filesystem's
+  * AbstractFileSystem binding (`fs.AbstractFileSystem.<scheme>.impl`; local,
+  * HDFS and s3a have one), and a commit to a filesystem without one fails
+  * naming the table base (see [[createMarker]] for what the rename
+  * guarantees on each). The current version is the max committed marker —
+  * there is NO pointer file to swap, hence no window where a concurrent
+  * reader can observe the table as missing (the failure mode of a
+  * delete-then-rename `_CURRENT` scheme). `commits()` ignores a zero-length
+  * marker: no commit of this table writes one, so it is outside input
+  * carrying no metadata, and committing over it fails until it is removed.
+  * Each operation reads the log once — one listing of the base plus one
+  * open per committed marker — and derives the current version, the
+  * applied batches and the latest compaction from that read.
   * Markers are retained by [[vacuum]] (only old DATA is dropped), so
   * [[history]] survives like Delta's log does. Single concurrent WRITER
   * assumed (like Delta without a coordination service); readers unlimited.
@@ -38,14 +40,12 @@ object VersionedTable {
 
   private val MarkerPrefix = "_commit_v"
 
-  /** Staleness gate for crash-residue cleanup (zero-length markers, orphaned
-    * `_tmp_commit_v*` staging files). On the create-then-write fallback path a
-    * LIVE committer's marker is legitimately zero-length between create() and
-    * write(), and a staging temp is legitimately present between temp-write
-    * and rename — so residue is only deleted once it is older than this
-    * window. Bounds the damage if the documented single-writer assumption is
-    * ever violated (e.g. a separately scheduled maintenance job running
-    * vacuum concurrently with a committer). */
+  /** Staleness gate for the orphaned `_tmp_commit_v*` staging files that
+    * [[vacuum]] sweeps: a LIVE committer's temp is legitimately present
+    * between temp-write and rename, so a temp is only deleted once it is
+    * older than this window. Bounds the damage if the documented
+    * single-writer assumption is ever violated (e.g. a separately scheduled
+    * maintenance job running vacuum concurrently with a committer). */
   private[sources] val ResidueStalenessMs: Long = 5L * 60 * 1000
 
   private def fs(spark: SparkSession, base: String): FileSystem =
@@ -56,7 +56,7 @@ object VersionedTable {
     * modification times stamped by the storage layer (object store / NFS /
     * HDFS namenode); with a skewed driver clock a `System.currentTimeMillis`
     * comparison can fire early (deleting a live committer's in-flight residue)
-    * or lag forever (never healing). Probing costs one tiny create+stat+delete
+    * or lag forever (never sweeping). Probing costs one tiny create+stat+delete
     * and is only done on the residue paths, never per commit. Falls back to
     * the driver clock if the probe cannot be written (read-only FS). */
   private def storageNowMs(f: FileSystem, base: String): Long = {
@@ -73,37 +73,48 @@ object VersionedTable {
 
   def versionPath(base: String, v: Long): String = s"$base/v$v"
 
+  /** A committed version: (version, committedAtMs, operation). */
+  private type Commit = (Long, Long, String)
+
+  /** The one listing of `base` an operation makes (empty if it does not exist). */
+  private def list(f: FileSystem, base: String): Seq[FileStatus] =
+    try f.listStatus(new Path(base)).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** The committed markers among `entries`, ascending. A zero-length marker
+    * is not a commit: its metadata never landed. */
+  private def markers(entries: Seq[FileStatus]): Seq[(Long, FileStatus)] =
+    entries.filter(st => st.getPath.getName.startsWith(MarkerPrefix) && st.getLen > 0)
+      .map(st => (st.getPath.getName.drop(MarkerPrefix.length).toLong, st))
+      .sortBy(_._1)
+
   /** All committed versions with metadata, ascending: (version, committedAtMs,
-    * operation). Driver-side listing of one directory — metadata-scale. */
+    * operation): one listing of the base plus one open per committed
+    * marker. */
   def commits(spark: SparkSession, base: String): Seq[(Long, Long, String)] = {
     val f = fs(spark, base)
-    val basePath = new Path(base)
-    if (!f.exists(basePath)) return Seq.empty
-    f.listStatus(basePath).toSeq
-      .filter(st => st.getPath.getName.startsWith(MarkerPrefix))
-      // zero-length marker = a crashed create-then-write fallback committer;
-      // its metadata never landed, so it is not a commit
-      .filter(_.getLen > 0)
-      .map { st =>
-        val v = st.getPath.getName.drop(MarkerPrefix.length).toLong
-        val in = f.open(st.getPath)
-        val body =
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-          finally in.close()
-        val lines = body.split("\n", -1)
-        val at = if (lines.length > 0 && lines(0).trim.nonEmpty) lines(0).trim.toLong else 0L
-        val op = if (lines.length > 1) lines(1).trim else "commit"
-        (v, at, op)
-      }
-      .sortBy(_._1)
+    markers(list(f, base)).map { case (v, st) =>
+      val in = f.open(st.getPath)
+      val body =
+        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
+        finally in.close()
+      val lines = body.split("\n", -1)
+      val at = if (lines.length > 0 && lines(0).trim.nonEmpty) lines(0).trim.toLong else 0L
+      val op = if (lines.length > 1) lines(1).trim else "commit"
+      (v, at, op)
+    }
   }
 
   def currentVersion(spark: SparkSession, base: String): Option[Long] =
     commits(spark, base).lastOption.map(_._1)
 
+  /** The current version of a log already read. */
+  private def snapshot(spark: SparkSession, base: String, log: Seq[Commit]): Option[DataFrame] =
+    log.lastOption.map(c => readVersion(spark, base, c._1))
+
   /** Snapshot read of the current version (None if never committed). */
   def read(spark: SparkSession, base: String): Option[DataFrame] =
-    currentVersion(spark, base).map(v => spark.read.parquet(versionPath(base, v)))
+    snapshot(spark, base, commits(spark, base))
 
   /** Read a specific historical version (time-travel analogue, M1).
     * Fails if that version's data was [[vacuum]]ed. */
@@ -113,8 +124,13 @@ object VersionedTable {
   /** Write `df` as the next version, then commit its marker (data before
     * marker: a reader that sees the marker always sees complete data). */
   def commit(spark: SparkSession, base: String, df: DataFrame,
-      operation: String = "commit"): Long = {
-    val next = currentVersion(spark, base).map(_ + 1).getOrElse(0L)
+      operation: String = "commit"): Long =
+    commitAfter(spark, base, commits(spark, base), df, operation)
+
+  /** [[commit]] as the version after `log`, the log the caller already read. */
+  private def commitAfter(spark: SparkSession, base: String, log: Seq[Commit],
+      df: DataFrame, operation: String): Long = {
+    val next = log.lastOption.fold(0L)(_._1 + 1)
     df.write.mode("overwrite").parquet(versionPath(base, next))
     createMarker(spark, base, next, operation)
     next
@@ -123,73 +139,43 @@ object VersionedTable {
   /** Create the commit marker for version `v` — fails if it already exists,
     * and is only ever observable with its full body: the body goes to a temp
     * file first, then `FileContext.rename(Rename.NONE)` moves it into place.
-    * On HDFS that rename is atomic + fail-on-existing-destination; on the
-    * local FS it is an exists-check-then-rename (a theoretical two-committer
-    * race window remains, acceptable under the single-writer assumption);
-    * on object stores like s3a the AbstractFileSystem binding exists but
-    * rename is copy-based and non-atomic — the marker protocol there is
-    * best-effort, like Delta without a LogStore coordination service. It
-    * still beats plain create(overwrite=false)+write, which commits an
-    * EMPTY marker the instant it is created. A zero-length marker (crashed
-    * create-then-write fallback committer) is provably residue — rename-path
-    * markers are content-complete before they exist — so it is deleted and
-    * the commit retried rather than wedging the version forever. The
-    * self-heal is age-gated ([[ResidueStalenessMs]]): on the fallback path a
-    * LIVE committer's marker is zero-length between create() and write(), and
-    * deleting it mid-write would let two racing committers both "succeed" — a
-    * window the old fail-fast exists-check refused. A fresh zero-length
-    * marker therefore still fails the commit; only stale residue is healed.
+    * That rename needs the filesystem's AbstractFileSystem binding; without
+    * one the commit fails naming the table base. On HDFS the rename is
+    * atomic + fail-on-existing-destination; on the local FS it is an
+    * exists-check-then-rename (a theoretical two-committer race window
+    * remains, acceptable under the single-writer assumption); on object
+    * stores like s3a it is copy-based and non-atomic — the marker protocol
+    * there is best-effort, like Delta without a LogStore coordination
+    * service. An existing marker — a racing committer's, or a zero-length
+    * one that `commits()` ignores — fails the commit with the marker's path.
     * Package-visible so the guard is testable without racing two Spark
     * write jobs over one data directory. */
   private[sources] def createMarker(
       spark: SparkSession, base: String, v: Long, operation: String): Unit = {
-    val f = fs(spark, base)
     val marker = markerPath(base, v)
-    val body = s"${System.currentTimeMillis()}\n$operation".getBytes(StandardCharsets.UTF_8)
-    def failExists(e: java.io.IOException) = new java.io.IOException(
-      s"commit marker for $base v$v already exists (concurrent writer?)", e)
-    // Self-heal crashed-committer residue: a zero-length marker was never a
-    // commit (commits() skips it), but it would make the exists-checks below
-    // refuse the same version on every retry. Data is always written before
-    // markers, so deleting it can never orphan committed data.
-    val existing = try Some(f.getFileStatus(marker))
-      catch { case _: java.io.FileNotFoundException => None }
-    existing.foreach { st =>
-      if (st.getLen == 0L) {
-        // Zero-length = crashed create-then-write fallback committer, not a
-        // commit. Age it against the STORAGE clock (same clock that stamped
-        // the mtime) so driver clock skew can neither heal a live committer's
-        // marker early nor block healing forever.
-        val ageMs = storageNowMs(f, base) - st.getModificationTime
-        if (ageMs > ResidueStalenessMs) f.delete(marker, false)
-        else throw new java.io.IOException(
-          s"commit marker for $base v$v is zero-length crash residue aged " +
-            s"${ageMs / 1000}s; retries self-heal once it is older than the " +
-            s"${ResidueStalenessMs / 1000}s staleness window (or delete $marker " +
-            "manually if the crashed committer is known dead)")
-      } else throw failExists(new java.io.IOException(marker.toString))
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fcOpt =
-      try Some(org.apache.hadoop.fs.FileContext.getFileContext(marker.toUri, conf))
-      catch { case _: org.apache.hadoop.fs.UnsupportedFileSystemException => None }
-    fcOpt match {
-      case Some(fc) =>
-        val tmp = new Path(base,
-          s"_tmp$MarkerPrefix${v}_${java.util.UUID.randomUUID().toString.take(8)}")
-        val out = f.create(tmp, /* overwrite = */ true)
-        try out.write(body) finally out.close()
-        try fc.rename(tmp, marker, org.apache.hadoop.fs.Options.Rename.NONE)
-        catch {
-          case e: java.io.IOException =>
-            f.delete(tmp, false)
-            throw failExists(e)
+    val fc =
+      try FileContext.getFileContext(marker.toUri, spark.sparkContext.hadoopConfiguration)
+      catch {
+        case e: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+          throw new java.io.IOException(s"cannot commit $base v$v: its filesystem has no " +
+            "AbstractFileSystem binding (fs.AbstractFileSystem.<scheme>.impl), which the " +
+            "commit marker's rename needs", e)
+      }
+    val f = fs(spark, base)
+    val tmp = new Path(base,
+      s"_tmp$MarkerPrefix${v}_${java.util.UUID.randomUUID().toString.take(8)}")
+    val out = f.create(tmp, /* overwrite = */ true)
+    try out.write(s"${System.currentTimeMillis()}\n$operation".getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    try fc.rename(tmp, marker, org.apache.hadoop.fs.Options.Rename.NONE)
+    catch {
+      case e: java.io.IOException =>
+        f.delete(tmp, false)
+        throw e match {
+          case _: FileAlreadyExistsException => new java.io.IOException(
+            s"commit marker $marker already exists (concurrent writer?)", e)
+          case _ => e
         }
-      case None =>
-        val out =
-          try f.create(marker, /* overwrite = */ false)
-          catch { case e: java.io.IOException => throw failExists(e) }
-        try out.write(body) finally out.close()
     }
   }
 
@@ -200,9 +186,10 @@ object VersionedTable {
     * deletes should pre-partition the table so the filter prunes files. */
   def deleteWhere(spark: SparkSession, base: String,
       cond: org.apache.spark.sql.Column): Long = {
-    val cur = read(spark, base).getOrElse(
+    val log = commits(spark, base)
+    val cur = snapshot(spark, base, log).getOrElse(
       throw new IllegalStateException(s"no committed version at $base"))
-    commit(spark, base, cur.filter(!cond || cond.isNull), "delete")
+    commitAfter(spark, base, log, cur.filter(!cond || cond.isNull), "delete")
   }
 
   /** UPDATE ... SET ... WHERE analogue: matching rows get every column in
@@ -213,7 +200,8 @@ object VersionedTable {
       cond: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.when
-    val cur = read(spark, base).getOrElse(
+    val log = commits(spark, base)
+    val cur = snapshot(spark, base, log).getOrElse(
       throw new IllegalStateException(s"no committed version at $base"))
     require(set.keys.forall(cur.columns.contains),
       s"UPDATE of unknown column(s): ${set.keys.filterNot(cur.columns.contains).mkString(", ")}")
@@ -226,7 +214,7 @@ object VersionedTable {
         case None    => cur(c)
       }
     }.toSeq: _*)
-    commit(spark, base, updated, "update")
+    commitAfter(spark, base, log, updated, "update")
   }
 
   /** Append with SCHEMA EVOLUTION (Delta `mergeSchema` analogue): the new
@@ -239,8 +227,9 @@ object VersionedTable {
     * partition's worth of rows changes. */
   def appendEvolved(spark: SparkSession, base: String, batch: DataFrame,
       operation: String = "append-evolved"): Long = {
-    read(spark, base) match {
-      case None => commit(spark, base, batch, operation)
+    val log = commits(spark, base)
+    snapshot(spark, base, log) match {
+      case None => commitAfter(spark, base, log, batch, operation)
       case Some(cur) =>
         val conflicts = cur.schema.flatMap { f =>
           batch.schema.find(_.name == f.name).collect {
@@ -250,7 +239,7 @@ object VersionedTable {
         }
         require(conflicts.isEmpty,
           s"schema evolution cannot change column types (${conflicts.mkString("; ")})")
-        commit(spark, base,
+        commitAfter(spark, base, log,
           cur.unionByName(batch, allowMissingColumns = true), operation)
     }
   }
@@ -386,9 +375,7 @@ object VersionedTable {
     * separately scheduled maintenance job. */
   def vacuum(spark: SparkSession, base: String): Unit = {
     val f = fs(spark, base)
-    val basePath = new Path(base)
-    if (!f.exists(basePath)) return
-    val entries = f.listStatus(basePath).toSeq
+    val entries = list(f, base)
     // Stale-temp sweep is independent of whether any version ever committed:
     // a table whose only-ever commit crashed between temp-write and rename has
     // residue but no committed marker. Storage-clock "now" (not the driver
@@ -401,7 +388,7 @@ object VersionedTable {
           f.delete(st.getPath, false)
       }
     }
-    currentVersion(spark, base).foreach { cur =>
+    markers(entries).lastOption.foreach { case (cur, _) =>
       entries.foreach { st =>
         val name = st.getPath.getName
         if (name.startsWith("v") && name.drop(1).forall(_.isDigit)
@@ -436,20 +423,32 @@ object VersionedTable {
   private val BatchDir = "^batch=(\\d+)$".r
   private val CompactDir = "^compact=(\\d+)$".r
 
+  /** The batchIds a log records as applied: its `batch=<id>` op tags. */
+  private def applied(log: Seq[Commit]): Set[Long] =
+    log.collect { case (_, _, BatchOp(b)) => b.toLong }.toSet
+
   /** BatchIds applied to the table at `base`: the `batch=<id>` op tags in
     * its log (commit metadata only — no data read). */
   def appliedBatches(spark: SparkSession, base: String): Set[Long] =
-    commits(spark, base).collect { case (_, _, BatchOp(b)) => b.toLong }.toSet
+    applied(commits(spark, base))
 
   /** Apply stream batch `batchId` of `stage` to the table at `base` exactly
     * once. Returns false, writing nothing, if the log already records the
-    * batch; otherwise evaluates `next` — which may first write the batch's
-    * [[deltaPath]], data before marker — and commits it as the next
-    * version, tagged `<stage> batch=<id>`. */
+    * batch; otherwise evaluates `next` on the current snapshot (None before
+    * the first commit), read at the version the check saw — `next` may
+    * first write the batch's [[deltaPath]], data before marker — and
+    * commits the result as the next version, tagged `<stage> batch=<id>`.
+    *
+    * Batch ids belong to ONE streaming checkpoint: the log recognizes a
+    * batch by its id alone. A stage restarted on a fresh checkpoint over a
+    * source that has gained files numbers its batches from 0 again, and
+    * the log skips them as already applied — such a restart needs a fresh
+    * table base. */
   private[graft] def commitBatch(spark: SparkSession, base: String, stage: String,
-      batchId: Long)(next: => DataFrame): Boolean = {
-    if (appliedBatches(spark, base).contains(batchId)) return false
-    commit(spark, base, next, s"$stage batch=$batchId")
+      batchId: Long)(next: Option[DataFrame] => DataFrame): Boolean = {
+    val log = commits(spark, base)
+    if (applied(log).contains(batchId)) return false
+    commitAfter(spark, base, log, next(snapshot(spark, base, log)), s"$stage batch=$batchId")
     true
   }
 
@@ -458,18 +457,17 @@ object VersionedTable {
 
   private def compactPath(root: String, v: Long) = s"$root/compact=$v"
 
-  /** The latest compaction recorded in `base`'s log, as (compact dir
-    * version, covered-through batchId). */
-  private def latestCompaction(spark: SparkSession, base: String): Option[(Long, Long)] =
-    commits(spark, base).collect { case (_, _, CompactOp(v, u)) => (v.toLong, u.toLong) }
-      .lastOption
+  /** The latest compaction a log records, as (compact dir version,
+    * covered-through batchId). */
+  private def latestCompaction(log: Seq[Commit]): Option[(Long, Long)] =
+    log.collect { case (_, _, CompactOp(v, u)) => (v.toLong, u.toLong) }.lastOption
 
-  /** The delta read set under `root`: the latest recorded compaction (if
-    * any) plus the dirs of batches applied after it. */
-  private def deltaDirs(spark: SparkSession, base: String, root: String): Seq[String] = {
-    val upto = latestCompaction(spark, base)
+  /** The delta read set under `root` of a log: its latest recorded
+    * compaction (if any) plus the dirs of batches applied after it. */
+  private def deltaDirs(log: Seq[Commit], root: String): Seq[String] = {
+    val upto = latestCompaction(log)
     upto.map { case (v, _) => compactPath(root, v) }.toSeq ++
-      appliedBatches(spark, base).filter(b => upto.forall(b > _._2))
+      applied(log).filter(b => upto.forall(b > _._2))
         .toSeq.sorted.map(deltaPath(root, _))
   }
 
@@ -477,7 +475,7 @@ object VersionedTable {
     * Pass `schema` when a dir may hold no part file to infer it from. */
   private[graft] def readDeltas(spark: SparkSession, base: String, root: String,
       schema: Option[StructType] = None): Option[DataFrame] = {
-    val dirs = deltaDirs(spark, base, root)
+    val dirs = deltaDirs(commits(spark, base), root)
     if (dirs.isEmpty) None
     else Some(schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dirs: _*))
   }
@@ -492,14 +490,15 @@ object VersionedTable {
     * do, no commit). */
   private[graft] def compactDeltas(spark: SparkSession, base: String, root: String,
       stage: String, schema: StructType, targetFiles: Int = 1): Int = {
-    val dirs = deltaDirs(spark, base, root)
+    val log = commits(spark, base)
+    val dirs = deltaDirs(log, root)
     if (dirs.size <= 1) return 0
-    val cur = currentVersion(spark, base).get // a delta dir implies a commit
+    val cur = log.last._1 // a delta dir implies a commit
     spark.read.schema(schema).parquet(dirs: _*)
       .coalesce(targetFiles)
       .write.mode("overwrite").parquet(compactPath(root, cur + 1))
-    commit(spark, base, readVersion(spark, base, cur),
-      s"$stage compact=${cur + 1} upto=${appliedBatches(spark, base).max}")
+    commitAfter(spark, base, log, readVersion(spark, base, cur),
+      s"$stage compact=${cur + 1} upto=${applied(log).max}")
     dirs.size
   }
 
@@ -508,7 +507,7 @@ object VersionedTable {
     * unrecorded (crashed) compact dirs. The table's own old versions go
     * through [[vacuum]]. */
   private[graft] def vacuumDeltas(spark: SparkSession, base: String, root: String): Unit =
-    latestCompaction(spark, base).foreach { case (v, upto) =>
+    latestCompaction(commits(spark, base)).foreach { case (v, upto) =>
       val f = fs(spark, root)
       val rootPath = new Path(root)
       if (f.exists(rootPath)) f.listStatus(rootPath).foreach { st =>

@@ -245,8 +245,8 @@ object StreamPipes {
     import graft.ext.Dedup
     val spark = batch.sparkSession
     val state = Dedup.admitState(basePath)
-    VersionedTable.commitBatch(spark, state, DedupStage, batchId) {
-      val (postings, vocab) = VersionedTable.read(spark, state) match {
+    VersionedTable.commitBatch(spark, state, DedupStage, batchId) { current =>
+      val (postings, vocab) = current match {
         case Some(idx) => (
           idx.filter(col("kind") === "postings").select("tid", "p", "n", "itoks"),
           idx.filter(col("kind") === "vocab").select("tok", "tid"))
@@ -320,8 +320,7 @@ object StreamPipes {
     import graft.ext.{CorpusOps, Dedup}
     val spark = batch.sparkSession
     val state = Dedup.admitState(basePath)
-    VersionedTable.commitBatch(spark, state, DsirStage, batchId) {
-      val prior = VersionedTable.read(spark, state)
+    VersionedTable.commitBatch(spark, state, DsirStage, batchId) { prior =>
       def priorKind(k: String) = prior match {
         case Some(df) => df.filter(col("kind") === k).select(col("b"), col("c"))
         case None => spark.range(0)

@@ -21,6 +21,12 @@ class BenchGuardSpec extends SparkSuite {
   }
 
   test("baselined queries stay within 2x of the committed bench baseline") {
+    val lost = AccumulatorErrors.during(guardBaselines())
+    assert(lost.isEmpty,
+      s"accumulator updates lost during the timed pass:\n${lost.distinct.take(5).mkString("\n")}")
+  }
+
+  private def guardBaselines(): Unit = {
     val base = baseline()
     // guard every query listed in the baseline file (headliners + the
     // heavies whose cost model we deliberately locked in)

@@ -30,8 +30,8 @@ class DedupSpec extends SparkSuite {
     assert(r.getDouble(1) === 0.0)
   }
 
-  test("portable minhash LSH (q31's engine-portable hash family) matches the " +
-      "xxhash form's semantics on exact/near/unrelated") {
+  test("portable minhash LSH (q31's engine-portable hash family) finds exact " +
+      "and near dups, skips unrelated") {
     val pairs = Dedup.minhashNearDupsPortable(
         docs, "doc_id", "text", k = 32, bands = 8, threshold = 0.5)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet

@@ -131,7 +131,7 @@ class CodegenSpec extends SparkSuite {
   }
 
   test("PortableMinHashSig codegen compiles and is bit-equal to the Column " +
-      "composition (PortableHash.minhashSignature over shingle hashes)") {
+      "composition (PortableHashRefs.minhashSignature over shingle hashes)") {
     withForcedCodegen {
       import graft.ext.PortableHashRefs
       val docs = Tables.load(spark, dir, "documents")

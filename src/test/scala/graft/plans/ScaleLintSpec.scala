@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{QueryCatalog, SparkSuite, Tables}
+import graft.{CatalogSweep, SparkSuite, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -175,19 +175,9 @@ class ScaleLintSpec extends SparkSuite {
     "q162_equidepth_hist", "q174_ks_binned", "q182_calibration_curve",
     "q186_theil_sen")
 
-  /** One build per catalog query serves both catalog lints: the logical
-    * check and the physical walk of the same DataFrame's executed plan.
-    * Per query: the construction error, or (logical, physical) findings. */
-  private lazy val catalogFindings
-      : Seq[(String, Either[String, (Seq[ScaleLint.Finding], Seq[ScaleLint.Finding])])] =
-    QueryCatalog.all.map { qq =>
-      val lints =
-        try {
-          val df = qq.fn(spark, dir)
-          Right((ScaleLint.check(df), ScaleLint.lintPhysical(df.queryExecution.executedPlan)))
-        } catch { case e: Throwable => Left(s"construction failed: ${e.getMessage}") }
-      qq.name -> lints
-    }
+  /** Per catalog query: the construction error, or (logical, physical)
+    * findings — from the one catalog sweep this JVM makes. */
+  private def catalogFindings = CatalogSweep.results(dir).map { case (name, s) => name -> s.lints }
 
   test("the ENTIRE catalog passes the linter with zero errors; advice stays inside the pinned allowlist") {
     val failures = scala.collection.mutable.ArrayBuffer[String]()
@@ -360,6 +350,26 @@ class ScaleLintSpec extends SparkSuite {
     assert(failures.isEmpty,
       s"physical-lint findings in the catalog:\n  ${failures.distinct.mkString("\n  ")}")
     info(s"physical advice findings: ${advice.distinct.mkString("; ")}")
+  }
+
+  test("a lazy barrier keeps its plan's metrics while a sibling job still reads it") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val b = ScaleLint.barrier(spark.range(0, 4000, 1, 4).toDF().filter($"id" % 3 =!= 0))
+    val rdd = b.queryExecution.toRdd
+    val lost = graft.AccumulatorErrors.during {
+      // the sibling computes partition 0 from the lineage, then keeps its
+      // task running past the first job, which cuts that lineage
+      val sibling = Future(spark.sparkContext.runJob(rdd,
+        (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+          it.size; Thread.sleep(4000)
+        }, Seq(0)))
+      Thread.sleep(500)
+      assert(b.count() === 2666L)
+      org.apache.spark.graft.CleanerBridge.settle(spark.sparkContext)
+      Await.result(sibling, scala.concurrent.duration.Duration(60, "s"))
+    }
+    assert(lost.isEmpty, s"lost updates of the barrier's metrics: ${lost.take(3)}")
   }
 
   test("barrier loop does not compound join stats to a BigInteger overflow") {

@@ -13,9 +13,9 @@ class VersionedTableSpec extends SparkSuite {
     val v = VersionedTable.commit(spark, base, Seq((1, "a")).toDF("k", "v"))
     assert(v === 0L)
     // A racing committer that computed the same next version lands here
-    // after its data write; the create(overwrite=false) guard must refuse.
-    // (rename-based markers silently replace on local FS — both racers
-    // would have reported success.)
+    // after its data write; the marker's fail-if-exists rename must refuse.
+    // (a plain rename silently replaces on local FS — both racers would
+    // have reported success.)
     val ex = intercept[java.io.IOException](
       VersionedTable.createMarker(spark, base, 0L, "racer"))
     assert(ex.getMessage.contains("already exists"))
@@ -25,29 +25,58 @@ class VersionedTableSpec extends SparkSuite {
     assert(h.toSeq === Seq((0L, "commit")))
   }
 
-  test("fresh zero-length marker names the residue age, not a concurrent writer") {
-    val base = tmp() + "/vt-residue-msg"
+  test("a zero-length marker is not a commit; committing over it fails naming the marker") {
+    val base = tmp() + "/vt-zero-marker"
     new java.io.File(base).mkdirs()
-    // crashed create-then-write fallback committer: marker created, body never landed
+    // outside input: a marker whose body never landed
     val marker = new java.io.File(base, "_commit_v0")
     assert(marker.createNewFile() && marker.length() === 0L)
+    assert(VersionedTable.commits(spark, base).isEmpty)
+    assert(VersionedTable.read(spark, base).isEmpty)
     val ex = intercept[java.io.IOException](
-      VersionedTable.createMarker(spark, base, 0L, "retry"))
-    assert(ex.getMessage.contains("crash residue"))
-    assert(ex.getMessage.contains("staleness window"))
-    assert(!ex.getMessage.contains("concurrent writer"))
+      VersionedTable.commit(spark, base, Seq((1, "a")).toDF("k", "v")))
+    assert(ex.getMessage.contains(marker.getPath))
+    assert(VersionedTable.commits(spark, base).isEmpty)
   }
 
-  test("stale zero-length marker self-heals and the commit retry succeeds") {
-    val base = tmp() + "/vt-residue-heal"
-    new java.io.File(base).mkdirs()
-    val marker = new java.io.File(base, "_commit_v0")
-    assert(marker.createNewFile())
-    assert(marker.setLastModified(
-      System.currentTimeMillis() - VersionedTable.ResidueStalenessMs - 60000))
-    val v = VersionedTable.commit(spark, base, Seq((1, "a")).toDF("k", "v"))
-    assert(v === 0L)
-    assert(VersionedTable.read(spark, base).get.count() === 1L)
+  test("each log operation lists the table base once") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countfs.impl", classOf[CountingLocalFs].getName)
+    conf.set("fs.AbstractFileSystem.countfs.impl", classOf[CountingLocalAfs].getName)
+    val dir = "countfs://" + tmp()
+    val (base, root) = (s"$dir/t", s"$dir/d")
+    def listings(op: => Unit): Int = {
+      CountingLocalFs.listings.clear()
+      op
+      Option(CountingLocalFs.listings.get(new org.apache.hadoop.fs.Path(base).toUri.getPath))
+        .fold(0)(_.get)
+    }
+    val rows = Seq((1, "a")).toDF("k", "v")
+    def batch(b: Long) = VersionedTable.commitBatch(spark, base, "t", b) { cur =>
+      rows.write.mode("overwrite").parquet(VersionedTable.deltaPath(root, b))
+      cur.fold(rows)(_.unionByName(rows))
+    }
+    assert(listings(assert(batch(0L))) === 1, "commitBatch")
+    assert(listings(assert(batch(1L))) === 1, "commitBatch on a committed table")
+    assert(listings(assert(!batch(1L))) === 1, "commitBatch of a replay")
+    assert(listings(assert(
+      VersionedTable.readDeltas(spark, base, root).get.count() === 2L)) === 1, "readDeltas")
+    assert(listings(assert(
+      VersionedTable.compactDeltas(spark, base, root, "t", rows.schema) === 2)) === 1,
+      "compactDeltas")
+    assert(listings(VersionedTable.vacuum(spark, base)) === 1, "vacuum")
+    assert(VersionedTable.read(spark, base).get.count() === 2L)
+    assert(VersionedTable.commits(spark, base).map(_._3) ===
+      Seq("t batch=0", "t batch=1", "t compact=2 upto=1"))
+  }
+
+  test("a filesystem without an AbstractFileSystem binding cannot commit") {
+    spark.sparkContext.hadoopConfiguration.set("fs.noafs.impl", classOf[NoAfsLocalFs].getName)
+    val base = "noafs://" + tmp() + "/t"
+    val ex = intercept[java.io.IOException](
+      VersionedTable.commit(spark, base, Seq((1, "a")).toDF("k", "v")))
+    assert(ex.getMessage.contains(base) && ex.getMessage.contains("AbstractFileSystem"))
+    assert(VersionedTable.commits(spark, base).isEmpty)
   }
 
   test("vacuum sweeps stale commit temps even when nothing ever committed") {
@@ -187,4 +216,33 @@ class VersionedTableSpec extends SparkSuite {
       (3, "c", Some(7L), "insert")),
       "row 2 (null extra on both sides) is unchanged; row 1 differs only in the evolved column")
   }
+}
+
+/** The local filesystem under its own `countfs` scheme, counting
+  * `listStatus` calls per path. */
+class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  // a def: the superclass constructor qualifies its working dir with it
+  override def getUri: java.net.URI = java.net.URI.create(s"$getScheme:///")
+  override def getScheme: String = "countfs"
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingLocalFs.listings
+      .computeIfAbsent(f.toUri.getPath, _ => new java.util.concurrent.atomic.AtomicInteger)
+      .incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object CountingLocalFs {
+  val listings =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
+}
+
+/** [[CountingLocalFs]]'s AbstractFileSystem binding, which the commit
+  * marker's `FileContext` rename goes through. */
+class CountingLocalAfs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+  extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new CountingLocalFs, conf, "countfs", false)
+
+/** The local filesystem under a scheme with no AbstractFileSystem binding. */
+class NoAfsLocalFs extends CountingLocalFs {
+  override def getScheme: String = "noafs"
 }
