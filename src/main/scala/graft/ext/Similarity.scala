@@ -456,17 +456,20 @@ object Similarity {
     * a serial engine (the q87 rounded-decimal-sum recipe); the division
     * back to double is a single deterministic IEEE op. Work is one keyed
     * shuffle of n·d (cluster, dim) component rows plus a cluster-sized
-    * regroup — no driver-side state, no collect. */
-  def kmeansUpdate(assigned: DataFrame): DataFrame =
-    assigned.select(col("cluster").as("cid"),
-        posexplode(col("vec")).as(Seq("dim", "comp")))
-      .groupBy(col("cid"), col("dim"))
+    * regroup — no driver-side state, no collect. Extra group columns `by`
+    * lead the output: one pass updates [[pqCodebooks]]' m codebooks. */
+  def kmeansUpdate(assigned: DataFrame, by: String*): DataFrame = {
+    val keys = by.map(col) :+ col("cid")
+    assigned.withColumnRenamed("cluster", "cid")
+      .select(keys :+ posexplode(col("vec")).as(Seq("dim", "comp")): _*)
+      .groupBy(keys :+ col("dim"): _*)
       .agg((sum(round(col("comp"), 7)
           .cast(org.apache.spark.sql.types.DecimalType(28, 10))).cast("double")
         / count(lit(1))).as("c"))
-      .groupBy(col("cid"))
+      .groupBy(keys: _*)
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
         x => x.getField("c")).as("cvec"))
+  }
 
   /** Lloyd's k-means over an embedding column — the cluster-then-act
     * primitive behind data-mixture construction and SemDeDup-style pruning
@@ -486,12 +489,6 @@ object Similarity {
     assigned
   }
 
-  /** PRODUCT-QUANTIZATION codebooks: slice every vector into `m`
-    * contiguous subvectors and train one deterministic Lloyd codebook per
-    * subspace (init = the first `ksub` ids' slices, the q92 protocol;
-    * `iters = 1` keeps the seed slices as the codebook — the
-    * oracle-friendly untrained mode). Output (subspace, cid, cvec), m·ksub
-    * rows — broadcastable at any corpus size. */
   /** Subspace slice bounds: base width ⌊d/m⌋ with the LAST subspace taking
     * the remainder — every dimension lands in exactly one subspace for any
     * d, instead of silently dropping the trailing d % m dims. Query and
@@ -504,18 +501,25 @@ object Similarity {
         .otherwise(base))
   }
 
+  /** PRODUCT-QUANTIZATION codebooks: slice every vector into `m`
+    * contiguous subvectors and train one deterministic Lloyd codebook per
+    * subspace (init = the first `ksub` ids' slices, the q92 protocol;
+    * `iters = 1` keeps the seed slices — the oracle-friendly untrained
+    * mode). One projection `posexplode`s all m slices, and a Lloyd pass
+    * trains every subspace at once, updating by (subspace, cid). Output
+    * (subspace, cid, cvec), m·ksub rows — broadcastable at any scale. */
   def pqCodebooks(corpus: DataFrame, m: Int, ksub: Int, iters: Int): DataFrame = {
-    (0 until m).map { s =>
-      val sub = corpus.select(col("id"),
-        pqSlice(col("vec"), m, lit(s)).as("vec"))
-      val init = sub.filter(col("id") < ksub)
-        .select(col("id").cast("int").as("cid"), col("vec").as("cvec"))
-      val book =
-        if (iters <= 1) init
-        else kmeansUpdate(kmeansLloyd(sub, init, iters - 1))
-          .select(col("cid").cast("int").as("cid"), col("cvec"))
-      book.select(lit(s).as("subspace"), col("cid"), col("cvec"))
-    }.reduce(_.unionByName(_))
+    def slices(df: DataFrame) = df.select(col("id"),
+      posexplode(array((0 until m).map(s => pqSlice(col("vec"), m, lit(s))): _*))
+        .as(Seq("subspace", "vec")))
+    val seeds = slices(corpus.filter(col("id") < ksub))
+      .select(col("subspace"), col("id").cast("int").as("cid"), col("vec").as("cvec"))
+    (1 until iters).foldLeft(seeds) { (books, _) =>
+      kmeansUpdate(slices(corpus).crossJoin(broadcast(booksBySub(books)))
+        .select(col("subspace"), graft.functions.NearestKey.nearestBySqDist(col("vec"),
+            element_at(col("__books"), col("subspace") + 1)).getField("key")
+          .cast("int").as("cluster"), col("vec")), "subspace")
+    }
   }
 
   /** PQ encoding: each vector becomes `m` small codes — per subspace, the
@@ -530,26 +534,39 @@ object Similarity {
     // materialization, no two-level regroup. Per-subspace selection is
     // NearestKey's sqdist-argmin, bit-equal to the former
     // sqDist + argmin + array_sort(collect_list) shape.
-    corpus.crossJoin(broadcast(booksBySub(codebooks, m)))
+    corpus.crossJoin(broadcast(booksBySub(codebooks)))
       .select(col("id"), pqCodes(codebooks, m).as("codes"))
 
   /** One-row broadcast: per-subspace sorted candidate arrays, indexed by
     * subspace — `__books[s + 1]` is subspace s's `(k, cv)` array. */
-  private def booksBySub(codebooks: DataFrame, m: Int): DataFrame =
-    codebooks.groupBy(col("subspace"))
-      .agg(sort_array(collect_list(struct(
-        col("cid").cast("long").as("k"), col("cvec").as("cv")))).as("cands"))
-      .agg(transform(
-        sort_array(collect_list(struct(col("subspace"), col("cands")))),
-        x => x.getField("cands")).as("__books"))
+  private def booksBySub(codebooks: DataFrame): DataFrame =
+    sortedEntries(codebooks -> col("subspace")).select(subspaceBooks(col("__all")).as("__books"))
+
+  /** One global aggregate: each (table, candidate set `s`) part's rows as
+    * `(s, k = cid, cv = cvec)` entries, in one sorted array `__all`. */
+  private def sortedEntries(parts: (DataFrame, Column)*): DataFrame =
+    parts.map { case (df, s) =>
+      df.select(s.as("s"), col("cid").cast("long").as("k"), col("cvec").as("cv"))
+    }.reduce(_.unionByName(_))
+      .agg(sort_array(collect_list(struct(col("s"), col("k"), col("cv")))).as("__all"))
+
+  /** The sorted `(k, cv)` candidates of set `s` in a [[sortedEntries]] array. */
+  private def entriesOf(all: Column, s: Column): Column =
+    transform(filter(all, x => x.getField("s") === s),
+      x => struct(x.getField("k").as("k"), x.getField("cv").as("cv")))
+
+  /** [[entriesOf]] each subspace (sets ≥ 0), in ascending subspace order. */
+  private def subspaceBooks(all: Column): Column =
+    transform(array_distinct(filter(transform(all, x => x.getField("s")), s => s >= 0)),
+      s => entriesOf(all, s))
 
   /** The fused per-row PQ code array: for each subspace, NearestKey's
-    * argmin over that subspace's codebook on the row's slice. */
+    * argmin over that subspace's codebook on the row's slice — unrolled
+    * over the m subspaces, so the projection stays in generated code. */
   private def pqCodes(codebooks: DataFrame, m: Int): Column =
-    transform(sequence(lit(0), lit(m - 1)), s =>
-      graft.functions.NearestKey.nearestBySqDist(
-          pqSlice(col("vec"), m, s), element_at(col("__books"), s + 1))
-        .getField("key").cast(codebooks.schema("cid").dataType))
+    array((0 until m).map(s => graft.functions.NearestKey.nearestBySqDist(
+        pqSlice(col("vec"), m, lit(s)), element_at(col("__books"), s + 1))
+      .getField("key").cast(codebooks.schema("cid").dataType)): _*)
 
   /** PQ approximate top-k via ASYMMETRIC DISTANCE COMPUTATION: the query
     * precomputes its distance to every codebook centroid (m·ksub rows —
@@ -588,64 +605,72 @@ object Similarity {
     * deployment (FAISS IndexIVFPQ shape): every corpus vector is assigned
     * to its nearest coarse centroid (its inverted LIST, squared-L2,
     * lowest-cid tiebreak — the [[kmeansAssign]] protocol) AND
-    * product-quantized against the shared codebooks, in one pipeline with
-    * no corpus-sized join between the two (the list id rides through the
-    * encode aggregation). Output (id, cid, codes): m small ints + a list
-    * id per vector — the raw vectors are never needed again at search
-    * time. Vectors are encoded RAW (not residual-to-centroid): that keeps
-    * one shared ADC table per query instead of one per probed list, and
-    * admission to DuckDB-exact oracle checking; residual encoding is a
-    * recall refinement that would drop into [[pqEncode]]'s slice step
-    * without changing this plan shape. */
+    * product-quantized against the shared codebooks, in one projection of
+    * the corpus scan against the one-row [[quantizerRow]] broadcast.
+    * Output (id, cid, codes): m small ints + a list id per vector — the
+    * raw vectors are never needed again at search time. Vectors are
+    * encoded RAW (not residual-to-centroid), which keeps DuckDB-exact
+    * oracle checking simple; [[ivfPqResidual]] is the residual form. */
   def ivfPqIndex(corpus: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, m: Int): DataFrame =
-    // fused (r18): assignment and encode are both per-row scans now, so the
-    // whole index build is two one-row broadcasts and a projection —
-    // zero corpus-sized shuffles (formerly: cross-product + argmin agg +
-    // re-attach join + explode-join + two regroup aggregates).
-    encodeAssigned(
-      kmeansAssign(corpus, centroids)
-        .select(col("id"), col("cluster").as("cid"), col("vec")),
-      codebooks, m)
+    corpus.crossJoin(broadcast(quantizerRow(centroids, codebooks)))
+      .select(col("id"),
+        graft.functions.NearestKey.nearestBySqDist(col("vec"), col("__cands"))
+          .getField("key").cast(centroids.schema("cid").dataType).as("cid"),
+        pqCodes(codebooks, m).as("codes"))
+
+  /** The one-row broadcast an IVF×PQ index build and search share: the
+    * centroid candidates `__cands` (as [[candsOf]]) and the codebooks
+    * `__books` (as [[booksBySub]]) from one aggregate. Both sides use this
+    * same plan, so a query broadcasts it once and reuses the exchange. */
+  private def quantizerRow(centroids: DataFrame, codebooks: DataFrame): DataFrame =
+    sortedEntries(centroids -> lit(-1), codebooks -> col("subspace"))
+      .select(entriesOf(col("__all"), lit(-1)).as("__cands"), subspaceBooks(col("__all")).as("__books"))
 
   /** IVF×PQ approximate top-k — [[ivfTopK]]'s list pruning composed with
-    * [[pqTopK]]'s asymmetric distance: each query probes its `nProbe`
-    * nearest coarse lists and ADC-scans ONLY the codes in those lists,
-    * instead of the whole code table (the flat-ADC scan is the one place
-    * the r8 ANN tier did not have the plan you'd want at 100×). Search
-    * touches: broadcast centroids (probe selection), a broadcast
-    * (qid, cid) probe set pruning the index scan, a broadcast ADC lookup
-    * table (m·ksub rows per query), then a per-(qid, id) sum and the
-    * shared top-k window — cost ∝ nProbe/|lists| of the corpus codes,
-    * with nothing data-proportional broadcast or collected. Deterministic
-    * (squared-L2 everywhere, id tiebreaks, decimal-exact ADC sums) ⇒
-    * oracle-checkable end-to-end. Output (qid, rank, id, adc). */
+    * [[pqTopK]]'s asymmetric distance: the IVFADC search (Jégou, Douze &
+    * Schmid, TPAMI 2011), one pass over the probed lists' codes. Each
+    * query becomes `nProbe` rows (qid, cid, table), its lists sorted by
+    * (d2, cid) from the [[quantizerRow]] candidates, the table holding per
+    * subspace each codeword's `round(d2, 6)` as decimal(28,8). The rows
+    * broadcast-join the index on `cid`, and a code's ADC is the m-term
+    * decimal sum of its `element_at`/`array_position` table lookups, in
+    * generated code; the (adc, id) window keeps the top k. Cost ∝
+    * nProbe/|lists| of the codes. Deterministic (squared-L2, id
+    * tiebreaks, exact decimal sums) ⇒ oracle-checkable. Output
+    * (qid, rank, id, adc). */
   def ivfPqTopK(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
-      queries: DataFrame, m: Int, k: Int, nProbe: Int = 2): DataFrame = {
-    val wq = Window.partitionBy(col("qid")).orderBy(col("d2c"), col("cid"))
-    // barrier (r18): same constraint-erasure as [[ivfTopK]]'s probes — the
-    // index side's cid is a fused nearest_key alias now
-    val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("d2c", sqDist(col("qvec"), col("cvec")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select(col("qid"), col("cid"))
-      .barrier()
-    val qparts = queries.select(col("qid"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)),
-        s => pqSlice(col("qvec"), m, s))).as(Seq("subspace", "qsub")))
-    val dtable = qparts.join(codebooks, Seq("subspace"))
-      .select(col("qid"), col("subspace"), col("cid").as("code"),
-        sqDist(col("qsub"), col("cvec")).as("d2"))
-    val scored = index
-      .join(broadcast(probes), Seq("cid")) // list pruning: probed lists only
-      .select(col("qid"), col("id"), posexplode(col("codes")).as(Seq("subspace", "code")))
-      .join(broadcast(dtable), Seq("qid", "subspace", "code"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(round(col("d2"), 6).cast(
-        org.apache.spark.sql.types.DecimalType(28, 8))).cast("double").as("adc"))
+      queries: DataFrame, m: Int, k: Int, nProbe: Int = 2): DataFrame =
+    adcTopK(index, centroids, codebooks, queries, m, k, nProbe)(
+      _.withColumn("__tv", col("qvec")))
+
+  /** The search of [[ivfPqTopK]], [[ivfPqResidualTopK]] and [[ivfPqOpqTopK]]:
+    * `tableVec` adds to the probe rows (qid, qvec, cid, cvec, …) the vector
+    * `__tv` their tables come from — the query or its (rotated) residual. */
+  private def adcTopK(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
+      queries: DataFrame, m: Int, k: Int, nProbe: Int)(
+      tableVec: DataFrame => DataFrame): DataFrame = {
+    val dec = org.apache.spark.sql.types.DecimalType(28, 8)
+    val lists = queries.crossJoin(broadcast(quantizerRow(centroids, codebooks)))
+      .select(col("qid"), col("qvec"), col("__books"),
+        explode(slice(array_sort(transform(col("__cands"), c => struct(
+          sqDist(col("qvec"), c.getField("cv")).as("d2"), c.getField("k").as("cid"),
+          c.getField("cv").as("cvec")))), 1, nProbe)).as("p"))
+      .select(col("qid"), col("qvec"), col("__books"),
+        col("p.cid").cast(centroids.schema("cid").dataType).as("cid"), col("p.cvec").as("cvec"))
+    val probes = tableVec(lists).select(col("qid"), col("cid"),
+        transform(col("__books"), b => transform(b, x => x.getField("k"))).as("__keys"),
+        array((0 until m).map(s => transform(element_at(col("__books"), s + 1), x =>
+          round(sqDist(pqSlice(col("__tv"), m, lit(s)), x.getField("cv")), 6).cast(dec))): _*)
+          .as("__adc"))
+    val adc = (1 to m).map(s => element_at(element_at(col("__adc"), s),
+        array_position(element_at(col("__keys"), s),
+          element_at(col("codes"), s).cast("long")).cast("int")))
+      .reduce(_ + _)
     val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
+    index.join(broadcast(probes), Seq("cid"))
+      .select(col("qid"), col("id"), adc.cast("double").as("adc"))
+      .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("qid"), col("rank"), col("id"), col("adc"))
   }
@@ -733,56 +758,22 @@ object Similarity {
       m: Int): DataFrame =
     // fused (r18) — the [[pqEncode]] shape with the list id flowing through
     // the projection instead of riding two regroup aggregations
-    assigned.crossJoin(broadcast(booksBySub(codebooks, m)))
+    assigned.crossJoin(broadcast(booksBySub(codebooks)))
       .select(col("id"), col("cid"), pqCodes(codebooks, m).as("codes"))
 
-  /** Residual IVF×PQ approximate top-k: like [[ivfPqTopK]], but the ADC
-    * lookup table is PER (query, probed list) — the query's residual to
-    * THAT list's centroid is what the list's codes approximate, so the
-    * table is keyed by (qid, cid, subspace, code): nProbe·m·ksub rows
-    * per query, still broadcast-sized at any corpus scale. Search cost
-    * is identical to the raw path (the codes joined are the same rows;
-    * only the broadcast table grew by nProbe×). Deterministic
-    * (decimal-exact ADC sums, id tiebreaks) ⇒ oracle-checkable.
-    * Output (qid, rank, id, adc). */
+  /** Residual IVF×PQ approximate top-k: [[ivfPqTopK]]'s search, each
+    * (query, probed list) row's table built from the query's residual to
+    * THAT list's centroid — what the list's codes approximate. Same cost as
+    * the raw path; deterministic ⇒ oracle-checkable. Output (qid, rank, id, adc). */
   def ivfPqResidualTopK(index: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, queries: DataFrame,
-      m: Int, k: Int, nProbe: Int = 2): DataFrame = {
-    val wq = Window.partitionBy(col("qid")).orderBy(col("d2c"), col("cid"))
-    // probes feed BOTH the ADC table and the index prune set; pin them
-    // (nProbe rows per query) so the query×centroid selection runs once
-    // instead of once per consumer
-    val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("d2c", sqDist(col("qvec"), col("cvec")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select(col("qid"), col("cid"),
-        zip_with(col("qvec"), col("cvec"), (x, y) => x - y).as("qres"))
-      .barrier()
-    val qparts = probes.select(col("qid"), col("cid"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)),
-        s => pqSlice(col("qres"), m, s))).as(Seq("subspace", "qsub")))
-    // explicit hint: checkpointed codebooks plan as a stats-less
-    // LogicalRDD, which would otherwise default the m·ksub-row table
-    // to a sort-merge join
-    val dtable = qparts.join(
-        broadcast(codebooks.withColumnRenamed("cid", "code")),
-        Seq("subspace"))
-      .select(col("qid"), col("cid"), col("subspace"), col("code"),
-        sqDist(col("qsub"), col("cvec")).as("d2"))
-    val scored = index
-      .join(broadcast(probes.select(col("qid"), col("cid"))), Seq("cid"))
-      .select(col("qid"), col("cid"), col("id"),
-        posexplode(col("codes")).as(Seq("subspace", "code")))
-      .join(broadcast(dtable), Seq("qid", "cid", "subspace", "code"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(round(col("d2"), 6).cast(
-        org.apache.spark.sql.types.DecimalType(28, 8))).cast("double").as("adc"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id"), col("adc"))
-  }
+      m: Int, k: Int, nProbe: Int = 2): DataFrame =
+    adcTopK(index, centroids, codebooks, queries, m, k, nProbe)(
+      _.withColumn("__tv", queryResidual))
+
+  /** A probe row's query residual to its list's centroid. */
+  private val queryResidual: Column =
+    zip_with(col("qvec"), col("cvec"), (x, y) => x - y)
 
   /** OPQ-LITE: residual IVF×PQ with a PCA ROTATION ahead of codebook
     * training — the "wire PCA into PQ" integration ([[Pca]] → this tier).
@@ -898,38 +889,9 @@ object Similarity {
     * approximate the same L2 the unrotated path approximates). */
   def ivfPqOpqTopK(index: DataFrame, centroids: DataFrame,
       codebooks: DataFrame, model: Pca.Model, queries: DataFrame,
-      m: Int, k: Int, nProbe: Int = 2): DataFrame = {
-    val wq = Window.partitionBy(col("qid")).orderBy(col("d2c"), col("cid"))
-    val probes0 = queries.crossJoin(broadcast(centroids))
-      .withColumn("d2c", sqDist(col("qvec"), col("cvec")))
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nProbe)
-      .select(col("qid"), col("cid"),
-        zip_with(col("qvec"), col("cvec"), (x, y) => x - y).as("qres"))
-    val probes = Pca.project(probes0, "qres", model, "qrot")
-      .select(col("qid"), col("cid"), col("qrot").as("qres"))
-      .barrier()
-    val qparts = probes.select(col("qid"), col("cid"),
-      posexplode(transform(sequence(lit(0), lit(m - 1)),
-        s => pqSlice(col("qres"), m, s))).as(Seq("subspace", "qsub")))
-    val dtable = qparts.join(
-        broadcast(codebooks.withColumnRenamed("cid", "code")),
-        Seq("subspace"))
-      .select(col("qid"), col("cid"), col("subspace"), col("code"),
-        sqDist(col("qsub"), col("cvec")).as("d2"))
-    val scored = index
-      .join(broadcast(probes.select(col("qid"), col("cid"))), Seq("cid"))
-      .select(col("qid"), col("cid"), col("id"),
-        posexplode(col("codes")).as(Seq("subspace", "code")))
-      .join(broadcast(dtable), Seq("qid", "cid", "subspace", "code"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(round(col("d2"), 6).cast(
-        org.apache.spark.sql.types.DecimalType(28, 8))).cast("double").as("adc"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank"), col("id"), col("adc"))
-  }
+      m: Int, k: Int, nProbe: Int = 2): DataFrame =
+    adcTopK(index, centroids, codebooks, queries, m, k, nProbe)(
+      p => Pca.project(p.withColumn("__res", queryResidual), "__res", model, "__tv"))
 
   /** IVF×PQ search with EXACT RE-RANKING — the FAISS refine stage
     * (IndexRefineFlat over IndexIVFPQ): [[ivfPqTopK]] produces an ADC

@@ -958,6 +958,22 @@ object EmbedQueries {
       WHERE rank <= 10
     """))
 
+  /** A `java.io.tmpdir` artifact dir named by `tag` and a fingerprint of the
+    * scanned `input` files (path, size, mtime) and the build `params`, so a
+    * data dir rewritten under the same name never reuses an older index. */
+  private[graft] def annArtifactDir(s: SparkSession, tag: String, input: DataFrame,
+      params: String): String = {
+    val files = input.inputFiles.sorted.map { f =>
+      val st = new org.apache.hadoop.fs.Path(f).getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getFileStatus(new org.apache.hadoop.fs.Path(f))
+      s"$f ${st.getLen} ${st.getModificationTime}"
+    }
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest((files :+ params).mkString("\n").getBytes("UTF-8"))
+    val hex = digest.take(8).map("%02x".format(_)).mkString
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_$hex"
+  }
+
   /** SEARCH OVER THE PERSISTED IVF×PQ INDEX ([[graft.ext.AnnIndex]]) —
     * the maintained-artifact flow as a catalog query: quantizers trained
     * once and committed through [[graft.sources.VersionedTable]], the
@@ -965,7 +981,7 @@ object EmbedQueries {
     * FROZEN quantizers and written as its own shard — the streaming
     * [[graft.streaming.StreamPipes.annIngest]] step, exercised as such in
     * StreamingSpec), then residual-ADC search against the on-disk code
-    * table. The artifact is built once per testdata dir and REUSED across
+    * table. The artifact is built once per set of input files and REUSED across
     * runs (the point of a maintained index): after the first build this
     * query reads quantizer + codes from parquet and never sees the raw
     * corpus except for the 5 query vectors. Results are bit-identical to
@@ -979,15 +995,14 @@ object EmbedQueries {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("vec"))
-      // per-sfDir artifact root; _BUILT is written LAST so a crashed build
-      // is rebuilt, never half-reused. v2 = protocol version: bump on ANY
-      // change to the train/encode/manifest protocol so a stale /tmp
-      // artifact from older code can't serve wrong results or trip the
+      // artifact root keyed by input files and parameters; _BUILT is written
+      // LAST so a crashed build is rebuilt, never half-reused. v2 = protocol
+      // version: bump on ANY change to the train/encode/manifest protocol so
+      // a stale /tmp artifact from older code can't serve wrong results or trip the
       // reader (the r10 lesson: the manifest landed mid-round without a
       // bump, and pre-manifest artifacts with a _BUILT marker threw "no
       // ingested shards" forever).
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_annindex_v2_${
-        new java.io.File(dir).getName}"
+      val base = annArtifactDir(s, "annindex_v2", emb, "train 8 4 16; batches id % 2")
       val done = new java.io.File(s"$base/_BUILT")
       // STRUCTURAL reuse guard, not marker trust: the version tag already
       // failed once (a human forgot to bump it), so the marker alone is
@@ -1025,7 +1040,7 @@ object EmbedQueries {
     * clean rebuild under the new quantizers with zero bootstrap-era
     * artifacts leaking through (AnnIndexSpec pins the mid-flight
     * serving behavior; this pins the end state against the full DuckDB
-    * re-derivation). Artifact cached per sfDir like q124, reused only
+    * re-derivation). Artifact cached per input like q124, reused only
     * after the same structural validity probe. */
   val q125AnnRetrainPromote: Q = Q(
     "q125_ann_retrain_promote",
@@ -1034,8 +1049,8 @@ object EmbedQueries {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("vec"))
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_annretrain_v1_${
-        new java.io.File(dir).getName}"
+      val base = annArtifactDir(s, "annretrain_v1", emb,
+        "train 4 4 16; retrain 8 4 16; batches id % 2; promote")
       val done = new java.io.File(s"$base/_BUILT")
       val usable = done.exists() && (try {
         AnnIndex.readIndex(s, base).limit(1).count() == 1L

@@ -378,4 +378,43 @@ class AnnIndexSpec extends SparkSuite {
       "post-promote vacuum must drop the superseded generation's shards")
     assert(searchNow() === expected)
   }
+
+  test("q124 rebuilds its persisted index when the embeddings are rewritten in the same dir") {
+    import scala.sys.process._
+    val root = tmp()
+    val data = s"$root/data"
+    val out = s"$root/out"
+    val src = new java.io.File(sf("e"))
+    new java.io.File(data).mkdirs()
+    src.listFiles().foreach(f =>
+      Files.copy(f.toPath, new java.io.File(data, f.getName).toPath))
+    val q = "q124_ivfpq_persisted"
+    new java.io.File(out).mkdirs()
+    Files.writeString(java.nio.file.Paths.get(out, "oracle_sql.json"),
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .writeValueAsString(java.util.Map.of(q, graft.QueryCatalog.oracleSql(q))))
+    def artifact = graft.queries.EmbedQueries.annArtifactDir(spark, "annindex_v2",
+      Tables.load(spark, data, "embeddings"), "train 8 4 16; batches id % 2")
+    // q124 against DuckDB's re-derivation of its oracle on `data`'s files
+    def checkOracle(): Unit = {
+      graft.QueryCatalog.queries(q)(spark, data).write.mode("overwrite").parquet(s"$out/$q")
+      val log = new StringBuilder
+      val code = Seq("python3", "scripts/selfcheck.py", out, data)
+        .!(ProcessLogger(l => log.append(l).append('\n')))
+      assert(code === 0 && log.toString.contains(s"PASS $q"), log.toString)
+    }
+    val before = artifact
+    try {
+      checkOracle()
+      // other vectors, same file name, same row count
+      val emb = s"$data/embeddings.parquet"
+      Files.delete(new java.io.File(emb).toPath)
+      val rewrite = s"import duckdb; duckdb.sql(\"COPY (SELECT vec_id, " +
+        s"list_reverse(embedding) AS embedding, label FROM '${src.getPath}/embeddings.parquet')" +
+        s" TO '$emb' (FORMAT PARQUET)\")"
+      assert(Seq("python3", "-c", rewrite).! === 0, "rewriting embeddings failed")
+      checkOracle()
+    } finally Seq(before, artifact, root).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+  }
 }

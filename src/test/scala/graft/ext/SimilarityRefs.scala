@@ -6,13 +6,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import Similarity.{dot, l2Norm}
+import Similarity.{dot, l2Norm, sqDist}
 
 /** Reference formulations of [[Similarity]]'s native operators: the
   * higher-order-function (HOF) trees the fused expressions in
   * [[graft.functions]] are pinned bit-equal against (SimilaritySpec,
-  * CodegenSpec), and the round-based MMR the fused aggregator is pinned
-  * against (MmrSpec). Interpreted — references only, never a hot path.
+  * CodegenSpec), the round-based MMR the fused aggregator is pinned
+  * against (MmrSpec), and the per-subspace union codebooks and join /
+  * group-by IVF×PQ searches the one-projection forms are pinned row for
+  * row against (SimilaritySpec). References only, never a hot path.
   */
 object SimilarityRefs {
 
@@ -106,5 +108,94 @@ object SimilarityRefs {
       round += 1
     }
     selected.select(col("qid"), col("pick"), col("id"), col("sim"), col("mmr"))
+  }
+
+  /** [[Similarity.pqCodebooks]] as m separate plans, one per subspace
+    * (each its own Lloyd run), joined by an m-way `unionByName`. */
+  def pqCodebooksUnion(corpus: DataFrame, m: Int, ksub: Int, iters: Int): DataFrame =
+    (0 until m).map { s =>
+      val sub = corpus.select(col("id"), pqSlice(col("vec"), m, lit(s)).as("vec"))
+      val init = sub.filter(col("id") < ksub)
+        .select(col("id").cast("int").as("cid"), col("vec").as("cvec"))
+      val book =
+        if (iters <= 1) init
+        else Similarity.kmeansUpdate(Similarity.kmeansLloyd(sub, init, iters - 1))
+          .select(col("cid").cast("int").as("cid"), col("cvec"))
+      book.select(lit(s).as("subspace"), col("cid"), col("cvec"))
+    }.reduce(_.unionByName(_))
+
+  /** [[Similarity.ivfPqTopK]] as a (qid, cid) probe set picked by a
+    * barrier'd window, an index join on it, a (qid, subspace, code)
+    * broadcast join to the ADC table and a (qid, id) decimal group-by. */
+  def ivfPqTopKJoin(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
+      queries: DataFrame, m: Int, k: Int, nProbe: Int = 2): DataFrame = {
+    val wq = Window.partitionBy(col("qid")).orderBy(col("d2c"), col("cid"))
+    val probes = queries.crossJoin(broadcast(centroids))
+      .withColumn("d2c", sqDist(col("qvec"), col("cvec")))
+      .withColumn("rn", row_number().over(wq))
+      .filter(col("rn") <= nProbe)
+      .select(col("qid"), col("cid"))
+      .barrier()
+    val qparts = queries.select(col("qid"),
+      posexplode(transform(sequence(lit(0), lit(m - 1)),
+        s => pqSlice(col("qvec"), m, s))).as(Seq("subspace", "qsub")))
+    val dtable = qparts.join(codebooks, Seq("subspace"))
+      .select(col("qid"), col("subspace"), col("cid").as("code"),
+        sqDist(col("qsub"), col("cvec")).as("d2"))
+    val scored = index
+      .join(broadcast(probes), Seq("cid"))
+      .select(col("qid"), col("id"), posexplode(col("codes")).as(Seq("subspace", "code")))
+      .join(broadcast(dtable), Seq("qid", "subspace", "code"))
+      .groupBy(col("qid"), col("id"))
+      .agg(sum(round(col("d2"), 6).cast(
+        org.apache.spark.sql.types.DecimalType(28, 8))).cast("double").as("adc"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("id"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("qid"), col("rank"), col("id"), col("adc"))
+  }
+
+  /** [[Similarity.ivfPqResidualTopK]] (`model` None) and
+    * [[Similarity.ivfPqOpqTopK]] as a barrier'd window of (qid, cid, qres)
+    * probe rows, a (qid, cid, subspace, code) distance table joined to the
+    * probed lists' exploded codes, and a (qid, id) decimal group-by. */
+  def ivfPqResidualTopKJoin(index: DataFrame, centroids: DataFrame, codebooks: DataFrame,
+      queries: DataFrame, model: Option[Pca.Model], m: Int, k: Int, nProbe: Int): DataFrame = {
+    val wq = Window.partitionBy(col("qid")).orderBy(col("d2c"), col("cid"))
+    val probes0 = queries.crossJoin(broadcast(centroids))
+      .withColumn("d2c", sqDist(col("qvec"), col("cvec")))
+      .withColumn("rn", row_number().over(wq))
+      .filter(col("rn") <= nProbe)
+      .select(col("qid"), col("cid"),
+        zip_with(col("qvec"), col("cvec"), (x, y) => x - y).as("qres"))
+    val probes = model.fold(probes0)(mdl => Pca.project(probes0, "qres", mdl, "qrot")
+        .select(col("qid"), col("cid"), col("qrot").as("qres")))
+      .barrier()
+    val qparts = probes.select(col("qid"), col("cid"),
+      posexplode(transform(sequence(lit(0), lit(m - 1)),
+        s => pqSlice(col("qres"), m, s))).as(Seq("subspace", "qsub")))
+    val dtable = qparts.join(
+        broadcast(codebooks.withColumnRenamed("cid", "code")),
+        Seq("subspace"))
+      .select(col("qid"), col("cid"), col("subspace"), col("code"),
+        sqDist(col("qsub"), col("cvec")).as("d2"))
+    val scored = index
+      .join(broadcast(probes.select(col("qid"), col("cid"))), Seq("cid"))
+      .select(col("qid"), col("cid"), col("id"),
+        posexplode(col("codes")).as(Seq("subspace", "code")))
+      .join(broadcast(dtable), Seq("qid", "cid", "subspace", "code"))
+      .groupBy(col("qid"), col("id"))
+      .agg(sum(round(col("d2"), 6).cast(
+        org.apache.spark.sql.types.DecimalType(28, 8))).cast("double").as("adc"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("adc"), col("id"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("qid"), col("rank"), col("id"), col("adc"))
+  }
+
+  /** [[Similarity]]'s subspace slice: width ⌊d/m⌋, the last takes the rest. */
+  private def pqSlice(vec: Column, m: Int, s: Column): Column = {
+    val base = floor(size(vec) / m).cast("int")
+    slice(vec, s * base + 1, when(s === m - 1, size(vec) - base * (m - 1)).otherwise(base))
   }
 }

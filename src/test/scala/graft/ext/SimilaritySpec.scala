@@ -319,6 +319,51 @@ class SimilaritySpec extends SparkSuite {
       "nProbe < |lists| must restrict the scanned code set")
   }
 
+  test("PQ codebooks, IVF×PQ index and searches equal their join/union references row for row") {
+    val emb = Tables.load(spark, dir, "embeddings")
+    val corpus = emb.select($"vec_id".as("id"),
+      $"embedding".cast("array<double>").as("vec"))
+    val cents = emb.filter($"vec_id" < 8)
+      .select($"vec_id".as("cid"), $"embedding".cast("array<double>").as("cvec"))
+    val queries = corpus.filter($"id" < 5).select($"id".as("qid"), $"vec".as("qvec"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }).sortBy(_.mkString("|")).toSeq
+    // m = 3 leaves a 22-dim remainder subspace on the 64-dim vectors
+    for (m <- Seq(3, 4); iters <- Seq(1, 2)) {
+      val books = Similarity.pqCodebooks(corpus, m, ksub = 16, iters)
+      assert(rows(books) === rows(SimilarityRefs.pqCodebooksUnion(corpus, m, 16, iters)),
+        s"codebooks m=$m iters=$iters")
+      val index = Similarity.ivfPqIndex(corpus, cents, books, m)
+      val indexRef = Similarity.encodeAssigned(Similarity.kmeansAssign(corpus, cents)
+        .select($"id", $"cluster".as("cid"), $"vec"), books, m)
+      assert(rows(index) === rows(indexRef), s"index m=$m iters=$iters")
+      for (nProbe <- Seq(1, 2, 8)) {
+        val got = rows(Similarity.ivfPqTopK(index, cents, books, queries, m, k = 10, nProbe))
+        assert(got.size === 50, s"5 queries × top-10, m=$m iters=$iters nProbe=$nProbe")
+        assert(got === rows(SimilarityRefs.ivfPqTopKJoin(index, cents, books, queries, m, 10,
+          nProbe)), s"search m=$m iters=$iters nProbe=$nProbe")
+      }
+    }
+    // the residual and PCA-rotated residual searches share the raw search
+    for (m <- Seq(3, 4)) {
+      val (rIndex, rBooks) = Similarity.ivfPqResidual(corpus, cents, m, ksub = 16)
+      val (oIndex, oBooks, model) = Similarity.ivfPqOpq(corpus, cents, m, ksub = 16)
+      for (nProbe <- Seq(1, 2, 8)) {
+        val res = rows(Similarity.ivfPqResidualTopK(rIndex, cents, rBooks, queries, m, 10,
+          nProbe))
+        assert(res.size === 50 && res === rows(SimilarityRefs.ivfPqResidualTopKJoin(rIndex,
+          cents, rBooks, queries, None, m, 10, nProbe)), s"residual m=$m nProbe=$nProbe")
+        val opq = rows(Similarity.ivfPqOpqTopK(oIndex, cents, oBooks, model, queries, m, 10,
+          nProbe))
+        assert(opq.size === 50 && opq === rows(SimilarityRefs.ivfPqResidualTopKJoin(oIndex,
+          cents, oBooks, queries, Some(model), m, 10, nProbe)), s"OPQ m=$m nProbe=$nProbe")
+      }
+    }
+  }
+
   test("IVF×PQ refine: full shortlist equals exact top-k; recall never below unrefined") {
     val emb = Tables.load(spark, dir, "embeddings")
     val corpus = emb.select($"vec_id".as("id"),

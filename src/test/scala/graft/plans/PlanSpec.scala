@@ -2,12 +2,20 @@ package graft.plans
 
 import graft.{QueryCatalog, SparkSuite}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{InputAdapter, LogicalRDD, ProjectExec, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions: the plans we'd want at 100 TB, locked in
   * as tests so a refactor can't silently regress them.
   */
-class PlanSpec extends SparkSuite {
+class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   val dir = "/root/testdata/sf0.001"
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
@@ -193,39 +201,59 @@ class PlanSpec extends SparkSuite {
       s"native fused PQ encode in the plan:\n$p")
   }
 
-  test("q120 IVF×PQ: centroids/codebooks/probes broadcast-only, no cartesian product") {
-    val p = plan(QueryCatalog.queries("q120_ivfpq_topk")(spark, dir))
+  /** A plan that yields at most one row: a global aggregate, or a
+    * projection / exchange / codegen wrapper over one. */
+  private def oneRow(p: SparkPlan): Boolean = p match {
+    case a: BaseAggregateExec => a.groupingExpressions.isEmpty
+    case _: ProjectExec | _: BroadcastExchangeExec | _: ShuffleExchangeExec |
+        _: WholeStageCodegenExec | _: InputAdapter => oneRow(p.children.head)
+    case _ => false
+  }
+
+  /** The raw IVF×PQ search shape q120 and q121 share; returns the plan's
+    * broadcast hash joins for the caller's own checks. */
+  private def ivfPqSearchShape(df: DataFrame): Seq[BroadcastHashJoinExec] = {
+    val exec = df.queryExecution.executedPlan
+    val p = exec.toString
     assert(!p.contains("CartesianProduct"),
       s"IVFPQ must never go all-pairs against the corpus:\n$p")
-    // the only nested-loop joins are the BROADCAST centroid cross joins
-    // (coarse assignment + probe selection) — constant-size build sides
-    val bnl = "BroadcastNestedLoopJoin".r.findAllIn(p).length
-    assert(bnl <= 3, s"only the centroid cross joins may nest-loop, got $bnl")
-    // equi-broadcasts: codebook encode join, (qid,cid) list-pruning join,
-    // (qid,subspace,code) ADC-table join
-    val bhj = "BroadcastHashJoin".r.findAllIn(p).length
-    assert(bhj >= 3,
-      s"encode/list-prune/ADC joins must all broadcast, got $bhj in:\n$p")
     // no sort-merge join anywhere: nothing data-proportional shuffles for
     // a join in the search path
     assert(!p.contains("SortMergeJoin"),
       s"IVFPQ search must not shuffle-join the corpus:\n$p")
+    // every nested loop builds a constant one-row side; there are two:
+    // corpus × quantizer row (index build) and queries × quantizer row
+    // (probe rows), one broadcast that AQE reuses at run time
+    val bnl = collect(exec) { case j: BroadcastNestedLoopJoinExec => j }
+    bnl.foreach { j =>
+      val build = if (j.buildSide == BuildRight) j.right else j.left
+      assert(oneRow(build), s"nested loop over a non-constant build side:\n$j")
+    }
+    assert(bnl.size <= 2, s"only the quantizer-row cross joins may nest-loop, got " +
+      s"${bnl.size} in:\n$p")
+    val bhj = collect(exec) { case j: BroadcastHashJoinExec => j }
+    assert(bhj.exists(joinsOn(_, "cid")),
+      s"list pruning must stay an equi-broadcast on cid:\n$p")
+    // no localCheckpoint barrier: the builder plans, it starts no job
+    assert(df.queryExecution.optimizedPlan.collect { case r: LogicalRDD => r }.isEmpty,
+      s"a barrier is back in the IVF×PQ search plan:\n$p")
+    bhj
+  }
+
+  private def joinsOn(j: BroadcastHashJoinExec, key: String): Boolean =
+    j.leftKeys.flatMap(_.references.map(_.name)) == Seq(key)
+
+  test("q120 IVF×PQ: centroids/codebooks/probes broadcast-only, no cartesian product") {
+    ivfPqSearchShape(QueryCatalog.queries("q120_ivfpq_topk")(spark, dir))
   }
 
   test("q121 IVF×PQ refine: candidate-pruned raw fetch, no cartesian, no shuffle join") {
-    val p = plan(QueryCatalog.queries("q121_ivfpq_refine")(spark, dir))
-    assert(!p.contains("CartesianProduct"),
-      s"refine must never go all-pairs against the corpus:\n$p")
-    // centroid cross joins (coarse assign + probe selection) are the only
-    // permissible nested loops — constant-size build sides
-    val bnl = "BroadcastNestedLoopJoin".r.findAllIn(p).length
-    assert(bnl <= 3, s"only the centroid cross joins may nest-loop, got $bnl")
-    assert(!p.contains("SortMergeJoin"),
-      s"the raw-vector fetch must be a broadcast-pruned keyed join, not a shuffle:\n$p")
-    // encode/list-prune/ADC joins plus the shortlist fetch + query re-attach
-    val bhj = "BroadcastHashJoin".r.findAllIn(p).length
-    assert(bhj >= 5,
-      s"shortlist fetch and query re-attach must broadcast like the search joins, got $bhj in:\n$p")
+    val df = QueryCatalog.queries("q121_ivfpq_refine")(spark, dir)
+    val bhj = ivfPqSearchShape(df)
+    // the shortlist fetch (on id) and the query re-attach (on qid) must
+    // broadcast like the list-pruning join
+    Seq("id", "qid").foreach(key => assert(bhj.exists(joinsOn(_, key)),
+      s"the $key join must be a broadcast hash join:\n${df.queryExecution.executedPlan}"))
   }
 
   test("q122 residual IVF×PQ: broadcast-only tables, pruned seed branches, no shuffle join") {
