@@ -610,14 +610,26 @@ object Similarity {
     * Output (id, cid, codes): m small ints + a list id per vector — the
     * raw vectors are never needed again at search time. Vectors are
     * encoded RAW (not residual-to-centroid), which keeps DuckDB-exact
-    * oracle checking simple; [[ivfPqResidual]] is the residual form. */
+    * oracle checking simple; [[ivfPqResidual]] is the residual form.
+    *
+    * The index is total: a vector with no nearest centroid (a null or NaN
+    * vector, or no centroids) fails the build instead of landing in no
+    * list. That makes `cid` non-nullable, so the `isnotnull(cid)` a
+    * search's join on `cid` infers folds away; on a nullable `cid` the
+    * optimizer pushes it into the nested loop above as a second
+    * nearest-centroid search per row. */
   def ivfPqIndex(corpus: DataFrame, centroids: DataFrame,
-      codebooks: DataFrame, m: Int): DataFrame =
+      codebooks: DataFrame, m: Int): DataFrame = {
+    val nearest = org.apache.spark.sql.graft.ColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
+        org.apache.spark.sql.graft.ColumnBridge.expression(
+          graft.functions.NearestKey.nearestBySqDist(col("vec"), col("__cands"))),
+        Seq("ivfPqIndex: a corpus vector has no nearest centroid")))
     corpus.crossJoin(broadcast(quantizerRow(centroids, codebooks)))
       .select(col("id"),
-        graft.functions.NearestKey.nearestBySqDist(col("vec"), col("__cands"))
-          .getField("key").cast(centroids.schema("cid").dataType).as("cid"),
+        nearest.getField("key").cast(centroids.schema("cid").dataType).as("cid"),
         pqCodes(codebooks, m).as("codes"))
+  }
 
   /** The one-row broadcast an IVF×PQ index build and search share: the
     * centroid candidates `__cands` (as [[candsOf]]) and the codebooks

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, BindReferences, Expression, JoinedRow, NullsFirst,
@@ -12,41 +12,47 @@ import org.apache.spark.sql.catalyst.plans.physical.{
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions._
 
-/** NATIVE RANGE (point-in-interval) JOIN — the second whole-operator
-  * physical tier after [[NativeAsOf]], replacing the composed
-  * [[graft.ext.RangeJoin.pointInInterval]]'s per-bin HASH JOIN + post-join
-  * filter with an exec-side interval SWEEP under the SAME bin-replication
-  * semantics (intervals exploded to every bin they overlap, each match
-  * attributed to the point's single bin — so the pair set needs no dedup).
+/** NATIVE RANGE (point-in-interval) JOIN — the whole-operator physical
+  * tier (custom `LogicalPlan` + planner `SparkStrategy` + physical
+  * `SparkPlan`) and the one range join in the library.
   *
-  * What the native exec sheds, concretely:
-  *  - the per-bin cartesian: the shuffled-hash form probes the bin id and
-  *    emits EVERY interval replica in the point's bin for every point, then
-  *    filters `start <= p <= end` — per-bin cost O(|P_bin|·|I_bin|). The
-  *    sweep walks both sides ONCE in (bin, time) order keeping only the
-  *    ACTIVE intervals (start ≤ current point, end not yet passed) — per
-  *    point it touches active + expiring intervals only, O(|P| + |I| +
-  *    matches) per bin instead of the bin cross product. Dense bins are
-  *    exactly where the composed form degrades; they cost the sweep
-  *    nothing extra beyond its active set.
-  *  - the `__bin` column and the filter stage: requiredChildDistribution/
-  *    Ordering hand partitioning+sort to Catalyst (the SortMergeJoin
-  *    mechanism, same as NativeAsOf), the predicate is fused in the merge,
-  *    and the bin id never reaches the output projection.
+  * Spark plans `points JOIN intervals ON p BETWEEN s AND e` as
+  * BroadcastNestedLoopJoin — O(|P|·|I|) compares, non-viable once the
+  * interval side outgrows a broadcast. The scale shape (Flink interval
+  * joins, spatial engines' grid joins) is BINNING: discretize the domain
+  * into fixed-width bins ([[binOf]]), replicate each interval to every bin
+  * it overlaps, map each point to its single bin, and co-partition both
+  * sides on the bin id. A (point, interval) pair meets in EXACTLY one bin
+  * — the point's — so the pair set needs no dedup. Pick `binWidth` ≈ the
+  * typical interval length: short intervals replicate ~2×, and bin
+  * population (not the whole table) bounds the per-bin work; long-tail
+  * intervals (≫ binWidth) replicate proportionally.
   *
-  * Semantics — identical to the composed operator, spec-pinned bit-equal
+  * Within a bin the exec SWEEPS instead of hash-probing: the bin-join form
+  * (`RangeJoinRefs.pointInIntervalComposed` in the tests) probes the bin
+  * id and emits EVERY interval replica in the point's bin for every
+  * point, then filters `start <= p <= end` — per-bin cost
+  * O(|P_bin|·|I_bin|). The sweep walks both sides ONCE in (bin, time)
+  * order keeping only the ACTIVE intervals (start ≤ current point, end not
+  * yet passed) — O(|P| + |I| + matches) per bin. Dense bins are exactly
+  * where the bin join degrades; they cost the sweep nothing extra beyond
+  * its active set. requiredChildDistribution/Ordering hand partitioning
+  * and sort to Catalyst (the SortMergeJoin mechanism), the predicate is
+  * fused in the merge, and the bin id never reaches the output.
+  *
+  * Semantics — spec-pinned bit-equal to the bin-join reference
   * (NativeRangeSpec): inner join of points to intervals with
-  * `start <= point <= end` (closed ends, integral units); null point /
-  * start / end rows never match (their bin is null in the composed form,
-  * and null keys drop from an equi-join). Output: left columns then right
-  * columns, matches only, in left-row order within a partition.
+  * `start <= point <= end` (closed ends, integral Long/Int units); null
+  * point / start / end rows never match. Output: left columns then right
+  * columns, matches only, in left-row order within a partition. The two
+  * inputs must not share attribute lineage (re-read the table for a
+  * self-range-join); an input that does not qualify fails up front.
   *
   * Scale: distribution is per-bin (ClusteredDistribution on the bin ids) —
   * the planner co-partitions both sides exactly as it would an equi-join,
   * AQE still coalesces/splits on the exchanges, and the active set is
-  * bounded by intervals-per-bin (the same quantity that bounds the
-  * composed form's bucket), so executor memory holds O(bin population)
-  * interval copies, never a table.
+  * bounded by intervals-per-bin, so executor memory holds O(bin
+  * population) interval copies, never a table.
   */
 object NativeRange {
 
@@ -202,12 +208,22 @@ object NativeRange {
     }
   }
 
-  /** `points` matched to every `intervals` row whose
-    * `[start, end]` (closed, integral units) contains `point` — the
-    * native-exec surface of [[graft.ext.RangeJoin.pointInInterval]],
-    * same output columns (all of both inputs), matches only. The two
-    * inputs must not share attribute lineage (re-read the table for a
-    * self-range-join, the [[NativeAsOf]] q208 discipline). */
+  /** Exact floor-division for bin assignment (r17, was `floor(c / w.toDouble)`):
+    * the double round-trip silently mis-bins magnitudes above 2⁵³ (a long
+    * that rounds to a neighbouring double crosses a bin edge ⇒ dropped
+    * matches). `c − pmod(c, w)` is the exact largest multiple of w ≤ c
+    * (pmod is nonnegative), and integral `div` of an exact multiple is
+    * exact for every sign — all in 64-bit integer arithmetic. Domain:
+    * c > Long.MinValue + w (the subtraction must not wrap), which every
+    * epoch-unit column satisfies. */
+  private[graft] def binOf(c: Column, binWidth: Long): Column =
+    call_function("div", c.cast("long") - pmod(c.cast("long"), lit(binWidth)),
+      lit(binWidth))
+
+  /** `points` matched to every `intervals` row whose `[start, end]`
+    * (closed, integral Long/Int units) contains `point`. Output: all
+    * columns of both inputs, matches only. The two inputs must not share
+    * attribute lineage (re-read the table for a self-range-join). */
   def pointInInterval(
       points: DataFrame, intervals: DataFrame,
       point: String, start: String, end: String,
@@ -217,15 +233,9 @@ object NativeRange {
     if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ RangeJoinStrategy
-    // exact integer floor-division (r17): the former floor(col / w.toDouble)
-    // mis-bins magnitudes above 2^53 — see RangeJoin.binOf, shared so the
-    // native and composed forms bin identically at every magnitude
-    val pb = points.withColumn("__bin",
-      graft.ext.RangeJoin.binOf(col(point), binWidth))
+    val pb = points.withColumn("__bin", binOf(col(point), binWidth))
     val ib = intervals.withColumn("__bin",
-      explode(sequence(
-        graft.ext.RangeJoin.binOf(col(start), binWidth),
-        graft.ext.RangeJoin.binOf(col(end), binWidth))))
+      explode(sequence(binOf(col(start), binWidth), binOf(col(end), binWidth))))
     val lp = pb.queryExecution.analyzed
     val rp = ib.queryExecution.analyzed
     require(lp.outputSet.intersect(rp.outputSet).isEmpty,
@@ -243,5 +253,37 @@ object NativeRange {
       attr(lp, "__bin"), attr(rp, "__bin"),
       attr(lp, point), attr(rp, start), attr(rp, end))
     org.apache.spark.sql.graft.PlanBridge.ofRows(spark, node)
+  }
+
+  /** Interval × interval OVERLAP join (closed intervals, integral units):
+    * pairs where `lStart <= rEnd AND rStart <= lEnd`. Both inputs must
+    * hold VALID intervals (start ≤ end) with column names disjoint across
+    * the two sides, and meet [[pointInInterval]]'s requirements.
+    *
+    * Two point-in-interval sweeps under max-start attribution — every
+    * overlapping pair has `max(lStart, rStart)` inside both intervals, so
+    *  - pass 1 (`lStart ∈ [rStart, rEnd]`) emits exactly the pairs with
+    *    lStart ≥ rStart, and
+    *  - pass 2 (`rStart ∈ [lStart+1, lEnd]`, half-open via the +1 on
+    *    integral units) emits exactly the pairs with rStart > lStart —
+    * a disjoint, complete split: each pair exactly once, no dedup. Each
+    * sweep is O(|points| + |replicas| + matches) per bin, where a single
+    * bin join pays the per-bin CROSS PRODUCT of left replicas × right
+    * replicas (SCALING.md, "Native vs composed interval OVERLAP"). */
+  def intervalOverlap(
+      left: DataFrame, right: DataFrame,
+      lStart: String, lEnd: String, rStart: String, rEnd: String,
+      binWidth: Long): DataFrame = {
+    val outCols = (left.columns ++ right.columns).map(col).toSeq
+    // pass 1: rStart <= lStart <= rEnd — overlap follows (lEnd >= lStart)
+    val p1 = pointInInterval(left, right, lStart, rStart, rEnd, binWidth)
+      .select(outCols: _*)
+    // pass 2: lStart < rStart <= lEnd, strict via integral +1; intervals
+    // too short to host a strictly-greater start drop out structurally
+    val ls = left.withColumn("__s1", col(lStart) + 1)
+      .filter(col(lEnd) >= col("__s1"))
+    val p2 = pointInInterval(right, ls, rStart, "__s1", lEnd, binWidth)
+      .select(outCols: _*)
+    p1.unionByName(p2)
   }
 }

@@ -286,7 +286,7 @@ object Analytics {
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts"),
           col("event_id").as("click_id"), col("value").as("click_value"))
-      graft.ext.AsOfJoin.asOf(purchases, clicks, "user_id", "ts", "ts",
+      graft.ext.AsOfJoin.asOf(purchases, clicks, Seq("user_id"), "ts", "ts",
           Seq("click_id", "click_value"))
         .select(
           col("user_id"), col("event_id"),
@@ -303,96 +303,34 @@ object Analytics {
         ON p.user_id = c.user_id AND CAST(p.ts AS TIMESTAMP) >= CAST(c.ts AS TIMESTAMP)
     """))
 
-  /** q49's as-of join through the NATIVE physical operator
-    * ([[graft.plans.NativeAsOf]]: custom LogicalPlan + SparkStrategy +
-    * BinaryExecNode stream-merge) instead of the composed union+window —
-    * same semantics (NativeAsOfSpec pins bit-equality incl. the tie
-    * rule), same DuckDB oracle, different execution: each side shuffles
-    * at its OWN schema width (the union formulation pads every row to
-    * the combined width through the exchange — the cost that matters on
-    * wide 100 TB fact tables), then one forward merge pass with O(1)
-    * state per key. The right side is re-read for fresh attribute
-    * lineage (self-as-of). */
-  lazy val q208AsOfNative: Q = Q(
-    "q208_asof_native",
-    (s, dir) => {
-      val purchases = t(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select("event_id", "ts", "user_id", "value")
-      val clicks = t(s, dir, "events") // fresh scan → fresh lineage
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("click_id"), col("value").as("click_value"))
-      graft.plans.NativeAsOf.asOf(purchases, clicks, "user_id", "ts", "ts",
-          Seq("click_id", "click_value"))
-        .select(
-          col("user_id"), col("event_id"),
-          col("ts").cast("timestamp_ntz").as("purchase_ts"),
-          col("asof_click_id"), col("asof_click_value"))
-    },
-    Some("""
-      SELECT p.user_id, p.event_id,
-        CAST(p.ts AS TIMESTAMP) AS purchase_ts,
-        c.event_id AS asof_click_id,
-        c.value AS asof_click_value
-      FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        ON p.user_id = c.user_id AND CAST(p.ts AS TIMESTAMP) >= CAST(c.ts AS TIMESTAMP)
-    """))
+  /** q49 under its own name: the library has one as-of join, so q208
+    * runs q49's builder against q49's oracle. */
+  lazy val q208AsOfNative: Q = q49AsOfJoin.copy(name = "q208_asof_native")
 
-  /** q165's FORWARD as-of join through the native exec (one algorithm,
-    * time-reversed sort — see [[graft.plans.NativeAsOf]]): earliest
-    * purchase at-or-after each click, same DuckDB ASOF oracle as q165.
-    * Completes the native tier into the backward/forward family the
-    * composed operators ship. */
-  lazy val q212AsOfNativeForward: Q = Q(
-    "q212_asof_native_forward",
-    (s, dir) => {
-      val clicks = t(s, dir, "events")
-        .filter(col("event_type") === "click")
-        .select("event_id", "ts", "user_id", "value")
-      val purchases = t(s, dir, "events") // fresh scan → fresh lineage
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("purchase_id"), col("value").as("purchase_value"))
-      graft.plans.NativeAsOf.asOf(clicks, purchases, "user_id", "ts", "ts",
-          Seq("purchase_id", "purchase_value"), forward = true)
-        .select(col("user_id"), col("event_id"),
-          col("ts").cast("timestamp_ntz").as("click_ts"),
-          col("asof_purchase_id"), col("asof_purchase_value"))
-    },
-    Some("""
-      SELECT c.user_id, c.event_id,
-        CAST(c.ts AS TIMESTAMP) AS click_ts,
-        p.event_id AS asof_purchase_id,
-        p.value AS asof_purchase_value
-      FROM (SELECT * FROM events WHERE event_type = 'click') c
-      ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-        ON c.user_id = p.user_id AND CAST(c.ts AS TIMESTAMP) <= CAST(p.ts AS TIMESTAMP)
-    """))
+  /** q165 under its own name, as q208 is q49. */
+  lazy val q212AsOfNativeForward: Q =
+    q165AsOfForward.copy(name = "q212_asof_native_forward")
 
-  /** COMPOSITE-KEY NATIVE AS-OF — each event matched to the most recent
-    * PRIOR event of the same (user_id, event_type): the inter-event
-    * recurrence lookup (time-since-last-purchase, error-recurrence gaps)
-    * that real as-of workloads key by (entity, category) — a LONG + STRING
-    * composite, the r15 [[graft.plans.NativeAsOf]] extension (r14 accepted
-    * one Long/Timestamp key; string keys merge by UTF8String binary order,
-    * the same order the planner's sort imposes). STRICT "prior" rides the
-    * inclusive <= contract by shifting the right timeline +1µs (time
-    * columns are Long micros — also exercising the Long-time path); the
-    * DuckDB twin shifts the same epoch in a subquery. Two narrow-width
-    * exchanges + one O(1)-state merge, the q208 scale shape. */
+  /** COMPOSITE-KEY AS-OF — each event matched to the most recent PRIOR
+    * event of the same (user_id, event_type): the inter-event recurrence
+    * lookup (time-since-last-purchase, error-recurrence gaps) that real
+    * as-of workloads key by (entity, category) — a LONG + STRING composite
+    * key through [[graft.ext.AsOfJoin]]'s one keyed shuffle + timeline
+    * sort. STRICT "prior" rides the inclusive <= contract by shifting the
+    * right timeline +1µs (time columns are Long micros); the DuckDB twin
+    * shifts the same epoch in a subquery. */
   lazy val q236AsOfComposite: Q = Q(
     "q236_asof_composite",
     (s, dir) => {
-      val ev = t(s, dir, "events")
+      val events = t(s, dir, "events")
+      val ev = events
         .select(col("event_id"), col("user_id"), col("event_type"),
           unix_micros(col("ts")).as("t_us"), col("ts"), col("value"))
-      val prior = t(s, dir, "events") // fresh scan → fresh lineage
+      val prior = events
         .select(col("user_id"), col("event_type"),
           (unix_micros(col("ts")) + 1).as("t_us"),
           col("event_id").as("prev_event_id"), col("value").as("prev_value"))
-      graft.plans.NativeAsOf.asOf(ev, prior, Seq("user_id", "event_type"),
+      graft.ext.AsOfJoin.asOf(ev, prior, Seq("user_id", "event_type"),
           "t_us", "t_us", Seq("prev_event_id", "prev_value"))
         .select(col("user_id"), col("event_type"), col("event_id"),
           col("ts").cast("timestamp_ntz").as("event_ts"),
@@ -2566,14 +2504,14 @@ object Analytics {
       GROUP BY a.day, a.x, a.mu
     """))
 
-  /** INTERVAL-OVERLAP JOIN ([[graft.ext.RangeJoin.intervalOverlap]]) —
+  /** INTERVAL-OVERLAP JOIN ([[graft.plans.NativeRange.intervalOverlap]]) —
     * which user sessions overlapped each error-burst incident window:
     * sessions (the q24 30-minute-gap recipe) × hourly incident intervals
     * (hours with ≥ 2 errors, spanned by their first..last error — the dial is scale-free so the smallest SF still produces incidents). The
     * genuinely interval×interval case q55's point-in-interval can't
     * express. Scale shape: both sides replicate to hour bins and meet in
-    * an EQUI-join; the canonical-bin rule (overlap-start's bin) keeps it
-    * duplicate-free with no distinct pass — never a nested loop. Overlap
+    * two interval sweeps split by max-start attribution, so each pair is
+    * emitted once with no distinct pass — never a nested loop. Overlap
     * durations are exact integer micros. */
   lazy val q185IntervalOverlap: Q = Q(
     "q185_interval_overlap",
@@ -2596,7 +2534,7 @@ object Analytics {
           min(col("us")).as("i_start"), max(col("us")).as("i_end"))
         .filter(col("n_err") >= 2)
         .drop("n_err")
-      graft.ext.RangeJoin.intervalOverlap(sess, incidents,
+      graft.plans.NativeRange.intervalOverlap(sess, incidents,
           "s_start", "s_end", "i_start", "i_end", binWidth = 3600000000L)
         .groupBy(col("hr"), col("i_start"), col("i_end"))
         .agg(count(lit(1)).as("n_sessions"),
@@ -3065,7 +3003,7 @@ object Analytics {
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"),
           col("event_id").as("purchase_id"), col("value").as("purchase_value"))
-      graft.ext.AsOfJoin.asOfForward(clicks, purchases, "user_id", "ts", "ts",
+      graft.ext.AsOfJoin.asOfForward(clicks, purchases, Seq("user_id"), "ts", "ts",
           Seq("purchase_id", "purchase_value"))
         .select(col("user_id"), col("event_id"),
           col("ts").cast("timestamp_ntz").as("click_ts"),
@@ -3099,7 +3037,7 @@ object Analytics {
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), unix_micros(col("ts")).as("tsu"),
           col("event_id").as("purchase_id"), col("value").as("purchase_value"))
-      graft.ext.AsOfJoin.asOfNearest(clicks, purchases, "user_id", "tsu", "tsu",
+      graft.ext.AsOfJoin.asOfNearest(clicks, purchases, Seq("user_id"), "tsu", "tsu",
           Seq("purchase_id", "purchase_value"), tolerance = Some(3600000000L))
         .select(col("user_id"), col("event_id"), col("tsu"),
           col("asof_purchase_id"), col("asof_purchase_value"))

@@ -142,16 +142,12 @@ object SetOps {
       ON a.o_custkey = b.o_custkey
     """))
 
-  /** Range (point-in-interval) join via binning ([[graft.ext.RangeJoin]]):
+  /** Range (point-in-interval) join through [[graft.plans.NativeRange]]:
     * orders falling inside the 7-day windows opened by the 50 biggest
     * orders. The naive BETWEEN join is a nested-loop plan; the binned form
-    * is an equi-join on the bin id + exact verify. Since r17 the
-    * production path plans through the NATIVE exec (the
-    * `RangeJoin.pointInInterval` dispatcher): the two sides re-read the
-    * table (fresh lineage, the q208/q267 discipline), so the call
-    * qualifies for [[graft.plans.NativeRange]]'s interval sweep; q267
-    * keeps the explicit-native twin and NativeRangeSpec pins parity on
-    * this exact production call. */
+    * co-partitions both sides on the bin id and sweeps each bin's
+    * intervals. The two sides re-read the table, so their attribute
+    * lineage is disjoint, as the native node requires. */
   val q55RangeJoin: Q = Q(
     "q55_range_join",
     (s, dir) => {
@@ -164,7 +160,7 @@ object SetOps {
         .withColumn("win_end", date_add(col("win_start"), 7))
         .withColumn("sday", unix_date(col("win_start")))
         .withColumn("eday", unix_date(col("win_end")))
-      graft.ext.RangeJoin.pointInInterval(points, win, "pday", "sday", "eday", binWidth = 16)
+      graft.plans.NativeRange.pointInInterval(points, win, "pday", "sday", "eday", binWidth = 16)
         .select(col("win_id"), col("o_orderkey"), col("pdate"))
     },
     Some("""
@@ -178,40 +174,9 @@ object SetOps {
         ON CAST(o.o_orderdate AS DATE) BETWEEN w.win_start AND w.win_end
     """))
 
-  /** q55 THROUGH THE NATIVE PHYSICAL OPERATOR
-    * ([[graft.plans.NativeRange]]) — same bin-replication semantics, but
-    * the per-bin hash join + post-filter is an exec-side interval sweep
-    * (active-set merge, O(|P|+|I|+matches) per bin instead of the bin
-    * cross product). Same oracle as q55; NativeRangeSpec pins the two
-    * implementations bit-equal on testdata and adversarial layouts. The
-    * two inputs re-read the table (fresh attribute lineage — the q208
-    * discipline for self-joins through native nodes). */
-  val q267RangeNative: Q = Q(
-    "q267_range_native",
-    (s, dir) => {
-      val points = t(s, dir, "orders")
-        .select(col("o_orderkey"), to_date(col("o_orderdate")).as("pdate"))
-        .withColumn("pday", unix_date(col("pdate")).cast("long"))
-      val win = t(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(50)
-        .select(col("o_orderkey").as("win_id"), to_date(col("o_orderdate")).as("win_start"))
-        .withColumn("win_end", date_add(col("win_start"), 7))
-        .withColumn("sday", unix_date(col("win_start")).cast("long"))
-        .withColumn("eday", unix_date(col("win_end")).cast("long"))
-      graft.plans.NativeRange.pointInInterval(
-          points, win, "pday", "sday", "eday", binWidth = 16)
-        .select(col("win_id"), col("o_orderkey"), col("pdate"))
-    },
-    Some("""
-      WITH win AS (
-        SELECT o_orderkey AS win_id,
-               CAST(o_orderdate AS DATE) AS win_start,
-               CAST(o_orderdate AS DATE) + 7 AS win_end
-        FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 50)
-      SELECT w.win_id, o.o_orderkey, CAST(o.o_orderdate AS DATE) AS pdate
-      FROM orders o JOIN win w
-        ON CAST(o.o_orderdate AS DATE) BETWEEN w.win_start AND w.win_end
-    """))
+  /** q55 under its own name: the library has one range join, so q267
+    * runs q55's builder against q55's oracle. */
+  val q267RangeNative: Q = q55RangeJoin.copy(name = "q267_range_native")
 
   val all: Seq[Q] = Seq(
     q12Union, q13Except, q14Semi, q15Anti, q16LeftJoinAgg, q52Intersect, q53FullOuter,

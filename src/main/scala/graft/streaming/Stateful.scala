@@ -426,7 +426,7 @@ object Stateful {
   }
 
   /** STREAMING AS-OF (latest-state enrichment) — the incremental twin of
-    * the batch backward as-of join (q49 composed / q208 native): per key,
+    * the batch backward as-of join ([[graft.ext.AsOfJoin.asOf]], q49): per key,
     * state is the LATEST right-side row seen ((tsMicros, id, value)); each
     * left-side row emits tagged with the held right row at-or-before it.
     * This is the stream-enrichment shape ("stamp each event with the most

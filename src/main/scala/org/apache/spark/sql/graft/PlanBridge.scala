@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge to `private[sql] Dataset.ofRows`: materialize a DataFrame from a
   * custom [[LogicalPlan]] (the whole-operator extension tier — e.g.
-  * [[graft.plans.NativeAsOf]]'s AsOfJoinNode). The public API offers no
+  * [[graft.plans.NativeRange]]'s RangeJoinNode). The public API offers no
   * way to wrap a hand-built logical node; this is the same package-escape
   * the house uses for the function registry ([[FunctionBridge]]).
   */

@@ -12,6 +12,9 @@ import scala.jdk.CollectionConverters._
   *  - entry points: `graft.Bench` and `graft.Verify` are the only mains. A
   *    hand-run probe belongs in a spec that guards its numbers, or in
   *    `perfbench`.
+  *  - planner strategies: `plans/NativeRange` is the only code that adds a
+  *    strategy to the caller's session (`experimental.extraStrategies`).
+  *    An operator that stock Spark can express runs through stock Spark.
   */
 class EnvSettingsSpec extends AnyFunSuite {
   private val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR")
@@ -50,5 +53,12 @@ class EnvSettingsSpec extends AnyFunSuite {
     val mains = sources.collect { case (f, src) if entry.findFirstIn(src).isDefined => f }
     assert(mains.sorted === Seq("graft/Bench.scala", "graft/Verify.scala"),
       s"entry points in src/main/scala: ${mains.sorted.mkString(", ")}")
+  }
+
+  test("only NativeRange assigns experimental.extraStrategies in src/main") {
+    val assign = """experimental\.extraStrategies\s*=(?!=)""".r
+    val files = sources.collect { case (f, src) if assign.findFirstIn(src).isDefined => f }
+    assert(files.sorted === Seq("graft/plans/NativeRange.scala"),
+      s"files that assign experimental.extraStrategies: ${files.sorted.mkString(", ")}")
   }
 }

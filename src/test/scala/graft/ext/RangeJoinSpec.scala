@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSuite
+import graft.plans.NativeRange
 import org.apache.spark.sql.functions._
 
 class RangeJoinSpec extends SparkSuite {
@@ -19,8 +20,8 @@ class RangeJoinSpec extends SparkSuite {
          (form, f) <- Seq[(String, (org.apache.spark.sql.DataFrame,
              org.apache.spark.sql.DataFrame, String, String, String, Long)
                => org.apache.spark.sql.DataFrame)](
-           ("dispatch", RangeJoin.pointInInterval),
-           ("composed", RangeJoin.pointInIntervalComposed))) {
+           ("native", NativeRange.pointInInterval),
+           ("composed", RangeJoinRefs.pointInIntervalComposed))) {
       val binned = f(points, intervals, "p", "s", "e", w)
         .select($"pid", $"iid").as[(Long, Long)].collect()
       assert(binned.length === binned.toSet.size, s"no duplicate pairs at width $w ($form)")
@@ -29,7 +30,7 @@ class RangeJoinSpec extends SparkSuite {
   }
 
   test("binned range join plans an equi-join, not a nested loop") {
-    val out = RangeJoin.pointInInterval(points, intervals, "p", "s", "e", 16)
+    val out = NativeRange.pointInInterval(points, intervals, "p", "s", "e", 16)
     val p = out.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"range join must be an equi-join on the bin:\n$p")
@@ -37,7 +38,7 @@ class RangeJoinSpec extends SparkSuite {
 
   test("negative domain values bin correctly (floor, not truncate)") {
     val ivl = Seq((1L, -10L, -1L)).toDF("iid", "s", "e")
-    for (f <- Seq(RangeJoin.pointInInterval _, RangeJoin.pointInIntervalComposed _)) {
+    for (f <- Seq(NativeRange.pointInInterval _, RangeJoinRefs.pointInIntervalComposed _)) {
       val got = f(points, ivl, "p", "s", "e", 7)
         .select($"pid").as[Long].collect().toSeq
       assert(got === Seq(5L))
@@ -53,7 +54,7 @@ class RangeJoinSpec extends SparkSuite {
     val pts = Seq((1L, big - 1L), (2L, big), (3L, big + 999L))
       .toDF("pid", "p")
     val ivl = Seq((10L, big, big + 999L)).toDF("iid", "s", "e")
-    for (f <- Seq(RangeJoin.pointInInterval _, RangeJoin.pointInIntervalComposed _)) {
+    for (f <- Seq(NativeRange.pointInInterval _, RangeJoinRefs.pointInIntervalComposed _)) {
       val got = f(pts, ivl, "p", "s", "e", 1000L)
         .select($"pid").as[Long].collect().toSet
       assert(got === Set(2L, 3L))
@@ -72,12 +73,12 @@ class RangeJoinSpec extends SparkSuite {
       .select($"lid", $"rid").as[(Long, Long)].collect().toSet
     assert(naive === Set((1L, 10L), (2L, 10L), (2L, 20L), (3L, 10L), (3L, 30L), (4L, 30L)))
     for (w <- Seq(1L, 8L, 64L, 1000L)) {
-      val got = RangeJoin.intervalOverlap(left, right, "ls", "le", "rs", "re", w)
+      val got = NativeRange.intervalOverlap(left, right, "ls", "le", "rs", "re", w)
         .select($"lid", $"rid").as[(Long, Long)].collect()
       assert(got.length === got.toSet.size, s"no duplicate pairs at width $w")
       assert(got.toSet === naive, s"overlap join must equal naive at width $w")
     }
-    val p = RangeJoin.intervalOverlap(left, right, "ls", "le", "rs", "re", 8)
+    val p = NativeRange.intervalOverlap(left, right, "ls", "le", "rs", "re", 8)
       .queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"overlap join must be an equi-join on the bin:\n$p")

@@ -13,25 +13,19 @@ import org.apache.spark.sql.catalyst.plans.physical.{
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions.col
 
-/** NATIVE AS-OF JOIN — the whole-operator extension tier (custom
-  * `LogicalPlan` + planner `SparkStrategy` + physical `SparkPlan`),
-  * complementing the repo's composed [[graft.ext.AsOfJoin]] (stock
-  * windows) and its native-`Expression` tier (graft.functions).
-  *
-  * Why a physical operator when the composition already runs in one
-  * shuffle: the union formulation pads EVERY shuffled row to the
-  * combined left+right schema width (each side carries nulls for the
-  * other side's columns through the exchange and the window buffer).
-  * At 100 TB with wide fact/feature schemas that inflation IS the join
-  * cost. This exec shuffles each side at its OWN width (two exchanges,
-  * |L|+|R| narrow rows), sorts within partitions, and stream-merges with
-  * O(1) state per key — no window machinery, no null padding, no row
-  * blow-up. Same declared-requirements mechanism as SortMergeJoin:
-  * `requiredChildDistribution` = ClusteredDistribution per side (Catalyst
-  * inserts and aligns the exchanges; AQE's coalescing is validated
-  * against the same requirements), `requiredChildOrdering` = (key, time)
-  * per side, so the planner owns partitioning/sorting and the exec owns
-  * only the merge.
+/** NATIVE AS-OF JOIN — the reference that [[NativeAsOfSpec]] checks the
+  * library's as-of join ([[graft.ext.AsOfJoin]], a union plus one keyed
+  * window) against. It is a whole-operator implementation (custom
+  * `LogicalPlan` + planner `SparkStrategy` + physical `SparkPlan`) that
+  * shares no code with the form under test: each side shuffles at its
+  * own width, sorts within partitions, and stream-merges with O(1) state
+  * per key — no window machinery, no null padding. Same
+  * declared-requirements mechanism as SortMergeJoin:
+  * `requiredChildDistribution` = ClusteredDistribution per side,
+  * `requiredChildOrdering` = (key, time) per side, so the planner owns
+  * partitioning/sorting and the exec owns only the merge. It registers
+  * its strategy on the session it is given, so it lives in the test tree
+  * only, where each suite owns its session.
   *
   * Semantics — identical to [[graft.ext.AsOfJoin.asOf]] (backward) and
   * [[graft.ext.AsOfJoin.asOfForward]] (forward = true), spec-pinned
@@ -47,8 +41,7 @@ import org.apache.spark.sql.functions.col
   * disqualifies the row — consistent with equi-join conjunction).
   *
   * Types: keys may be LongType, IntegerType, DateType, StringType, or
-  * TimestampType, composite allowed (r15 — r14 accepted a single
-  * Long/Timestamp key only); string keys compare by UTF8String binary
+  * TimestampType, composite allowed; string keys compare by UTF8String binary
   * order, exactly the order Spark's own SortOrder imposes on StringType,
   * so the merge's lexicographic key comparison agrees with the
   * planner-provided sort. Both TIME columns must still be LongType or
@@ -96,9 +89,8 @@ object NativeAsOf {
 
     // the merge keeps the LAST tied (key, time) right row it passes, so
     // the tiebreak sort direction encodes the composed operators' rules:
-    // backward (time asc, hash asc) -> max hash wins (ext.AsOfJoin.asOf's
-    // `last` over ascending __tb); forward (time desc, hash desc) -> MIN
-    // hash wins (asOfForward's `first` over ascending __tb)
+    // backward (time asc, hash asc) -> max hash wins; forward (time desc,
+    // hash desc) -> MIN hash wins
     private def timeDir = if (forward) Descending else Ascending
     override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
       leftKeys.map(SortOrder(_, Ascending, NullsFirst, Seq.empty)) :+
@@ -227,9 +219,9 @@ object NativeAsOf {
   /** `left` (keys..., leftTime, ...) matched to the most recent `right`
     * (keys..., rightTime, payload...) row — output: left.* +
     * `asof_<payload>` columns, exactly [[graft.ext.AsOfJoin.asOf]]'s
-    * surface generalized to composite keys. The two inputs must not share
-    * attribute lineage (re-read the table for a self-as-of, as q208 does)
-    * and payload names must not collide with left's columns. */
+    * surface. The two inputs must not share attribute lineage (re-read
+    * the table for a self-as-of) and payload names must not collide with
+    * left's columns. */
   def asOf(
       left: DataFrame, right: DataFrame,
       keys: Seq[String], leftTime: String, rightTime: String,
@@ -273,7 +265,7 @@ object NativeAsOf {
       payload: Seq[String]): DataFrame =
     asOf(left, right, keys, leftTime, rightTime, payload, forward = false)
 
-  /** Single-key convenience — the r14 surface, unchanged. */
+  /** Single-key convenience. */
   def asOf(
       left: DataFrame, right: DataFrame,
       key: String, leftTime: String, rightTime: String,

@@ -3,15 +3,18 @@ package graft.plans
 import graft.{SparkSuite, Tables}
 import org.apache.spark.sql.functions._
 
-/** The native physical as-of join ([[NativeAsOf]]) against the composed
-  * window formulation ([[graft.ext.AsOfJoin]]) — same semantics contract,
+/** The composed window as-of join ([[graft.ext.AsOfJoin]], the library's
+  * only as-of operator) against [[NativeAsOf]], the independent sort-merge
+  * exec kept in the test tree as its reference — same semantics contract,
   * different execution: the equality here is BIT-equality on full result
-  * sets, across partition layouts, including the tie rule.
+  * sets, across partition layouts, including the tie rule. The plan and
+  * type-whitelist cases pin that the reference stays a separate merge
+  * (no union, no window) rather than a copy of the form under test.
   */
 class NativeAsOfSpec extends SparkSuite {
   import spark.implicits._
 
-  private val dir = "/root/testdata/sf0.001"
+  private val dir = sf("events")
 
   private def purchases = Tables.load(spark, dir, "events")
     .filter(col("event_type") === "purchase")
@@ -27,7 +30,7 @@ class NativeAsOfSpec extends SparkSuite {
 
   test("native == composed on the q49 inputs, across partition layouts") {
     val expected = canon(graft.ext.AsOfJoin.asOf(
-      purchases, clicks, "user_id", "ts", "ts", Seq("click_id", "click_value")))
+      purchases, clicks, Seq("user_id"), "ts", "ts", Seq("click_id", "click_value")))
     assert(expected.nonEmpty)
     for (parts <- Seq(1, 7, 32)) {
       val got = canon(NativeAsOf.asOf(
@@ -53,7 +56,7 @@ class NativeAsOfSpec extends SparkSuite {
     val l = Seq((1L, 10L), (2L, 10L)).toDF("k", "t")
     val r = Seq((1L, 5L, 100L), (1L, 5L, 200L), (1L, 5L, 300L), (2L, 4L, 7L))
       .toDF("k", "t", "p")
-    val composed = canon(graft.ext.AsOfJoin.asOf(l, r, "k", "t", "t", Seq("p")))
+    val composed = canon(graft.ext.AsOfJoin.asOf(l, r, Seq("k"), "t", "t", Seq("p")))
     val native = canon(NativeAsOf.asOf(
       l, Seq((1L, 5L, 100L), (1L, 5L, 200L), (1L, 5L, 300L), (2L, 4L, 7L))
         .toDF("k", "t", "p"), "k", "t", "t", Seq("p")))
@@ -69,7 +72,7 @@ class NativeAsOfSpec extends SparkSuite {
       .select(col("user_id"), col("ts"),
         col("event_id").as("purchase_id"), col("value").as("purchase_value"))
     val expected = canon(graft.ext.AsOfJoin.asOfForward(
-      clicksL, purchasesR, "user_id", "ts", "ts",
+      clicksL, purchasesR, Seq("user_id"), "ts", "ts",
       Seq("purchase_id", "purchase_value")))
     assert(expected.nonEmpty)
     for (parts <- Seq(1, 32)) {
@@ -85,7 +88,7 @@ class NativeAsOfSpec extends SparkSuite {
     val l = Seq((1L, 10L), (1L, 3L), (9L, 5L)).toDF("k", "t")
     def r = Seq((1L, 10L, 100L), (1L, 10L, 200L), (1L, 20L, 300L))
       .toDF("k", "t", "p")
-    val composed = canon(graft.ext.AsOfJoin.asOfForward(l, r, "k", "t", "t", Seq("p")))
+    val composed = canon(graft.ext.AsOfJoin.asOfForward(l, r, Seq("k"), "t", "t", Seq("p")))
     val native = canon(NativeAsOf.asOf(l, r, "k", "t", "t", Seq("p"), forward = true))
     assert(native === composed,
       "forward ties and equal-instant matches must agree with the composed form")
@@ -100,7 +103,7 @@ class NativeAsOfSpec extends SparkSuite {
       .select(col("event_type"), col("ts"),
         col("event_id").as("prev_id"), col("value").as("prev_value"))
     val expected = canon(graft.ext.AsOfJoin.asOf(
-      l, r, "event_type", "ts", "ts", Seq("prev_id", "prev_value")))
+      l, r, Seq("event_type"), "ts", "ts", Seq("prev_id", "prev_value")))
     assert(expected.nonEmpty)
     for (parts <- Seq(1, 32)) {
       val got = canon(NativeAsOf.asOf(
@@ -111,10 +114,10 @@ class NativeAsOfSpec extends SparkSuite {
   }
 
   test("composite (long, string) key == composed over a concatenated synthetic key") {
-    // the composed operator takes one key column, so its reference run
-    // keys on concat(user_id, sep, event_type) — same partitioning, same
-    // tiebreak (the payload hash is key-independent); the native run keys
-    // on the real two-column tuple
+    // the composed run keys on one synthetic column,
+    // concat(user_id, event_type) — same partitioning, same tiebreak (the
+    // payload hash is key-independent); the native run keys on the real
+    // two-column tuple
     def base = Tables.load(spark, dir, "events")
     def lSyn = base.select(col("event_id"), col("ts"), col("value"),
       concat_ws("", col("user_id"), col("event_type")).as("k"))
@@ -122,7 +125,7 @@ class NativeAsOfSpec extends SparkSuite {
       .select(concat_ws("", col("user_id"), col("event_type")).as("k"),
         col("ts"), col("event_id").as("prev_id"))
     val expected = graft.ext.AsOfJoin.asOf(
-        lSyn, rSyn, "k", "ts", "ts", Seq("prev_id"))
+        lSyn, rSyn, Seq("k"), "ts", "ts", Seq("prev_id"))
       .select("event_id", "ts", "value", "asof_prev_id")
     def l = base.select("event_id", "ts", "value", "user_id", "event_type")
     def r = Tables.load(spark, dir, "events")
@@ -145,7 +148,7 @@ class NativeAsOfSpec extends SparkSuite {
       .select(col("event_type"), col("ts"),
         col("event_id").as("next_id"))
     val expected = canon(graft.ext.AsOfJoin.asOfForward(
-      l, r, "event_type", "ts", "ts", Seq("next_id")))
+      l, r, Seq("event_type"), "ts", "ts", Seq("next_id")))
     val got = canon(NativeAsOf.asOf(l.repartition(5), r.repartition(9),
       "event_type", "ts", "ts", Seq("next_id"), forward = true))
     assert(got === expected, "forward string-key diverged")

@@ -4,7 +4,7 @@ import graft.{SparkSuite, Tables}
 import org.apache.spark.sql.functions._
 
 /** The native physical range join ([[NativeRange]]) against the composed
-  * bin-join formulation ([[graft.ext.RangeJoin.pointInIntervalComposed]]) — same
+  * bin-join formulation ([[graft.ext.RangeJoinRefs.pointInIntervalComposed]]) — same
   * bin-replication semantics, exec-side sweep: equality is BIT-equality on
   * full result sets, across partition layouts and adversarial interval
   * geometries (dense bins, multi-bin spans, bin-boundary points, nulls).
@@ -29,7 +29,7 @@ class NativeRangeSpec extends SparkSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   test("native == composed on the q55 inputs, across partition layouts and widths") {
-    val expected = canon(graft.ext.RangeJoin.pointInIntervalComposed(
+    val expected = canon(graft.ext.RangeJoinRefs.pointInIntervalComposed(
         points, windows, "pday", "sday", "eday", binWidth = 16)
       .select("win_id", "o_orderkey", "pday"))
     assert(expected.nonEmpty)
@@ -56,7 +56,7 @@ class NativeRangeSpec extends SparkSuite {
       899L, 900L, 905L, 906L) ++ Seq(11L, 11L, 25L)) // duplicates
       .zipWithIndex.map { case (p, i) => (i.toLong, p) }.toDF("pid", "p")
     for (width <- Seq(1L, 3L, 16L, 1000L)) {
-      val expected = canon(graft.ext.RangeJoin.pointInIntervalComposed(
+      val expected = canon(graft.ext.RangeJoinRefs.pointInIntervalComposed(
         pts, intervals, "p", "s", "e", width).select("pid", "iid"))
       val got = canon(NativeRange.pointInInterval(
         pts, intervals, "p", "s", "e", width).select("pid", "iid"))
@@ -76,7 +76,7 @@ class NativeRangeSpec extends SparkSuite {
       (10L, Some(5L), Some(15L)),
       (11L, None, Some(25L)),
       (12L, Some(18L), None)).toDF("iid", "s", "e")
-    val expected = canon(graft.ext.RangeJoin.pointInIntervalComposed(
+    val expected = canon(graft.ext.RangeJoinRefs.pointInIntervalComposed(
       pts, ivs, "p", "s", "e", 8).select("pid", "iid"))
     val got = canon(NativeRange.pointInInterval(
       pts, ivs, "p", "s", "e", 8).select("pid", "iid"))
@@ -95,28 +95,32 @@ class NativeRangeSpec extends SparkSuite {
   }
 
   test("q55's production call routes through the native exec and stays bit-equal (r17)") {
-    // the dispatcher (RangeJoin.pointInInterval) must pick the native path
-    // for q55's re-read inputs — and its output must bit-match the composed
-    // form on the exact production call shape
-    val viaDispatch = graft.ext.RangeJoin.pointInInterval(
-      points, windows, "pday", "sday", "eday", binWidth = 16)
-    val plan = viaDispatch.queryExecution.executedPlan.toString
-    assert(plan.contains("RangeJoin"),
-      s"q55's dispatcher call must plan the native exec:\n$plan")
-    val expected = canon(graft.ext.RangeJoin.pointInIntervalComposed(
+    // the catalog query itself must plan the native sweep, and its output
+    // must bit-match the bin-join reference on the same inputs
+    val q55 = graft.QueryCatalog.queries("q55_range_join")(spark, dir)
+    val plan = q55.queryExecution.executedPlan.toString
+    assert(plan.contains("RangeJoin"), s"q55 must plan the native exec:\n$plan")
+    val expected = canon(graft.ext.RangeJoinRefs.pointInIntervalComposed(
         points, windows, "pday", "sday", "eday", binWidth = 16)
-      .select("win_id", "o_orderkey", "pday"))
-    assert(canon(viaDispatch.select("win_id", "o_orderkey", "pday")) === expected)
+      .select("win_id", "o_orderkey", "pdate"))
+    assert(expected.nonEmpty)
+    assert(canon(q55) === expected)
   }
 
-  test("dispatcher falls back to the composed form on shared lineage (r17)") {
+  test("inputs the native join cannot take fail up front with its clear error") {
+    val pts = Seq((1L, 10.0)).toDF("pid", "p")
+    val ivs = Seq((10L, 5L, 15L)).toDF("iid", "s", "e")
+    val typed = intercept[IllegalArgumentException] {
+      NativeRange.pointInInterval(pts, ivs, "p", "s", "e", 8)
+    }
+    assert(typed.getMessage.contains("must be integral"))
     val o = points
-    val shared = graft.ext.RangeJoin.pointInInterval(
-      o, o.withColumnRenamed("pday", "s2").withColumn("e2", col("s2") + 5),
-      "pday", "s2", "e2", 8)
-    assert(!shared.queryExecution.executedPlan.toString.contains("RangeJoinExec"),
-      "shared lineage must take the composed path")
-    assert(shared.count() > 0)
+    val shared = intercept[IllegalArgumentException] {
+      NativeRange.intervalOverlap(
+        o, o.withColumnRenamed("pday", "s2").withColumn("e2", col("s2") + 5),
+        "pday", "pday", "s2", "e2", 8)
+    }
+    assert(shared.getMessage.contains("lineage"))
   }
 
   test("interval OVERLAP via two native sweeps == composed overlap; pairs exactly once (r18)") {
@@ -136,12 +140,12 @@ class NativeRangeSpec extends SparkSuite {
           .otherwise(col(s"${pre}_e")))
     val l = side(1, "l"); val r = side(2, "r")
     for (width <- Seq(4L, 32L, 10000L)) {
-      val composed = canon(graft.ext.RangeJoin.intervalOverlapComposed(
+      val composed = canon(graft.ext.RangeJoinRefs.intervalOverlapComposed(
         l, r, "l_s", "l_e", "r_s", "r_e", width).select("l_id", "r_id"))
-      val native = graft.ext.RangeJoin.intervalOverlap(
+      val native = NativeRange.intervalOverlap(
         l, r, "l_s", "l_e", "r_s", "r_e", width)
       assert(native.queryExecution.executedPlan.toString.contains("RangeJoin"),
-        "the overlap dispatcher must take the native path on disjoint integral inputs")
+        "the overlap must plan the native sweeps")
       val got = canon(native.select("l_id", "r_id"))
       assert(got === composed, s"overlap parity broke at width=$width")
       // exactly-once: no pair may be emitted by BOTH sweeps

@@ -256,6 +256,18 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       s"the $key join must be a broadcast hash join:\n${df.queryExecution.executedPlan}"))
   }
 
+  test("q120's index build evaluates the coarse nearest_key once per corpus row") {
+    // the equi-join on cid infers isnotnull(cid); a nullable cid would push
+    // that filter into the build's nested loop as a second nearest-centroid
+    // search per row
+    val exec = QueryCatalog.queries("q120_ivfpq_topk")(spark, dir).queryExecution.executedPlan
+    val coarse = collect(exec) { case p => p }.flatMap(_.expressions.flatMap(_.collect {
+      case n: graft.functions.NearestKey if n.right.references.exists(_.name == "__cands") => n
+    }))
+    assert(coarse.size === 1,
+      s"coarse nearest_key evaluated ${coarse.size} times per corpus row:\n$exec")
+  }
+
   test("q122 residual IVF×PQ: broadcast-only tables, pruned seed branches, no shuffle join") {
     val p = plan(QueryCatalog.queries("q122_ivfpq_residual")(spark, dir))
     assert(!p.contains("CartesianProduct"),

@@ -808,7 +808,7 @@ class StreamingSpec extends SparkSuite {
           .select($"user_id", $"ts", $"event_id".as("click_id"),
             $"value".as("click_value"))
         val expect = graft.ext.AsOfJoin.asOf(purchases, clicks,
-            "user_id", "ts", "ts", Seq("click_id", "click_value"))
+            Seq("user_id"), "ts", "ts", Seq("click_id", "click_value"))
           .select($"event_id",
             coalesce($"asof_click_id", lit(-1L)).as("cid"),
             coalesce($"asof_click_value", lit(0.0)).as("cv"))
