@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   *  - Exact dedup is one hash groupBy on the (cheap, pre-computed) key —
   *    the canonical 100 TB dedup pass.
   *  - MinHash-LSH avoids the O(n²) pair explosion: signatures are computed
-  *    scan-side by a native expression (no UDF), candidates come from a
-  *    self-equi-join on (band, bucket) — shuffle keyed on the bucket hash,
-  *    so only colliding docs ever meet. Band count × rows bounds the explode
-  *    factor.
+  *    scan-side by a native expression (no UDF), candidates come from one
+  *    aggregate per (band, bucket) ([[bucketPairs]]) — shuffle keyed on the
+  *    bucket hash, so only colliding docs ever meet. Band count × rows
+  *    bounds the explode factor.
   *  - Exact Jaccard verifies candidates — native overlap counting on
   *    distinct token sets.
   */
@@ -75,13 +75,15 @@ object Dedup {
     *
     * Shaped for scale:
     *  1. candidate pairs are integer-only — token arrays are NOT carried
-    *     through the band join;
+    *     through the bucket aggregate;
     *  2. pairs are deduplicated BEFORE Jaccard, so a pair colliding in
     *     several bands is verified once, not `bands` times;
     *  3. degenerate buckets (> `maxBucketSize` docs — e.g. boilerplate
     *     shingles) are dropped, bounding any bucket's pair blow-up at
     *     maxBucketSize²/2; the standard LSH cap, trades bounded recall loss
     *     on pathological buckets for a hard cost ceiling.
+    *  4. the band table feeds one branch, the [[bucketPairs]] aggregate,
+    *     so the signature scan runs once and nothing is materialized.
     */
   def minhashNearDupsPortable(
       df: DataFrame, idCol: String, textCol: String,
@@ -90,31 +92,12 @@ object Dedup {
     val toksOf = df.select(
       col(idCol).as("id"),
       array_distinct(split(normalized(col(textCol)), " ")).as("toks"))
-    // checkpointed: the signature scan (the expensive part) feeds two
-    // separate plan branches — the oversized-bucket aggregate and the join
-    // probe side — which do NOT share an exchange (broadcast probe side
-    // never shuffles); without materialization the scan runs twice.
     val buckets = df
       .select(col(idCol).as("id"),
         graft.functions.PortableHashSig.portableMinhashSig(
           split(normalized(col(textCol)), " "), k).as("sig"))
-      .select(col("id"), explode(PortableHash.lshBands(col("sig"), k, bands)).as("bh"))
-      .barrier(eager = true)
-    // degenerate-bucket cap WITHOUT a window: bucket sizes come from a
-    // map-side-combined groupBy (tiny output: one row per oversized bucket
-    // — at most rows×bands/maxBucketSize of them), then a broadcast
-    // anti-join drops members. The window formulation shuffled AND sorted
-    // the whole exploded bucket table just to count per key.
-    val oversized = buckets.groupBy(col("bh")).agg(count(lit(1)).as("bsize"))
-      .filter(col("bsize") > maxBucketSize)
-      .select(col("bh"))
-    val capped = buckets.join(broadcast(oversized), Seq("bh"), "left_anti")
-    val pairs = capped.select(col("bh"), col("id").as("id_a"))
-      .join(capped.select(col("bh"), col("id").as("id_b")), Seq("bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    pairs
+      .select(explode(PortableHash.lshBands(col("sig"), k, bands)).as("bucket"), col("id"))
+    bucketPairs(buckets, maxBucketSize)
       .join(toksOf.select(col("id").as("id_a"), col("toks").as("toks_a")), Seq("id_a"))
       .join(toksOf.select(col("id").as("id_b"), col("toks").as("toks_b")), Seq("id_b"))
       // fence (r19): single merge per candidate — see repStructure
@@ -122,6 +105,35 @@ object Dedup {
         jaccard(col("toks_a"), col("toks_b"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
+
+  /** LSH candidate pairs from ONE aggregate per non-null bucket, no
+    * self-join: (bucket, id) rows → distinct (id_a, id_b), id_a < id_b.
+    * The aggregate counts each bucket's rows (null and repeated ids too)
+    * and keeps its `maxBucketSize + 1` smallest long ids
+    * ([[graft.functions.BottomKPairs]]); a bucket of fewer than 2 or more
+    * than `maxBucketSize` rows yields no pair. */
+  private[graft] def bucketPairs(buckets: DataFrame, maxBucketSize: Int): DataFrame =
+    membersToPairs(buckets.filter(col("bucket").isNotNull).groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n"), graft.functions.BottomKPairs.bottomkPairs(
+        col("id"), col("id"), maxBucketSize + 1).as("members"))
+      .filter(col("n").between(2, maxBucketSize)), Seq("id"))
+
+  /** Uncapped [[bucketPairs]] carrying a payload: (bucket, id, payload) →
+    * distinct (id_a, id_b, payload_a, payload_b), from each bucket's
+    * sorted (id, payload) members. */
+  private[graft] def bucketPayloadPairs(buckets: DataFrame): DataFrame =
+    membersToPairs(buckets.filter(col("bucket").isNotNull).groupBy(col("bucket"))
+      .agg(array_sort(collect_list(struct(col("id"), col("payload")))).as("members")),
+      Seq("id", "payload"))
+
+  /** Each id-sorted member against the ones after it; `id_a < id_b` also
+    * drops repeated and null ids. */
+  private def membersToPairs(grouped: DataFrame, fields: Seq[String]): DataFrame =
+    grouped.select(posexplode(col("members")).as(Seq("i", "a")), col("members"))
+      .select(col("a"), explode(slice(col("members"), col("i") + 2, size(col("members")))).as("b"))
+      .filter(col("a.id") < col("b.id"))
+      .select(fields.flatMap(f => Seq(col(s"a.$f").as(s"${f}_a"), col(s"b.$f").as(s"${f}_b"))): _*)
+      .distinct()
 
   /** HYBRID text + embedding dedup clustering: near-dup edges from BOTH
     * modalities — exact token-set Jaccard ≥ `textThreshold` (PPJoin

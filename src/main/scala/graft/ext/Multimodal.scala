@@ -378,22 +378,17 @@ object Multimodal {
     * SimHash pigeonhole — any pair within hamming ≤ 3 shares at least
     * one intact band, so the blocking is LOSSLESS for `maxHamming` ≤ 3;
     * beyond that it's the recall dial), verify by exact
-    * `bit_count(xor)`. One band-keyed self-join — candidate volume is
-    * per-bucket bounded, never all-pairs, the [[Dedup]] LSH shape for
-    * fixed-width fingerprints. Output (id_a, id_b, hamming), id_a <
-    * id_b. */
+    * `bit_count(xor)`. One aggregate per (band, key) bucket, no self-join
+    * ([[Dedup.bucketPayloadPairs]]) — the [[Dedup]] LSH shape for
+    * fixed-width fingerprints. Output (id_a, id_b, hamming), id_a < id_b. */
   def hashNearDupPairs(hashes: DataFrame, maxHamming: Int): DataFrame = {
-    val bands = hashes.select(col("media_id"), col("hash"),
+    val bands = hashes.select(col("media_id").as("id"), col("hash").as("payload"),
       explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-        shiftrightunsigned(col("hash"), b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))): _*)).as("bk"))
-      .select(col("media_id"), col("hash"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val a = bands.select(col("band"), col("key"), col("media_id").as("id_a"), col("hash").as("h_a"))
-    val b = bands.select(col("band"), col("key"), col("media_id").as("id_b"), col("hash").as("h_b"))
-    a.join(b, Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
+        shiftrightunsigned(col("hash"), b * 16).bitwiseAND(lit(0xFFFFL)).as("key"))): _*))
+        .as("bucket"))
+    Dedup.bucketPayloadPairs(bands)
       .select(col("id_a"), col("id_b"),
-        bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long").as("hamming"))
-      .distinct()
+        bit_count(col("payload_a").bitwiseXOR(col("payload_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 

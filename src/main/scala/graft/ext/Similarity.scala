@@ -220,9 +220,10 @@ object Similarity {
     * corpus; a pair is a candidate if it collides in ANY table (recall ≈
     * 1-(1-pᵖˡᵃⁿᵉˢ)ᵗᵃᵇˡᵉˢ, p = 1-θ/π); exact cosine verifies against
     * `threshold`. Same scale shape as the MinHash near-dup: integer-only
-    * candidate pairs through the bucket joins, pair-distinct BEFORE the
-    * (cluster-level) vector attach + verify, oversized buckets capped.
-    * Output (id_a, id_b, cosine), id_a < id_b.
+    * candidate pairs from one capped aggregate per (table, signature)
+    * bucket ([[Dedup.bucketPairs]], no self-join), pair-distinct BEFORE
+    * the vector attach + verify, oversized buckets dropped. `id` is a
+    * long. Output (id_a, id_b, cosine), id_a < id_b.
     */
   def cosineNearDupPairs(
       corpus: DataFrame, threshold: Double,
@@ -236,19 +237,9 @@ object Similarity {
         graft.functions.PortableHashSig.portableHyperplaneSig(
           col("vec"), nPlanes, planeOffset = t * nPlanes)
       else hyperplaneSig(col("vec"), nPlanes, planeOffset = t * nPlanes)
-    val sigs = corpus.select(
-      col("id") +: (0 until nTables).map(t => sig(t).as(s"sig$t")): _*)
-    val buckets = sigs.select(col("id"), explode(array((0 until nTables).map(t =>
-      struct(lit(t).as("table"), col(s"sig$t").as("bucket"))): _*)).as("bh"))
-    val oversized = buckets.groupBy(col("bh")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > maxBucketSize).select(col("bh"))
-    val capped = buckets.join(broadcast(oversized), Seq("bh"), "left_anti")
-    val pairs = capped.select(col("bh"), col("id").as("id_a"))
-      .join(capped.select(col("bh"), col("id").as("id_b")), Seq("bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    pairs
+    val buckets = corpus.select(col("id"), explode(array((0 until nTables).map(t =>
+      struct(lit(t).as("table"), sig(t).as("sig"))): _*)).as("bucket"))
+    Dedup.bucketPairs(buckets, maxBucketSize)
       .join(corpus.select(col("id").as("id_a"), col("vec").as("vec_a")), Seq("id_a"))
       .join(corpus.select(col("id").as("id_b"), col("vec").as("vec_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"), cosine(col("vec_a"), col("vec_b")).as("cosine"))

@@ -277,7 +277,7 @@ object MedallionQuery {
   /** AUDIO NEAR-DUP ([[graft.ext.Multimodal.audioNearDupPairs]]): the
     * q147 construction on the audio modality — 64-bit envelope
     * fingerprints over the REAL javax.sound WAV decode, same band-
-    * blocked hamming join. Planted re-ingests (every 30th audio row
+    * blocked hamming pairs. Planted re-ingests (every 30th audio row
     * duplicated) must surface at hamming 0. Rows-only (DuckDB decodes
     * no WAV); MultimodalSpec covers the fingerprint + blocking. */
   val q148AudioNearDup: Q = Q(

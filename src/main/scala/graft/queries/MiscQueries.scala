@@ -4,7 +4,7 @@ import graft.plans.ScaleLint.BarrierSyntax
 
 import graft.{Q, QueryDsl}
 import QueryDsl._
-import graft.ext.PortableHash
+import graft.ext.{Dedup, PortableHash}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -73,20 +73,16 @@ object MiscQueries {
       val fp = corpus.select(col("doc_id").as("id"),
         graft.functions.PortableHashSig.portableSimhashBands(
           split(lower(trim(col("text"))), " ")).as("fp"))
-      val banded = fp.select(col("id"), col("fp"),
+      val banded = fp.select(col("id"), col("fp").as("payload"),
         explode(array((0 until 4).map(b =>
           struct(lit(b).as("band"),
-            get(col("fp"), lit(b)).as("key"))): _*)).as("bh"))
-      val a = banded.select(col("bh"), col("id").as("id_a"), col("fp").as("fp_a"))
-      val b = banded.select(col("bh"), col("id").as("id_b"), col("fp").as("fp_b"))
-      a.join(b, Seq("bh"))
-        .filter(col("id_a") < col("id_b"))
+            get(col("fp"), lit(b)).as("key"))): _*)).as("bucket"))
+      Dedup.bucketPayloadPairs(banded)
         .select(col("id_a"), col("id_b"),
           aggregate(
-            zip_with(col("fp_a"), col("fp_b"),
+            zip_with(col("payload_a"), col("payload_b"),
               (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
             lit(0L), (acc, c) => acc + c).as("hamming"))
-        .distinct()
         .filter(col("hamming") <= 3)
     },
     Some("""

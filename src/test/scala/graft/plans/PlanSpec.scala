@@ -676,4 +676,23 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     }
     assert(docWindows.nonEmpty, "expected the (doc_id, pos) LEAD window")
   }
+
+  test("q31/q39/q57/q147 LSH pairs: one aggregate per bucket, no bucket-keyed self-join") {
+    // the band self-join forms keyed their join on `bh` (q31, q39, q57) or
+    // (band, key) (q147); the one-aggregate form groups on `bucket`
+    val bucketCols = Set("bucket", "bh", "band", "key")
+    Seq("q31_minhash_neardup", "q39_simhash_neardup", "q57_embed_neardup",
+        "q147_image_neardup").foreach { q =>
+      val opt = QueryCatalog.queries(q)(spark, dir).queryExecution.optimizedPlan
+      val bucketJoins = opt.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join
+            if j.condition.exists(_.references.exists(a => bucketCols(a.name))) => j
+      }
+      assert(bucketJoins.isEmpty, s"$q joins on its bucket key:\n${bucketJoins.mkString}")
+      if (q == "q31_minhash_neardup") {
+        val rdds = opt.collect { case r: LogicalRDD => r }
+        assert(rdds.isEmpty, s"q31 materializes its band table:\n$opt")
+      }
+    }
+  }
 }
