@@ -37,7 +37,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = driverSession()
+    val spark = driverSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    spark.sparkContext.setLogLevel("WARN")
     // optional arg: comma-separated substring filters for targeted timing
     // (dev tool; the driver invokes with no args = full catalog)
     val qs = args.headOption match {
@@ -128,31 +129,48 @@ object Bench {
     System.out.flush()
   }
 
-  /** The session Bench and [[Verify]] run in: ONE configuration for the
-    * oracle dump and this timer, so the plans that are timed are the plans
-    * that were checked. Shuffled hash join is allowed wherever its size conditions
-    * hold (`preferSortMergeJoin=false`, adopted in r19 after a controlled
-    * full-catalog A/B; see OPTIMIZATION_r19.md §7). SHJ is chosen only when
-    * a build side fits per-task memory (canBuildLocalHashMapBySize), so
-    * this does not license unbounded builds at 100 TB; SMJ remains the
-    * fallback. Every planned query passes through the warn-only scale lint
-    * ([[graft.plans.GraftLintListener]]); error findings land in the log
-    * and their count is surfaced as `lint_errors`. */
-  private[graft] def driverSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+  /** The one definition of the library's session: [[Bench]], [[Verify]]
+    * and the tier-1 suites (`SparkSuite`) all build it here, so the plans
+    * the tests check, the oracle dump checks and this timer times come from
+    * one configuration. Its only parameter is the core count; the log level
+    * is the caller's (it changes no plan). Each setting and why:
+    *  - `local[cores]` with one shuffle partition per core: a local run
+    *    sized to the cores it is given.
+    *  - AQE on, and shuffled hash join allowed wherever its size conditions
+    *    hold (`preferSortMergeJoin=false`, adopted in r19 after a controlled
+    *    full-catalog A/B; see OPTIMIZATION_r19.md §7). SHJ is chosen only
+    *    when a build side fits per-task memory (canBuildLocalHashMapBySize),
+    *    so this does not license unbounded builds at 100 TB; SMJ remains
+    *    the fallback.
+    *  - UTC session time zone and µs-typed parquet timestamps (not INT96),
+    *    so the oracle's arrow schema (timestamp[us]) and values match ours
+    *    bit-for-bit.
+    *  - `streaming.checkpoint.fileChecksum.enabled=false`: Spark 4.1's
+    *    ChecksumCheckpointFileManager deadlocks awaiting its checksum
+    *    future inside flatMapGroupsWithState state-store commits; plain
+    *    checkpoint files restore the documented behavior.
+    *  - `legacy.parquet.nanosAsLong=true`: nanosecond INT64 parquet
+    *    timestamps read as raw longs instead of failing the read
+    *    ([PARQUET_TYPE_ILLEGAL]); [[Tables.events]] floors them to µs and
+    *    fails under a session without this setting.
+    *  - a fresh temp `spark.sql.warehouse.dir`, so no run leaves a
+    *    `spark-warehouse/` in its working directory; the UI off.
+    *  - every executed query passes through the warn-only scale lint
+    *    ([[graft.plans.GraftLintListener]]); error findings land in the log
+    *    and their count is surfaced as `lint_errors`. */
+  private[graft] def driverSession(cores: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      // µs-typed parquet timestamps (not INT96) so the oracle's arrow schema
-      // (timestamp[us]) matches ours bit-for-bit
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.queryExecutionListeners", "graft.plans.GraftLintListener")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

@@ -42,22 +42,30 @@ object Tables {
   }
 
   /** `events.ts` has shipped in THREE parquet spellings across testdata
-    * regenerations: nanosecond-precision INT64 (which Spark rejects
-    * outright — [PARQUET_TYPE_ILLEGAL] — unless read as raw longs),
-    * microsecond TIMESTAMP with timezone, and microsecond TIMESTAMP_NTZ.
+    * regenerations: nanosecond-precision INT64 (the `perfbench/gen.py`
+    * output; Spark rejects it outright — [PARQUET_TYPE_ILLEGAL] — unless
+    * read as raw longs), microsecond TIMESTAMP with timezone, and
+    * microsecond TIMESTAMP_NTZ (the fixtures).
+    * The read runs under the caller's session settings and writes none:
+    * [[Bench.driverSession]] sets `spark.sql.legacy.parquet.nanosAsLong`,
+    * and under a session without it this fails with a message naming the
+    * setting rather than changing how the session reads later files.
     * Dispatch on the surfaced type instead of assuming a layout:
     *  - LongType (TIMESTAMP_NS under `nanosAsLong`): floor-divide to µs —
     *    the same truncation DuckDB applies casting TIMESTAMP_NS →
     *    TIMESTAMP, so oracle comparisons line up exactly;
-    *  - TimestampNTZType: cast to session-TZ TimestampType. Every session
-    *    this library builds pins `spark.sql.session.timeZone=UTC`, so the
-    *    cast is micros-identical to DuckDB's naive-TIMESTAMP read of the
-    *    same file — and downstream `unix_micros`/interval arithmetic
+    *  - TimestampNTZType: cast to session-TZ TimestampType.
+    *    [[Bench.driverSession]] pins `spark.sql.session.timeZone=UTC`, so
+    *    the cast is micros-identical to DuckDB's naive-TIMESTAMP read of
+    *    the same file — and downstream `unix_micros`/interval arithmetic
     *    (which reject NTZ) type-check;
     *  - TimestampType: pass through untouched.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    require(spark.conf.get(nanosAsLong).toBoolean,
+      s"Tables.events reads $dir/events.parquet only under $nanosAsLong=true " +
+        "(its ts may be nanosecond INT64); build the session with Bench.driverSession")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val ts = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -10,7 +10,9 @@ object Verify {
       case Array(s, o, f) => (s, o, Some(f.split(",").map(_.trim).toSet))
       case _ => sys.error("usage: Verify <sfDir> <outDir> [q1,q2,...]")
     }
-    val spark = Bench.driverSession() // the plans Bench times
+    // the session, and so the plans, Bench times
+    val spark = Bench.driverSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -10,21 +10,10 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
+  /** The library's one session definition on 4 cores, so tier-1 checks the
+    * plans Bench and Verify run; tests log at ERROR. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Spark 4.1's ChecksumCheckpointFileManager deadlocks awaiting its
-      // checksum future inside flatMapGroupsWithState state-store commits
-      // (local[4]); plain checkpoint files restore the documented behavior
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Bench.driverSession(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -220,6 +220,7 @@ class DedupSpec extends SparkSuite {
     val skewTruth = Dedup.prefixJaccardPairs(skewed, "doc_id", "text", 0.1,
         saltMinPostings = 0)
       .as[(Long, Long, Double)].collect().toSet
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val uniform = Dedup.prefixJaccardPairs(docs, "doc_id", "text", 0.8)
@@ -233,7 +234,7 @@ class DedupSpec extends SparkSuite {
         "AQE-off salted branch must be lossless on a skewed corpus")
       assert(hot.queryExecution.executedPlan.toString.contains("__ta#"),
         "AQE-off + skew must still engage the tiled branch")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("dedupComponents == connected components over the expanded pair list") {

@@ -200,47 +200,44 @@ class ScaleLintSpec extends SparkSuite {
   }
 
   test("the lint listener counts error findings on EXECUTED final plans (the lint_errors tripwire)") {
-    // Bench/Verify register GraftLintListener via
-    // spark.sql.queryExecutionListeners and surface ScaleLint.errorCount
-    // in their artifacts. The listener lints the FINAL optimized plan — a
+    // Bench.driverSession registers GraftLintListener via
+    // spark.sql.queryExecutionListeners, and Bench/Verify surface
+    // ScaleLint.errorCount in their artifacts. This suite's session is that
+    // one, so the count below is its listener's. The listener lints the FINAL optimized plan — a
     // lint run as an optimizer rule would see the plan mid-rewrite and
     // false-positive on shapes a later batch bounds (q197's rn<=k filter
     // gets its GlobalLimit pushed under the global window only after the
     // user-rule batch ran), so the tripwire lives here.
     val events = Tables.load(spark, dir, "events")
-    val listener = new GraftLintListener
-    spark.listenerManager.register(listener)
-    try {
-      def drain(): Unit =
-        org.apache.spark.graft.CleanerBridge.waitListenerBusEmpty(spark.sparkContext)
-      drain()
-      val before = ScaleLint.errorCount.get()
-      // consume the window's OUTPUT (a bare count() would let the
-      // optimizer prune the window away entirely — and the listener,
-      // correctly, lints only what actually ran)
-      events.withColumn("rn",
-        row_number().over(Window.orderBy($"ts", $"event_id")))
-        .agg(sum($"rn")).head()
-      drain()
-      assert(ScaleLint.errorCount.get() === before + 1,
-        "a deliberately-bad executed query must raise the error count")
-      events.groupBy($"event_type").agg(count(lit(1)).as("n")).count()
-      drain()
-      assert(ScaleLint.errorCount.get() === before + 1,
-        "clean plans must not raise the count")
-      // the q197 shape that false-positives mid-rewrite: the
-      // rn<=k filter's limit is pushed under the global window in the
-      // FINAL plan, so the listener must stay quiet on it
-      val P = 1000003L
-      val h = pmod(pmod($"doc_id", lit(P)) * lit(2654435761L), lit(P))
-      Tables.load(spark, dir, "documents")
-        .select($"doc_id", h.as("h"))
-        .withColumn("rn", row_number().over(Window.orderBy($"h", $"doc_id")))
-        .filter($"rn" <= 16).collect()
-      drain()
-      assert(ScaleLint.errorCount.get() === before + 1,
-        "the limit-pushed rank-filter idiom must not trip the tripwire")
-    } finally spark.listenerManager.unregister(listener)
+    def drain(): Unit =
+      org.apache.spark.graft.CleanerBridge.waitListenerBusEmpty(spark.sparkContext)
+    drain()
+    val before = ScaleLint.errorCount.get()
+    // consume the window's OUTPUT (a bare count() would let the
+    // optimizer prune the window away entirely — and the listener,
+    // correctly, lints only what actually ran)
+    events.withColumn("rn",
+      row_number().over(Window.orderBy($"ts", $"event_id")))
+      .agg(sum($"rn")).head()
+    drain()
+    assert(ScaleLint.errorCount.get() === before + 1,
+      "a deliberately-bad executed query must raise the error count")
+    events.groupBy($"event_type").agg(count(lit(1)).as("n")).count()
+    drain()
+    assert(ScaleLint.errorCount.get() === before + 1,
+      "clean plans must not raise the count")
+    // the q197 shape that false-positives mid-rewrite: the
+    // rn<=k filter's limit is pushed under the global window in the
+    // FINAL plan, so the listener must stay quiet on it
+    val P = 1000003L
+    val h = pmod(pmod($"doc_id", lit(P)) * lit(2654435761L), lit(P))
+    Tables.load(spark, dir, "documents")
+      .select($"doc_id", h.as("h"))
+      .withColumn("rn", row_number().over(Window.orderBy($"h", $"doc_id")))
+      .filter($"rn" <= 16).collect()
+    drain()
+    assert(ScaleLint.errorCount.get() === before + 1,
+      "the limit-pushed rank-filter idiom must not trip the tripwire")
   }
 
   // ---- physical-plan lint (r17 rule 1; r18 rules 2-4) ----
